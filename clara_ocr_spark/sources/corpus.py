@@ -159,11 +159,6 @@ PAGES_SCHEMA = pa.schema(
 )
 
 
-def generate_pages(n: int, seed: int = 42) -> pa.Table:
-    rows = [gen_page(i, seed) for i in range(n)]
-    return pa.Table.from_pylist(rows, schema=PAGES_SCHEMA)
-
-
 SHARD_DOCS = 256  # ≈ one WARC segment; yields many input splits
 
 

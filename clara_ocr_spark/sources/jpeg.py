@@ -447,28 +447,6 @@ class _BitReader:
         return (self.window >> self.nbits) & ((1 << n) - 1)
 
 
-def _read_huffman(reader: _BitReader, table) -> int:
-    sym, lens = table
-    if reader.nbits < 16:
-        reader._refill(16)
-    length = lens[(reader.window >> (reader.nbits - 16)) & 0xFFFF]
-    if length == 0:
-        raise ValueError("invalid JPEG Huffman code")
-    v = sym[(reader.window >> (reader.nbits - 16)) & 0xFFFF]
-    reader.nbits -= length
-    reader.consumed += length
-    if reader.consumed > reader.total_bits:
-        raise ValueError("truncated JPEG entropy stream")
-    return v
-
-
-def _extend(bits: int, size: int) -> int:
-    """T.81 §F.2.2.1 EXTEND: offset bits → signed value."""
-    if size == 0:
-        return 0
-    return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
-
-
 def _decode_plane_scan(
     reader: _BitReader,
     n_blocks: int,

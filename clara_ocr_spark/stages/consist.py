@@ -122,7 +122,14 @@ def assert_observed(obs) -> None:
 
 def partition_lineage(df: DataFrame, run_id: str, stage: str) -> DataFrame:
     """Per-partition row counts for a stage (skew visibility: a hot
-    host shows up as one fat partition here before it hurts)."""
+    host shows up as one fat partition here before it hurts).
+
+    The rows follow ``df``'s physical partitioning.  For a cached
+    output that is the partitioning AQE coalesced it to (the jobs set
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``), so
+    after a write of the same cached frame there is one row per
+    written partition (per non-empty ``part-*`` file), not one per
+    ``spark.sql.shuffle.partitions``."""
     return (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count(F.lit(1)).alias("n_rows"))

@@ -147,21 +147,6 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def with_fingerprint(blocks: DataFrame, n: int = 2) -> DataFrame:
-    """Tag-path n-gram fingerprint (≈ skeleton, skel.c:765+) — pure
-    JVM array expressions, no Python."""
-    parts = F.split(F.col("tag_path"), "/")
-    ngrams = F.when(
-        F.size(parts) < n, F.array(F.array_join(parts, "/"))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(parts) - n),
-            lambda i: F.array_join(F.slice(parts, i + 1, n), "/"),
-        )
-    )
-    return blocks.withColumn("fingerprint", ngrams)
-
-
 def zones_from_geometry(blocks: list, depth_tol: int = 1) -> list:
     """Optional geometric zoning (the ``blockfind`` dominant-column
     selection, pgmblock.c:1108-1271: cluster detected structures by

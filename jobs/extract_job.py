@@ -55,6 +55,15 @@ def build_session() -> SparkSession:
         SparkSession.builder.appName("clara-extract")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final exchange of a cached plan too (off
+        # by default): the persisted extraction output below would
+        # otherwise keep spark.sql.shuffle.partitions partitions, and
+        # its cache build, output write and lineage pass each run that
+        # many near-empty tasks
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true",
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
@@ -559,7 +568,10 @@ def main(argv: list[str] | None = None) -> None:
         # lineage/deskew/WET-export re-read `extracted`; cache it through the
         # write so those passes read the materialized increment
         # instead of re-running the parse (the same single-execution
-        # discipline as the observe() gate)
+        # discipline as the observe() gate).  The cached plan keeps
+        # AQE's coalesced partitioning (see build_session), so the
+        # write produces one file per coalesced partition and the
+        # lineage rows below are exactly the written partitions
         extracted = extracted.persist()
     if args.output_format == "parquet":
         append_increment(extracted, args.output)  # writes _SUCCESS marker

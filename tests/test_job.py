@@ -94,6 +94,19 @@ def test_extract_job_mixed(tmp_path):
     want = {r["url"]: r["text"] for r in rows}
     assert got == want
 
+    # the persisted output follows AQE's coalescing (the cached plan
+    # may change its output partitioning): one lineage row per written
+    # data file, the rows add up to the input, and the file count is
+    # below the un-coalesced spark.sql.shuffle.partitions (200)
+    import glob as _glob
+
+    n_files = len(_glob.glob(f"{out}/part-*.parquet"))
+    lineage = duckdb.sql(
+        f"select count(*), sum(n_rows) from '{tmp_path}/metrics/*.parquet'"
+    ).fetchone()
+    assert lineage == (n_files, len(rows))
+    assert n_files < 200
+
     # --skew-report rode the same run: per-(url, page) rows for the
     # PDF leg only, level corpus reads ~0
     skew = duckdb.sql(
@@ -118,7 +131,6 @@ def test_extract_job_mixed(tmp_path):
     # directly and the `head`/`outlinks` fields must be objects, not
     # double-encoded strings (review finding: .json() over the 3-col
     # frame used to escape the record into a string field)
-    import glob as _glob
     import json as _json
 
     wat_lines = []
