@@ -171,7 +171,7 @@ BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 # Scaling evidence needs a long-enough job that per-job fixed overhead
 # (~1 s of scheduling/stage setup) is noise at the high core count.
 SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "100000"))
-# PDF layout leg: heavier per-doc work (geometry windows), fewer docs.
+# PDF layout leg: heavier per-doc work (parse + page geometry), fewer docs.
 PDF_BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_PDF_BENCH_DOCS", "20000"))
 # Native-codec media decode leg (PNG/JPEG/WAV/AVI mix, r4).
 MEDIA_BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_MEDIA_BENCH_DOCS", "16000"))

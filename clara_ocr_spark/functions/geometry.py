@@ -31,9 +31,8 @@ def page_skew_angles(runs: DataFrame) -> DataFrame:
     motive as the reference's voted direction histogram). A perfectly
     level page reads 0.0; rotated input reads its rotation.
 
-    Scale shape: one window over the (url, page) partitioning the
-    layout stage already shuffles on, one aggregate on the same keys —
-    zero additional Exchanges when fused into ``extract_pdf``'s plan.
+    Scale shape: one window over a (url, page) partitioning and one
+    aggregate on the same keys — ONE Exchange over the runs.
     """
     w = Window.partitionBy("url", "page").orderBy(
         F.desc("y"), "x", "x_end", "text"

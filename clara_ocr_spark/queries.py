@@ -3126,11 +3126,11 @@ def two_pass_match(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# Geometric layout primitives (stages/layout.py, the PDF leg of the
-# north rule) — the same window algebra the pipeline uses, expressed
-# over a deterministic geometry derived from events so DuckDB can
-# oracle-check it: page = user_id%20, x folded into two x-clusters
-# with a 450-x_end-river between them, y on a 14pt grid.
+# Geometric layout primitives (the PDF leg of the north rule, whose
+# per-page geometry the pipeline runs in sources/pdfparse.py) as window
+# algebra, expressed over a deterministic geometry derived from events
+# so DuckDB can oracle-check it: page = user_id%20, x folded into two
+# x-clusters with a 450-x_end-river between them, y on a 14pt grid.
 # ---------------------------------------------------------------------
 
 #: shared synthetic-geometry derivation (Spark side)
@@ -3185,7 +3185,7 @@ _GEOM_SQL = """
 )
 def layout_lines(spark, sf_dir):
     """Line grouping by vertical sessionization (w_pair,
-    build.c:702-797; stages/layout.group_lines): lag + gap flag +
+    build.c:702-797; sources/pdfparse.group_lines): lag + gap flag +
     count of line starts per page."""
     runs = _geom_runs(spark, sf_dir)
     w = Window.partitionBy("page").orderBy(F.desc("y"), "x", "x_end", "event_id")
@@ -3230,7 +3230,7 @@ def layout_lines(spark, sf_dir):
 )
 def layout_columns(spark, sf_dir):
     """Column-split detection (blockfind/vlines2, pgmblock.c:801-942;
-    stages/layout.assign_zones): widest white river ≥ 48 with ≥ 2 runs
+    sources/pdfparse.column_split): widest white river ≥ 48 with ≥ 2 runs
     per side; -1 when the page is single-column."""
     runs = _geom_runs(spark, sf_dir)
     w_page = Window.partitionBy("page")
@@ -3289,7 +3289,7 @@ def layout_columns(spark, sf_dir):
 )
 def layout_line_text(spark, sf_dir):
     """Word joining inside a line (s_pair + the no-space kerning rule,
-    symbol.c:956-1030; stages/layout.join_words): gap ≤ 1.0 → kerning
+    symbol.c:956-1030; sources/pdfparse.join_words): gap ≤ 1.0 → kerning
     split joined bare, else a single space — ordered string assembly
     per (page, line)."""
     runs = _geom_runs(spark, sf_dir).filter(F.col("page") < 5)

@@ -700,6 +700,37 @@ def join_words(line: List[Run]) -> str:
     return "".join(parts)
 
 
+def page_lines(
+    page_runs: List[Run], splitter: str = "river"
+) -> List[Tuple[int, float, str]]:
+    """One page's non-empty lines as ``(zone, line_y, text)``: the
+    same column split, line grouping and word joining as
+    ``pdf_reference_extract``, with the cross-page ordering left to
+    the caller (``stages/layout.assemble_layout``).  ``line_y`` is the
+    line's highest run y; it strictly decreases down a zone (lines are
+    separated by more than LINE_TOL), so (zone, −line_y) reproduces
+    the oracle's line order."""
+    if splitter == "tall":
+        split = column_split_tall(page_runs)
+        page_runs = [r for r in page_runs if not is_tall_separator(r)]
+    else:
+        split = column_split(page_runs)
+    if split is None:
+        zones = [page_runs]
+    else:
+        zones = [
+            [r for r in page_runs if r.x < split],
+            [r for r in page_runs if r.x >= split],
+        ]
+    out: List[Tuple[int, float, str]] = []
+    for zone, zr in enumerate(zones):
+        for line in group_lines(zr):
+            text = join_words(line)
+            if text:
+                out.append((zone, line[0].y, text))
+    return out
+
+
 def pdf_reference_extract(raw: Optional[bytes], splitter: str = "river") -> str:
     """PDF bytes → reading-order text (single-node oracle).
 

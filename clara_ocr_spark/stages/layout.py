@@ -4,36 +4,35 @@ The PDF leg of the north rule ("HTML boilerplate strip, PDF/layout
 parse, DOM heuristics").  Where the DOM path gets reading order from
 tree order, this stage RECONSTRUCTS it from glyph-run geometry — which
 is exactly the reference's own problem, so the mapping is direct
-rather than analogical:
+rather than analogical.  The per-page geometry runs in the parse
+stage, in ``sources/pdfparse``:
 
 * column split ≈ ``blockfind``/``vlines2`` white-river detection
-  (pgmblock.c:801-942, 1108-1271) — prefix-max/gap window + per-page
-  argmax window;
+  (pgmblock.c:801-942, 1108-1271) — ``column_split``, or the
+  ``cf_block`` tall-separator analogue ``column_split_tall``;
 * line grouping ≈ ``w_pair`` vertical-intersection pairing
-  (build.c:702-797) — lag + cumulative-sum sessionization;
+  (build.c:702-797) — ``group_lines``;
 * word joining ≈ ``s_pair`` horizontal-distance test + the
   no-space-before-punctuation output rule (symbol.c:956-1030,
-  html.c:2069-2083) — lag over the in-line window;
+  html.c:2069-2083) — ``join_words``;
 * reading order ≈ ``cmpln`` as a strict total order (build.c:389-509)
-  — ``array_sort`` on (page, zone, −y, text).
+  — ``array_sort`` on (page, zone, −y, text), in the JVM.
 
-Everything after the parse is JVM column expressions.  Shuffle budget:
-ONE Exchange on (url, page) serves all three window passes AND the
-line aggregate (their partition keys are supersets, so Spark reuses
-the partitioning; only local sorts change), plus ONE Exchange for the
-final per-url assembly — payload past the parse is just run text +
-five doubles.  Byte-identity contract: output equals
+Same shape as the HTML leg: ONE Python stage splits each document into
+lines (a page's runs never leave the worker), then ONE Exchange on url
+carries only line text + (page, zone, y) to the reading-order
+aggregate.  Byte-identity contract: output equals
 ``sources/pdfparse.pdf_reference_extract`` per url; both sides compare
 the same IEEE754 doubles rounded once at the parse boundary.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, List
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -42,16 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.pdfparse import (
-    COL_GAP,
-    KERN_TOL,
-    LINE_TOL,
-    MIN_SIDE_RUNS,
-    NOSPACE_BEFORE,
-    TALL_SEP_GLYPHS,
-    TALL_SEP_SIZE,
-    parse_pdf_runs,
-)
+from ..sources.pdfparse import Run, page_lines, parse_pdf_runs
 
 RUNS_SCHEMA = StructType(
     [
@@ -65,179 +55,72 @@ RUNS_SCHEMA = StructType(
     ]
 )
 
-#: Sentinel run per document (page = -1): keeps run-less urls alive to
-#: the final aggregate without a rejoin (same design as segment.py).
+LINES_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("page", IntegerType(), False),
+        StructField("zone", IntegerType(), False),
+        StructField("line_y", DoubleType(), False),
+        StructField("line_text", StringType(), False),
+    ]
+)
+
+#: Sentinel row per document (page = -1, empty text): keeps line-less
+#: urls alive to the final aggregate without a rejoin (same design as
+#: segment.py).
 SENTINEL_PAGE = -1
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
         for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
             rows.append((url, SENTINEL_PAGE, 0.0, 0.0, 0.0, 0.0, ""))
             for r in parse_pdf_runs(raw):
                 rows.append((url, r.page, r.x, r.x_end, r.y, r.size, r.text))
-        yield pd.DataFrame(rows, columns=[f.name for f in RUNS_SCHEMA.fields])
+        yield pd.DataFrame(rows, columns=RUNS_SCHEMA.fieldNames())
 
 
 def parse_runs(pages: DataFrame) -> DataFrame:
-    """pages(url, html, …) → positioned runs (the only Python stage).
-
-    Column-prunes to (url, html) before the Arrow boundary; the binary
-    payload never survives past the parse."""
+    """pages(url, html, …) → positioned runs, one row per run plus a
+    per-url sentinel.  The text path does not use it; it feeds the
+    run-level geometry (``functions.geometry.page_skew_angles``)."""
     return pages.select("url", "html").mapInPandas(
-        _parse_batches, schema=RUNS_SCHEMA
+        _run_batches, schema=RUNS_SCHEMA
     )
 
 
-def assign_zones(runs: DataFrame) -> DataFrame:
-    """Column-split detection (vlines2 analogue), pure window algebra.
-
-    A run is a split candidate when the white gap between its left
-    edge and the widest prefix extent is ≥ COL_GAP with ≥
-    MIN_SIDE_RUNS runs on each side; the widest such river wins (tie →
-    smallest x).  zone 0 = left of the split, zone 1 = right."""
-    w_page = Window.partitionBy("url", "page")
-    w1 = w_page.orderBy("x", "x_end", "text", "y")
-    prefix_end = F.max("x_end").over(
-        w1.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rn = F.row_number().over(w1)
-    cnt = F.count(F.lit(1)).over(
-        w_page.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
+def doc_lines(url: str, runs: List[Run], splitter: str = "river") -> list:
+    """One document's runs → its ``LINES_SCHEMA`` rows: the sentinel,
+    then ``pdfparse.page_lines`` for every page."""
+    pages: dict = {}
+    for r in runs:
+        pages.setdefault(r.page, []).append(r)
+    rows = [(url, SENTINEL_PAGE, 0, 0.0, "")]
+    for page, prs in pages.items():
+        rows.extend(
+            (url, page, zone, y, text)
+            for zone, y, text in page_lines(prs, splitter)
         )
-    )
-    gap = F.col("x") - prefix_end
-    candidate = (
-        (gap >= F.lit(COL_GAP))
-        & (rn - 1 >= F.lit(MIN_SIDE_RUNS))
-        & (cnt - rn + 1 >= F.lit(MIN_SIDE_RUNS))
-    )
-    # per-page argmax of (gap, -x): max-of-struct over the full page
-    best = F.max(
-        F.when(candidate, F.struct(gap.alias("g"), (-F.col("x")).alias("nx")))
-    ).over(
-        w_page.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    split = (-best["nx"]).alias("split_x")
-    return runs.withColumn(
-        "zone",
-        F.when(best.isNotNull() & (F.col("x") >= split), F.lit(1)).otherwise(
-            F.lit(0)
-        ),
-    )
+    return rows
 
 
-def _is_tall_sep() -> F.Column:
-    """JVM twin of pdfparse.is_tall_separator: every glyph a
-    vertical-bar character, font ≥ TALL_SEP_SIZE."""
-    glyphs = "".join(sorted(TALL_SEP_GLYPHS))
-    return (
-        (F.col("size") >= F.lit(TALL_SEP_SIZE))
-        & (F.length("text") > 0)
-        & F.col("text").rlike(f"^[{glyphs}]+$")
-    )
+def parse_lines(pages: DataFrame, splitter: str = "river") -> DataFrame:
+    """pages(url, html, …) → lines(url, page, zone, line_y, line_text),
+    the only Python stage of the text path.  Column-prunes to (url,
+    html) before the Arrow boundary; the binary payload and the runs
+    never leave it."""
 
+    def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
+                rows.extend(doc_lines(url, parse_pdf_runs(raw), splitter))
+            yield pd.DataFrame(rows, columns=LINES_SCHEMA.fieldNames())
 
-def assign_zones_tall(runs: DataFrame) -> DataFrame:
-    """cf_block-analogue splitter (symbol.c:4892-4965): split each
-    page at the leftmost tall separator glyph run that has ≥
-    MIN_SIDE_RUNS non-separator runs strictly on each side; separator
-    runs are dropped from the output (the reference discards rule
-    symbols).
-
-    Scale shape: one (url, page) aggregate collects the page's body
-    xs (bounded by runs-per-page, same bound as the per-line collect
-    in join_words) and the few separator xs; candidate validation is
-    a higher-order filter over those arrays; the split re-attaches by
-    an equi-join on the SAME (url, page) keys, so the partitioning
-    from the parse exchange is reused."""
-    sep = _is_tall_sep()
-    stats = runs.groupBy("url", "page").agg(
-        F.sort_array(
-            F.collect_list(F.when(~sep, F.col("x")))
-        ).alias("_bx"),
-        F.array_sort(
-            F.collect_set(F.when(sep, F.col("x")))
-        ).alias("_sxs"),
+    return pages.select("url", "html").mapInPandas(
+        _parse_batches, schema=LINES_SCHEMA
     )
-    n_lt = lambda sx: F.size(  # noqa: E731
-        F.filter(F.col("_bx"), lambda b: b < sx)
-    )
-    n_gt = lambda sx: F.size(  # noqa: E731
-        F.filter(F.col("_bx"), lambda b: b > sx)
-    )
-    valid = F.filter(
-        F.col("_sxs"),
-        lambda sx: (n_lt(sx) >= MIN_SIDE_RUNS) & (n_gt(sx) >= MIN_SIDE_RUNS),
-    )
-    split = stats.select(
-        "url", "page", F.array_min(valid).alias("split_x")
-    )
-    return (
-        runs.filter(~sep)
-        .join(split, ["url", "page"], "left")
-        .withColumn(
-            "zone",
-            F.when(
-                F.col("split_x").isNotNull()
-                & (F.col("x") >= F.col("split_x")),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("split_x")
-    )
-
-
-def group_lines(zoned: DataFrame) -> DataFrame:
-    """Vertical sessionization into lines (w_pair analogue): new line
-    when the downward step exceeds LINE_TOL; transitive chaining via
-    cumulative sum, identical to the single-node oracle."""
-    w2 = Window.partitionBy("url", "page", "zone").orderBy(
-        F.desc("y"), "x", "x_end", "text"
-    )
-    prev_y = F.lag("y").over(w2)
-    new_line = F.when(
-        prev_y.isNull() | (prev_y - F.col("y") > F.lit(LINE_TOL)), 1
-    ).otherwise(0)
-    return zoned.withColumn(
-        "line_id",
-        F.sum(new_line).over(w2.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-
-
-def join_words(lined: DataFrame) -> DataFrame:
-    """Per-line word joining (s_pair + output-rule analogue): space
-    unless the gap is a kerning split (≤ KERN_TOL) or the run starts
-    with attaching punctuation."""
-    w3 = Window.partitionBy("url", "page", "zone", "line_id").orderBy(
-        "x", "x_end", "text"
-    )
-    prev_end = F.lag("x_end").over(w3)
-    no_space = (
-        prev_end.isNull()
-        | (F.col("x") - prev_end <= F.lit(KERN_TOL))
-        | F.substring("text", 1, 1).isin(*sorted(NOSPACE_BEFORE))
-    )
-    piece = F.concat(F.when(no_space, F.lit("")).otherwise(F.lit(" ")), "text")
-    lines = (
-        lined.withColumn("piece", piece)
-        .groupBy("url", "page", "zone", "line_id")
-        .agg(
-            F.max("y").alias("line_y"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("x", "x_end", "text", "piece"))
-                    ),
-                    lambda s: s["piece"],
-                ),
-                "",
-            ).alias("line_text"),
-        )
-    )
-    return lines
 
 
 def assemble_layout(lines: DataFrame) -> DataFrame:
@@ -274,16 +157,11 @@ def extract_pdf(
     ``skew_report``: optional out-param (a list) — when given, a
     per-(url, page) text-flow skew estimate DataFrame
     (``functions.geometry.page_skew_angles``, the ``ro``/deskew
-    geometry riding the extraction) is appended to it.  The parsed
-    runs are localCheckpointed so the Python PDF parse — the expensive
-    stage — executes once across the extraction write and the skew
-    write; the skew aggregation itself keys on the same (url, page)
-    the layout windows already shuffle on (VERDICT r3 item 9)."""
-    runs = parse_runs(pages)
+    geometry) is appended to it.  The estimate needs runs, which the
+    text path never builds, so writing it parses the PDF slice a
+    second time; only callers that ask for the report pay that."""
     if skew_report is not None:
         from ..functions.geometry import page_skew_angles
 
-        runs = runs.localCheckpoint(eager=False)
-        skew_report.append(page_skew_angles(runs))
-    zoned = assign_zones_tall(runs) if splitter == "tall" else assign_zones(runs)
-    return assemble_layout(join_words(group_lines(zoned)))
+        skew_report.append(page_skew_angles(parse_runs(pages)))
+    return assemble_layout(parse_lines(pages, splitter))

@@ -173,8 +173,9 @@ def main(argv: list[str] | None = None) -> None:
         help="append a per-(url, page) text-flow skew estimate table "
         "(skew_deg, n_votes — the ro/deskew geometry, "
         "functions/geometry.page_skew_angles) computed from the PDF "
-        "leg's parsed runs to PATH; the parse executes once for both "
-        "the extraction and the report (requires --mixed)",
+        "leg's parsed runs to PATH; the report parses the PDF slice "
+        "a second time, the extraction never builds runs "
+        "(requires --mixed)",
     )
     ap.add_argument(
         "--links",
@@ -625,9 +626,8 @@ def main(argv: list[str] | None = None) -> None:
             "append"
         ).text(args.revisit_out)
     if skew_frames:
-        # the PDF runs were localCheckpointed inside extract_pdf and
-        # materialized by the extraction write above — this write
-        # reuses them, no second parse
+        # the text path never builds runs, so this write parses the
+        # PDF slice a second time (only when --skew-report is set)
         skew_frames[0].write.mode("append").parquet(args.skew_report)
     # --links/--head-meta/--wat share the two Arrow-batched HTML
     # harvests: build each DataFrame once and lazily localCheckpoint

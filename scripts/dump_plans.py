@@ -91,10 +91,10 @@ def main() -> None:
     add(
         "PDF layout leg (extract_pdf)",
         extract_pdf(pdfs),
-        "TWO Exchanges: (url, page) feeds every window pass and the line\n"
-        "aggregate (supersets reuse the partitioning — only local sorts\n"
-        "between), then the url assembly; the binary payload never\n"
-        "leaves the MapInPandas parse.",
+        "ONE Exchange, on url, carrying lines: the MapInPandas parse runs\n"
+        "the per-page geometry (column split, line grouping, word joining)\n"
+        "and emits lines; no Window. The binary payload and the runs never\n"
+        "leave the Python stage.",
     )
     add(
         "ivf_topk (ANN scale path)",

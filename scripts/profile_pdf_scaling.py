@@ -4,7 +4,7 @@
 
 Runs each prefix of the extract_pdf plan at a given core count in a
 fresh JVM (child mode), min-of-N, and reports per-stage seconds plus
-the post-shuffle partition counts the windows actually ran on, so an
+the partition count the final stage actually ran on, so an
 AQE-coalescing starvation (few partitions << cores) is directly
 visible rather than inferred.
 
@@ -29,36 +29,23 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-STAGES = ["parse", "zones", "lines", "words", "full"]
+STAGES = ["parse", "full"]
 
 
 def build(stage: str, pages):
-    from clara_ocr_spark.stages.layout import (
-        assemble_layout,
-        assign_zones,
-        group_lines,
-        join_words,
-        parse_runs,
-    )
+    """``parse``: the Python stage alone (parse + per-page geometry,
+    lines out); ``full``: that plus the url-keyed reading-order
+    assembly."""
+    from clara_ocr_spark.stages.layout import extract_pdf, parse_lines
 
-    df = parse_runs(pages)
     if stage == "parse":
-        return df
-    df = assign_zones(df)
-    if stage == "zones":
-        return df
-    df = group_lines(df)
-    if stage == "lines":
-        return df
-    df = join_words(df)
-    if stage == "words":
-        return df
+        return parse_lines(pages)
     if stage != "full":
         # fail fast: a typoed stage name must not silently time the
         # full pipeline under a wrong label and skew the marginal
         # attribution table (review finding r5)
         raise ValueError(f"unknown stage: {stage!r}")
-    return assemble_layout(df)
+    return extract_pdf(pages)
 
 
 def child(cores: int, stage: str, docs: int, runs: int,

@@ -374,15 +374,15 @@ def _oracle_from_runs(runs: list) -> str:
 
 
 def test_layout_random_geometry_identity(spark):
-    """200 documents of arbitrary random geometry through the Spark
-    window algebra vs the single-node oracle — covers shapes the PDF
-    generator never emits (overlaps, tolerance-boundary ties, huge
-    gaps that trigger/just-miss column splits)."""
+    """200 documents of arbitrary random geometry through the
+    production line function and the Spark reading-order assembly vs
+    the single-node oracle — covers shapes the PDF generator never
+    emits (overlaps, tolerance-boundary ties, huge gaps that
+    trigger/just-miss column splits, lines split across zones)."""
     from clara_ocr_spark.stages.layout import (
+        LINES_SCHEMA,
         assemble_layout,
-        assign_zones,
-        group_lines as spark_lines,
-        join_words as spark_words,
+        doc_lines,
     )
 
     docs = {}
@@ -392,14 +392,9 @@ def test_layout_random_geometry_identity(spark):
         runs = _random_runs(rng)
         url = f"doc{d}"
         docs[url] = _oracle_from_runs(runs)
-        rows.extend((url, r.page, r.x, r.x_end, r.y, r.size, r.text) for r in runs)
-    df = spark.createDataFrame(
-        rows, "url string, page int, x double, x_end double, y double, size double, text string"
-    )
-    got = {
-        r["url"]: r["text"]
-        for r in assemble_layout(spark_words(spark_lines(assign_zones(df)))).collect()
-    }
+        rows.extend(doc_lines(url, runs))
+    df = spark.createDataFrame(rows, LINES_SCHEMA)
+    got = {r["url"]: r["text"] for r in assemble_layout(df).collect()}
     assert got == docs
 
 
@@ -449,7 +444,7 @@ class TestTallSplitter:
         assert pdf_reference_extract(raw) == "la ra\nlb rb\n|"
 
     def test_spark_tall_byte_identity(self, spark):
-        """Spark assign_zones_tall ≡ single-node tall oracle over tall
+        """Spark tall-splitter leg ≡ single-node tall oracle over tall
         docs, generator docs (no bars → no split), and empty payloads."""
         import datetime
 
@@ -621,11 +616,11 @@ def test_streaming_incremental_mixed(spark, tmp_path, pdf_rows):
     assert spark.read.parquet(out).count() == len(want)
 
 
-def test_layout_plan_two_exchanges(spark, pdf_rows):
-    """Scale pin: the whole geometric assembly costs exactly TWO
-    shuffles — (url, page) for every window pass + the line aggregate
-    (supersets reuse the partitioning), then url for final assembly —
-    and the binary payload is pruned before the first Exchange."""
+def test_layout_plan_one_exchange(spark, pdf_rows):
+    """Scale pin: the whole geometric assembly costs exactly ONE
+    shuffle (url, carrying lines) behind ONE Python boundary that
+    emits lines, no window pass, and the binary payload is pruned
+    before the boundary."""
     from clara_ocr_spark.stages.layout import extract_pdf
 
     plan = (
@@ -634,10 +629,14 @@ def test_layout_plan_two_exchanges(spark, pdf_rows):
         .executedPlan()
         .toString()
     )
-    assert plan.count("Exchange") == 2
-    assert "html" not in plan.split("Exchange", 1)[0].split("MapInPandas")[0]
-    # one Python boundary only
+    assert plan.count("Exchange") == 1
     assert plan.count("MapInPandas") == 1
+    assert "MapInPandas _parse_batches(" in plan
+    assert "Window" not in plan
+    above, below = plan.split("MapInPandas", 1)
+    # only (url, html) cross into Python, and html does not come back
+    assert "warc_ts" not in below and "lang" not in below
+    assert "html" not in above
 
 
 class TestPageSkewAngles:
