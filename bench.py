@@ -392,12 +392,12 @@ def main() -> None:
     # preproc-family job variants (VERDICT r2 item 6): the hqbin
     # residual second pass and the deskew diagnostic profile, timed on
     # the same corpus with the headline min-of-2 discipline
-    from clara_ocr_spark.pipeline import extract, extract_hqbin, read_pages
+    from clara_ocr_spark.pipeline import extract, read_pages
     from clara_ocr_spark.stages.calibrate import deskew_profile
 
     pages = read_pages(spark, path)
     for name, df in (
-        ("extraction_hqbin", extract_hqbin(pages)),
+        ("extraction_hqbin", extract(pages, hqbin=True)),
         ("extraction_deskew", deskew_profile(extract(pages))),
     ):
         _force(df)  # warm-up

@@ -1,25 +1,24 @@
 """Job configuration — the ``checkvar name=value`` CLI surface
-(clara.c:1855-1990) and tunables (-P thresholds clara.c:1749, magic
-alignment numbers build.c:62-79) as one explicit dataclass.
+(clara.c:1855-1990) for the rule-chain thresholds (-P thresholds
+clara.c:1749, magic alignment numbers build.c:62-79) as one explicit
+dataclass.
 
 Defaults reproduce the byte-identity reference semantics exactly;
-the sweep harness (plans/sweep.py) explores the grid.
+``pipeline.extract(cfg=…)`` reads them and the sweep harness
+(plans/sweep.py) explores the grid.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
+
+from .extract_rules import LINK_DENSITY_MAX, MIN_TEXT_LEN
 
 
 @dataclass(frozen=True)
 class ExtractConfig:
-    link_density_max: float = 0.5  # ≈ avoid_geo cutoff
-    min_text_len: int = 10  # ≈ sdim size gate (clara.c:1557)
-    strong_match: int = 8  # ≈ strong_match[classifier]
-    weak_match: int = 4  # ≈ weak_match[classifier]
-    max_doubts: int = 1000  # ≈ max_doubts (common.h:875)
-    n_salts: int = 16  # skew-mitigation fan-out
-    classifier: str = "skel"  # engine dispatch ≈ selbc (clara.c:3074-3088)
+    link_density_max: float = LINK_DENSITY_MAX  # ≈ avoid_geo cutoff
+    min_text_len: int = MIN_TEXT_LEN  # ≈ sdim size gate (clara.c:1557)
 
     @classmethod
     def from_args(cls, pairs: list[str]) -> "ExtractConfig":
@@ -30,10 +29,7 @@ class ExtractConfig:
             name, _, value = p.partition("=")
             if name not in types:
                 raise ValueError(f"unknown config var: {name}")
-            if types[name] == "str":
-                kw[name] = value
-            else:
-                kw[name] = (float if types[name] == "float" else int)(value)
+            kw[name] = (float if types[name] == "float" else int)(value)
         return cls(**kw)
 
 

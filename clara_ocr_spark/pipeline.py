@@ -1,177 +1,33 @@
 """End-to-end extraction pipeline (the Clara 15-step scheduler recast).
 
 ``continue_ocr``'s cooperative state machine (clara.c:3824-4187)
-becomes a lazy DataFrame plan: segment → classify → assemble, with
-optional parquet checkpoints between stage groups standing in for the
-session/acts/patterns files (cml.c:399-644).
+becomes ONE lazy DataFrame plan built by :func:`extract`:
+segment → classify → (acts → structural acts → spell → consistency
+gate) → assemble → (hqbin residual pass) → (PDF layout leg union).
+The extraction job, the streaming driver, the curation job, the bench
+and the tests all call this one builder.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from .stages.assemble import assemble
-from .stages.classify import classify
+from .config import DEFAULT, ExtractConfig
+from .stages.assemble import (
+    assemble,
+    assemble_encap,
+    assemble_full_html,
+    assemble_markup,
+)
+from .stages.classify import classify, heuristic_label, heuristic_score
 from .stages.segment import segment
 
-
-def extract(
-    pages: DataFrame,
-    patterns: DataFrame | None = None,
-    engine: str | None = None,
-    min_text_len: int | None = None,
-    link_density_max: float | None = None,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → extracted(url, text).
-
-    Every input url appears in the output (empty docs → ``text=''``)
-    via the segment stage's sentinel rows — one scan, one shuffle,
-    no rejoin against the pages table.
-
-    ``engine`` selects a scored comparison engine from
-    ``stages.engines`` (skel/map/pd/shape, ≈ selbc) for the pattern
-    match instead of the default exact-fingerprint equality; the
-    default (None) is the byte-identity reference semantics. Scored
-    engines need the enriched pattern table (``pattern_features``)."""
-    full = engine is not None  # scored engines read the feature columns
-    blocks = segment(pages, full_features=full)
-    if engine is not None and patterns is not None:
-        from .stages.engines import classify_scored
-
-        scored = classify_scored(blocks, patterns, engine=engine)
-        from .stages.classify import heuristic_label, heuristic_score
-
-        labeled = scored.withColumn("label", heuristic_label()).withColumn(
-            "score", heuristic_score()
-        )
-    else:
-        from .extract_rules import LINK_DENSITY_MAX, MIN_TEXT_LEN
-
-        labeled = classify(
-            blocks,
-            patterns,
-            min_text_len if min_text_len is not None else MIN_TEXT_LEN,
-            link_density_max
-            if link_density_max is not None
-            else LINK_DENSITY_MAX,
-        )
-    return assemble(labeled)
-
-
-def extract_hqbin(
-    pages: DataFrame,
-    patterns: DataFrame | None = None,
-    min_tokens: int = 5,
-    loose_min_text_len: int = 3,
-    loose_link_density_max: float = 0.75,
-) -> DataFrame:
-    """hqbin-style second-pass re-parse (reference preproc.c:672-721,
-    ``bin_method`` selector common.h:297-299; VERDICT r1 missing #4):
-    extract with the strict (byte-identity) strategy first; documents
-    whose extraction fails the quality gate (< ``min_tokens``
-    whitespace tokens) are re-parsed with the looser thresholds, and
-    the re-parse is kept only when it recovers STRICTLY more tokens.
-
-    Output: ``(url, text, hq_reparsed)``. Gate-passing documents are
-    untouched — their text is byte-identical to :func:`extract` by
-    construction (pinned by test). The residual pattern is the proven
-    PNT1→PNT2 two-pass shape: the second pass scans only the failing
-    slice (left-semi join), so its cost is proportional to the
-    residual, not the corpus."""
-    return hqbin_second_pass(
-        extract(pages, patterns),
-        pages,
-        patterns,
-        min_tokens,
-        loose_min_text_len,
-        loose_link_density_max,
-    )
-
-
-def hqbin_second_pass(
-    extracted: DataFrame,
-    pages: DataFrame,
-    patterns: DataFrame | None = None,
-    min_tokens: int = 5,
-    loose_min_text_len: int = 3,
-    loose_link_density_max: float = 0.75,
-) -> DataFrame:
-    """The hqbin residual pass given an existing first-pass extraction
-    (so a job can keep its own first-pass plan — acts, observations —
-    and only bolt the re-parse on top). See :func:`extract_hqbin`."""
-    import pyspark.sql.functions as F
-
-    def ntok(c):
-        return F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
-            F.size(F.split(F.trim(c), r"\s+"))
-        )
-
-    first = extracted.select("url", "text").withColumn(
-        "_n1", ntok(F.col("text"))
-    )
-    passing = first.filter(F.col("_n1") >= min_tokens).select(
-        "url", "text", F.lit(False).alias("hq_reparsed")
-    )
-    failing = first.filter(F.col("_n1") < min_tokens)
-    retry_pages = pages.join(failing.select("url"), "url", "left_semi")
-    second = extract(
-        retry_pages,
-        patterns,
-        min_text_len=loose_min_text_len,
-        link_density_max=loose_link_density_max,
-    ).select("url", F.col("text").alias("_t2"))
-    second = second.withColumn("_n2", ntok(F.col("_t2")))
-    better = F.coalesce(F.col("_n2") > F.col("_n1"), F.lit(False))
-    resolved = failing.join(second, "url", "left").select(
-        "url",
-        F.when(better, F.col("_t2")).otherwise(F.col("text")).alias("text"),
-        better.alias("hq_reparsed"),
-    )
-    return passing.unionByName(resolved)
-
-
-def extract_markup(
-    pages: DataFrame, patterns: DataFrame | None = None
-) -> DataFrame:
-    """Marked-up output variant (OE_FULL_HTML's <I>/<B> spans,
-    html.c:1966-1973): ``(url, text)`` with inline <i>/<b> wrappers at
-    the emphasis spans the parser recorded (wprops word-flag analogue,
-    build.c:585-685). Byte-identical to
-    ``extract_rules.reference_extract_markup`` per url, and to plain
-    :func:`extract` on emphasis-free documents."""
-    from .stages.assemble import assemble_markup
-
-    return assemble_markup(
-        classify(segment(pages, full_features=False, with_emph=True), patterns)
-    )
-
-
-def extract_full_html(
-    pages: DataFrame, patterns: DataFrame | None = None
-) -> DataFrame:
-    """Full-document HTML output variant (reference OE_FULL_HTML,
-    html.c:1966-1973): ``(url, html)`` — a complete entity-escaped
-    HTML document per url with the kept/total block-count stats
-    comment (the "Symbols: n/m" page-header analogue,
-    clara.c:3361-3381)."""
-    from .stages.assemble import assemble_full_html
-
-    return assemble_full_html(classify(segment(pages), patterns))
-
-
-def extract_encap(
-    pages: DataFrame, patterns: DataFrame | None = None
-) -> DataFrame:
-    """Encapsulated output variant (reference OE_ENCAP_HTML / DJVU
-    with coordinates, html.c:1966-1973): ``(url, text, blocks)`` where
-    ``text`` is byte-identical to :func:`extract` and ``blocks`` gives
-    every block's label/score and character span inside ``text``
-    (start = end = -1 for excluded blocks) — the machine-readable
-    format the doubts-revision UI consumes."""
-    from .stages.assemble import assemble_encap
-
-    return assemble_encap(classify(segment(pages), patterns))
-
+#: hqbin quality gate (reference preproc.c:672-721): first-pass
+#: documents with fewer whitespace tokens are re-parsed
+HQ_MIN_TOKENS = 5
+#: the loose strategy the hqbin residual pass re-extracts with (the
+#: ``bin_method`` selector analogue, common.h:297-299)
+HQ_LOOSE = ExtractConfig(min_text_len=3, link_density_max=0.75)
 
 #: PDF magic (first five payload bytes) — JVM-side routing predicate.
 PDF_MAGIC = b"%PDF-"
@@ -188,27 +44,136 @@ def _is_pdf_col():
     )
 
 
-def extract_mixed(
+def extract(
     pages: DataFrame,
     patterns: DataFrame | None = None,
+    *,
     engine: str | None = None,
+    fmt: str = "text",
+    cfg: ExtractConfig = DEFAULT,
+    acts: DataFrame | None = None,
+    struct_acts: DataFrame | None = None,
+    spell_min_count: int | None = None,
+    hqbin: bool = False,
+    mixed: bool = False,
+    splitter: str = "river",
+    gate: Observation | None = None,
 ) -> DataFrame:
-    """Mixed-content extraction: PDF payloads (detected JVM-side by the
-    ``%PDF-`` magic in the binary column) go through the geometric
-    layout path (``stages/layout``), everything else through the DOM
-    path.  Both legs end in the same ``extracted(url, text)`` schema,
-    unioned into one plan.
+    """pages(url, warc_ts, html, text, lang) → extracted(url, text).
 
-    The routing filter is a pushable column predicate, so each leg
-    scans only its slice; at warehouse scale the capture table would
-    additionally partition by content_type so the filter becomes
-    partition pruning rather than a scan-time predicate (SCALE.md)."""
-    from .stages.layout import extract_pdf
+    Every input url appears in the output (empty docs → ``text=''``)
+    via the segment stage's sentinel rows — one scan, one shuffle,
+    no rejoin against the pages table. With every option at its
+    default the output is byte-identical to the reference extractor.
 
-    is_pdf = _is_pdf_col()
-    dom = extract(pages.filter(~is_pdf), patterns, engine)
-    pdf = extract_pdf(pages.filter(is_pdf))
-    return dom.unionByName(pdf)
+    * ``engine`` — a scored comparison engine from ``stages.engines``
+      (skel/map/pd/shape, ≈ selbc) for the pattern match instead of
+      exact-fingerprint equality; needs the enriched pattern table
+      (``pattern_features``) and is ignored without ``patterns``.
+    * ``fmt`` — output variant (html.c:1966-1973 analogues):
+      ``text``; ``markup`` (inline <i>/<b> at parser emphasis spans);
+      ``encap`` (text + per-block label/score/char-span column);
+      ``full_html`` (a complete entity-escaped document in ``html``).
+    * ``cfg`` — the rule-chain thresholds (``--set`` overrides).
+    * ``acts`` / ``struct_acts`` — revision acts applied to the
+      labeled blocks (``stages.feedback``).
+    * ``spell_min_count`` — when set, dictionary spelling correction
+      against the corpus vocabulary of at least that count.
+    * ``hqbin`` — second-pass re-parse: documents with fewer than
+      :data:`HQ_MIN_TOKENS` tokens are re-extracted over the failing
+      slice only with :data:`HQ_LOOSE`, kept when strictly better;
+      adds ``hq_reparsed``.
+    * ``mixed`` — ``%PDF-`` payloads go through the geometric layout
+      leg (``stages.layout``, column ``splitter`` river or tall), the
+      rest through the DOM leg, unioned into one plan.
+    * ``gate`` — an Observation that receives the step_6 consistency
+      sums, attached to the labeled blocks just before assembly;
+      check it with ``consist.assert_observed`` after the action."""
+    dom = pages.filter(~_is_pdf_col()) if mixed else pages
+    # only the scored engines read the punct/stopword/word statistics
+    scored = engine is not None and patterns is not None
+    blocks = segment(dom, full_features=scored, with_emph=fmt == "markup")
+    if scored:
+        from .stages.engines import classify_scored
+
+        thresholds = (cfg.min_text_len, cfg.link_density_max)
+        blocks = (
+            classify_scored(blocks, patterns, engine)
+            .withColumn("label", heuristic_label(*thresholds))
+            .withColumn("score", heuristic_score(*thresholds))
+        )
+    else:
+        blocks = classify(
+            blocks, patterns, cfg.min_text_len, cfg.link_density_max
+        )
+    if acts is not None:
+        from .stages.feedback import apply_feedback
+
+        blocks = apply_feedback(blocks, acts)
+    if struct_acts is not None:
+        from .stages.feedback import apply_structural_acts
+
+        blocks = apply_structural_acts(blocks, struct_acts)
+    if spell_min_count is not None:
+        from .stages.spell import correct_spelling
+
+        blocks = correct_spelling(blocks, spell_min_count)
+    if gate is not None:
+        from .stages.consist import observe_consistency
+
+        blocks, _ = observe_consistency(blocks, gate)
+    out = {
+        "text": assemble,
+        "markup": assemble_markup,
+        "encap": assemble_encap,
+        "full_html": assemble_full_html,
+    }[fmt](blocks)
+    if hqbin:
+        out = _hqbin_residual(out, dom, patterns)
+    if mixed:
+        from .stages.layout import extract_pdf
+
+        out = out.unionByName(
+            extract_pdf(pages.filter(_is_pdf_col()), splitter)
+        )
+    return out
+
+
+def _hqbin_residual(
+    extracted: DataFrame, pages: DataFrame, patterns: DataFrame | None
+) -> DataFrame:
+    """The hqbin residual pass over a first-pass extraction (reference
+    preproc.c:672-721): gate-passing documents are untouched, so their
+    text stays byte-identical to the first pass; the failing slice is
+    re-extracted with :data:`HQ_LOOSE` (left-semi residual — the
+    second pass scans only that slice, so its cost is proportional to
+    the residual, not the corpus). Output ``(url, text, hq_reparsed)``."""
+    import pyspark.sql.functions as F
+
+    def ntok(c):
+        return F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
+            F.size(F.split(F.trim(c), r"\s+"))
+        )
+
+    first = extracted.select("url", "text").withColumn(
+        "_n1", ntok(F.col("text"))
+    )
+    passing = first.filter(F.col("_n1") >= HQ_MIN_TOKENS).select(
+        "url", "text", F.lit(False).alias("hq_reparsed")
+    )
+    failing = first.filter(F.col("_n1") < HQ_MIN_TOKENS)
+    retry_pages = pages.join(failing.select("url"), "url", "left_semi")
+    second = extract(retry_pages, patterns, cfg=HQ_LOOSE).select(
+        "url", F.col("text").alias("_t2")
+    )
+    second = second.withColumn("_n2", ntok(F.col("_t2")))
+    better = F.coalesce(F.col("_n2") > F.col("_n1"), F.lit(False))
+    resolved = failing.join(second, "url", "left").select(
+        "url",
+        F.when(better, F.col("_t2")).otherwise(F.col("text")).alias("text"),
+        better.alias("hq_reparsed"),
+    )
+    return passing.unionByName(resolved)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

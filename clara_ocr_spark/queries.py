@@ -3690,7 +3690,8 @@ def hqbin_residual(spark, sf_dir):
     re-parse-with-different-strategy analogue) would recover, and the
     still-failing residual. The PNT1→PNT2 residual shape over
     ``documents``; the real two-pass pipeline stage is
-    pipeline.extract_hqbin (byte-identity-tested on the page corpus).
+    ``pipeline.extract(…, hqbin=True)`` (byte-identity-tested on the
+    page corpus).
     Map-side expressions + one agg shuffle."""
     d = _t(spark, sf_dir, "documents")
     n_strict = F.size(_tokens(F.col("text")))

@@ -143,25 +143,10 @@ def assemble_layout(lines: DataFrame) -> DataFrame:
     )
 
 
-def extract_pdf(
-    pages: DataFrame,
-    splitter: str = "river",
-    skew_report: "list | None" = None,
-) -> DataFrame:
+def extract_pdf(pages: DataFrame, splitter: str = "river") -> DataFrame:
     """pages(url, …, html=PDF bytes) → extracted(url, text).
 
     ``splitter``: ``"river"`` (default, vlines2 white-gap analogue) or
     ``"tall"`` (cf_block tall-separator analogue) — the same dispatch
-    as ``pdf_reference_extract``.
-
-    ``skew_report``: optional out-param (a list) — when given, a
-    per-(url, page) text-flow skew estimate DataFrame
-    (``functions.geometry.page_skew_angles``, the ``ro``/deskew
-    geometry) is appended to it.  The estimate needs runs, which the
-    text path never builds, so writing it parses the PDF slice a
-    second time; only callers that ask for the report pay that."""
-    if skew_report is not None:
-        from ..functions.geometry import page_skew_angles
-
-        skew_report.append(page_skew_angles(parse_runs(pages)))
+    as ``pdf_reference_extract``."""
     return assemble_layout(parse_lines(pages, splitter))

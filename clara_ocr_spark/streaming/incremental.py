@@ -48,7 +48,8 @@ def run_incremental(
     micro-batches executed.  Safe to call repeatedly (idempotent for
     already-processed files — the daemon's 'runnable page' test).
     ``mixed=True`` routes %PDF- payloads through the layout leg per
-    micro-batch (same semantics as ``pipeline.extract_mixed``)."""
+    micro-batch (``pipeline.extract(…, mixed=True)``, the batch job's
+    own builder)."""
     stream = (
         spark.readStream.schema(PAGES_SPARK_SCHEMA)
         .option("maxFilesPerTrigger", 64)
@@ -59,13 +60,9 @@ def run_incremental(
     def process(batch: DataFrame, epoch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
-        if mixed:
-            from ..pipeline import extract_mixed
-
-            out = extract_mixed(batch, patterns)
-        else:
-            out = extract(batch, patterns)
-        out.write.mode("append").parquet(out_path)
+        extract(batch, patterns, mixed=mixed).write.mode("append").parquet(
+            out_path
+        )
 
     q = (
         stream.writeStream.foreachBatch(process)

@@ -156,7 +156,7 @@ def main(argv: list[str] | None = None) -> None:
     from jobs.extract_job import build_session
 
     from clara_ocr_spark.curate import CurateConfig, curate
-    from clara_ocr_spark.pipeline import extract, extract_mixed
+    from clara_ocr_spark.pipeline import extract
     from clara_ocr_spark.stages.consist import append_metrics, partition_lineage
 
     cfg = CurateConfig.from_args(args.overrides)
@@ -176,7 +176,7 @@ def main(argv: list[str] | None = None) -> None:
             "url", F.coalesce("text", F.lit("")).alias("text")
         )
     else:
-        extracted = (extract_mixed if args.mixed else extract)(pages)
+        extracted = extract(pages, mixed=args.mixed)
     if args.encoding_audit:
         from clara_ocr_spark.curate import encoding_damage_audit
 

@@ -22,9 +22,10 @@ Cluster usage (north_rule launch shape):
 Local smoke: spark-submit --master local[8] jobs/extract_job.py ...
 
 The job: (optionally) anti-join away already-extracted urls →
-segment → classify (+ pattern broadcast, + feedback overrides) →
-consistency gate → assemble → append output + per-partition lineage
-metrics.  Master/executors come from spark-submit, not from code.
+``pipeline.extract`` (segment → classify + pattern broadcast →
+feedback overrides → consistency gate → assemble) → append output +
+per-partition lineage metrics.  Master/executors come from
+spark-submit, not from code.
 """
 
 from __future__ import annotations
@@ -376,7 +377,15 @@ def main(argv: list[str] | None = None) -> None:
         "full crawl); the title tier joins the cumulative --head-meta "
         "table when that sink is also configured",
     )
-    ap.add_argument("--set", dest="overrides", action="append", default=[])
+    ap.add_argument(
+        "--set",
+        dest="overrides",
+        action="append",
+        default=[],
+        metavar="NAME=VALUE",
+        help="rule-chain threshold override (config.ExtractConfig: "
+        "min_text_len, link_density_max)",
+    )
     args = ap.parse_args(argv)
     if bool(args.sitemaps) != bool(args.sitemap_out):
         ap.error("--sitemaps and --sitemap-out go together")
@@ -424,31 +433,25 @@ def main(argv: list[str] | None = None) -> None:
         )
 
     from clara_ocr_spark.config import ExtractConfig
+
+    try:
+        cfg = ExtractConfig.from_args(args.overrides)
+    except ValueError as e:
+        ap.error(str(e))
+
+    from pyspark.sql import Observation
+
+    from clara_ocr_spark.pipeline import _is_pdf_col, extract
     from clara_ocr_spark.plans.checkpoint import (
         append_increment,
         incremental_delta,
     )
-    from clara_ocr_spark.stages.assemble import (
-        assemble,
-        assemble_encap,
-        assemble_full_html,
-        assemble_markup,
-    )
-    from clara_ocr_spark.stages.classify import classify
+    from clara_ocr_spark.sources.formats import read_pages_any, write_extracted
     from clara_ocr_spark.stages.consist import (
         append_metrics,
         assert_observed,
-        observe_consistency,
         partition_lineage,
     )
-    from clara_ocr_spark.stages.feedback import (
-        apply_feedback,
-        apply_structural_acts,
-    )
-    from clara_ocr_spark.stages.segment import segment
-
-    ExtractConfig.from_args(args.overrides)  # validate overrides early
-    from clara_ocr_spark.sources.formats import read_pages_any, write_extracted
 
     spark = build_session()
     if args.input_format == "warc":
@@ -490,81 +493,32 @@ def main(argv: list[str] | None = None) -> None:
         patterns = apply_pattern_acts(
             patterns, spark.read.parquet(args.patt_acts)
         )
-    dom_pages = pages
-    if args.mixed:
-        from clara_ocr_spark.pipeline import _is_pdf_col
-
-        dom_pages = pages.filter(~_is_pdf_col())
-    if args.engine and patterns is not None:
-        from clara_ocr_spark.stages.classify import heuristic_label, heuristic_score
-        from clara_ocr_spark.stages.engines import classify_scored
-
-        blocks = (
-            classify_scored(
-                segment(
-                    dom_pages,
-                    full_features=True,
-                    with_emph=args.format == "markup",
-                ),
-                patterns,
-                args.engine,
-            )
-            .withColumn("label", heuristic_label())
-            .withColumn("score", heuristic_score())
-        )
-    else:
-        blocks = classify(
-            segment(
-                dom_pages,
-                full_features=False,
-                with_emph=args.format == "markup",
-            ),
-            patterns,
-        )
-    if args.acts:
-        blocks = apply_feedback(blocks, spark.read.parquet(args.acts))
-    if args.struct_acts:
-        blocks = apply_structural_acts(
-            blocks, spark.read.parquet(args.struct_acts)
-        )
-    if args.spell:
-        from clara_ocr_spark.stages.spell import correct_spelling
-
-        blocks = correct_spelling(blocks, args.spell_min_count)
+    # the HTML harvests below (--links, --head-meta, …) read the DOM leg
+    dom_pages = pages.filter(~_is_pdf_col()) if args.mixed else pages
 
     # step_6 gate as a CollectMetrics observation: the violation sums
     # ride the output-write job itself, so the mapInPandas parse (the
     # dominant cost) executes ONCE per job instead of twice
-    blocks, consist_obs = observe_consistency(blocks)
-
-    assembler = {
-        "text": assemble,
-        "markup": assemble_markup,
-        "encap": assemble_encap,
-        "full_html": assemble_full_html,
-    }[args.format]
-    extracted = assembler(blocks)
+    consist_obs = Observation()
+    extracted = extract(
+        pages,
+        patterns,
+        engine=args.engine,
+        fmt=args.format,
+        cfg=cfg,
+        acts=spark.read.parquet(args.acts) if args.acts else None,
+        struct_acts=(
+            spark.read.parquet(args.struct_acts) if args.struct_acts else None
+        ),
+        spell_min_count=args.spell_min_count if args.spell else None,
+        hqbin=args.hqbin,
+        mixed=args.mixed,
+        splitter=args.pdf_splitter,
+        gate=consist_obs,
+    )
     if args.hqbin:
-        # residual second pass over THIS job's gate failures (keeps the
-        # first-pass plan — acts, consistency observation — intact);
         # output schema stays (url, text) so increments keep appending
-        from clara_ocr_spark.pipeline import hqbin_second_pass
-
-        extracted = hqbin_second_pass(extracted, dom_pages, patterns).select(
-            "url", "text"
-        )
-    skew_frames = [] if args.skew_report else None
-    if args.mixed:
-        from clara_ocr_spark.pipeline import _is_pdf_col
-        from clara_ocr_spark.stages.layout import extract_pdf
-
-        extracted = extracted.unionByName(
-            extract_pdf(
-                pages.filter(_is_pdf_col()),
-                args.pdf_splitter,
-                skew_report=skew_frames,
-            )
-        )
+        extracted = extracted.select("url", "text")
     if args.metrics or args.deskew or args.wet_out:
         # lineage/deskew/WET-export re-read `extracted`; cache it through the
         # write so those passes read the materialized increment
@@ -625,10 +579,15 @@ def main(argv: list[str] | None = None) -> None:
         to_warc_revisit_records(warc_dedup_classify(caps)).write.mode(
             "append"
         ).text(args.revisit_out)
-    if skew_frames:
+    if args.skew_report:
+        from clara_ocr_spark.functions.geometry import page_skew_angles
+        from clara_ocr_spark.stages.layout import parse_runs
+
         # the text path never builds runs, so this write parses the
         # PDF slice a second time (only when --skew-report is set)
-        skew_frames[0].write.mode("append").parquet(args.skew_report)
+        page_skew_angles(
+            parse_runs(pages.filter(_is_pdf_col()))
+        ).write.mode("append").parquet(args.skew_report)
     # --links/--head-meta/--wat share the two Arrow-batched HTML
     # harvests: build each DataFrame once and lazily localCheckpoint
     # it when two write actions will consume it, so the dominant

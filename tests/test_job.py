@@ -992,6 +992,78 @@ def test_extract_job_eval_arg_guards(tmp_path):
         assert msg in proc.stderr, (extra, proc.stderr[-500:])
 
 
+def test_extract_job_set_and_engine(spark, tmp_path):
+    """The job's composition is ``pipeline.extract``: ``--set`` reaches
+    the rule chain (an unreachable min_text_len empties every doc), an
+    unknown config var is a usage error before any Spark work, and
+    ``--patterns --engine`` yields exactly ``extract(pages, patterns,
+    engine=…)`` per url."""
+    import pyspark.sql.functions as F
+
+    from clara_ocr_spark.pipeline import extract
+    from clara_ocr_spark.sources.corpus import PAGES_SCHEMA, gen_page
+    from clara_ocr_spark.stages.classify import classify
+    from clara_ocr_spark.stages.engines import pattern_features
+    from clara_ocr_spark.stages.segment import segment
+
+    rows = [gen_page(i, seed=24) for i in range(12)]
+    inp = tmp_path / "pages.parquet"
+    pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_SCHEMA), str(inp))
+    pages = spark.read.parquet(str(inp))
+    # an enriched library that relabels every content fingerprint as
+    # noise, so the scored engine visibly steers the output
+    pattern_features(classify(segment(pages))).withColumn(
+        "label",
+        F.when(F.col("label") == "content", F.lit("noise")).otherwise(
+            F.col("label")
+        ),
+    ).write.parquet(str(tmp_path / "lib"))
+
+    def run(out, *extra):
+        return subprocess.run(
+            [
+                sys.executable,
+                os.path.join(ROOT, "jobs", "extract_job.py"),
+                "--input", str(inp),
+                "--output", str(tmp_path / out),
+                *extra,
+            ],
+            capture_output=True,
+            text=True,
+            env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
+            timeout=300,
+        )
+
+    def read(out):
+        return {
+            r.url: r.text
+            for r in spark.read.parquet(str(tmp_path / out)).collect()
+        }
+
+    proc = run("out_bad", "--set", "n_salts=3")
+    assert proc.returncode != 0
+    assert "unknown config var: n_salts" in proc.stderr
+
+    proc = run("out_set", "--set", "min_text_len=100000")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = read("out_set")
+    assert set(got) == {r["url"] for r in rows}
+    assert all(t == "" for t in got.values())
+
+    proc = run(
+        "out_eng", "--patterns", str(tmp_path / "lib"), "--engine", "skel"
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = read("out_eng")
+    lib = spark.read.parquet(str(tmp_path / "lib"))
+    want = {
+        r.url: r.text
+        for r in extract(pages, lib, engine="skel").collect()
+    }
+    assert got == want
+    assert any(got[r["url"]] != r["text"] for r in rows)
+
+
 def test_extract_job_revisit_out(tmp_path):
     """--revisit-out over a recrawl input: the second identical
     capture of a url becomes ONE WARC revisit pointer referencing the

@@ -533,7 +533,7 @@ def test_mixed_routing_byte_identity(spark, pdf_rows):
     """HTML and PDF payloads in ONE pages table, routed by magic;
     NULL payloads must survive to the output as empty pages (a NULL
     predicate would silently drop them from BOTH legs)."""
-    from clara_ocr_spark.pipeline import extract_mixed
+    from clara_ocr_spark.pipeline import extract
 
     html_rows = [gen_page(i) for i in range(40)]
     null_row = {
@@ -544,7 +544,7 @@ def test_mixed_routing_byte_identity(spark, pdf_rows):
         "lang": "en",
     }
     rows = html_rows + pdf_rows[:40] + [null_row]
-    got = {r["url"]: r["text"] for r in extract_mixed(_pages_df(spark, rows)).collect()}
+    got = {r["url"]: r["text"] for r in extract(_pages_df(spark, rows), mixed=True).collect()}
     assert set(got) == {r["url"] for r in rows}
     for row in rows:
         assert got[row["url"]] == row["text"], row["url"]
@@ -694,29 +694,23 @@ class TestPageSkewAngles:
 
 
 class TestExtractPdfSkewReport:
-    """VERDICT r3 item 9: the skew estimator folded into extract_pdf's
-    own surface (the benched/jobbed path), sharing the parsed runs."""
+    """VERDICT r3 item 9: the skew estimator over the PDF leg's parsed
+    runs — the expression the job's ``--skew-report`` sink writes."""
 
-    def test_skew_report_out_param(self, spark):
+    def test_skew_report_from_parsed_runs(self, spark):
         import pyarrow as pa
 
+        from clara_ocr_spark.functions.geometry import page_skew_angles
         from clara_ocr_spark.sources.corpus import PAGES_SCHEMA
-        from clara_ocr_spark.stages.layout import extract_pdf
+        from clara_ocr_spark.stages.layout import extract_pdf, parse_runs
 
         rows = [gen_pdf_page(i, seed=17) for i in range(15)]
         pages = spark.createDataFrame(
             pa.Table.from_pylist(rows, schema=PAGES_SCHEMA).to_pandas()
         )
-        report = []
-        got = {r["url"]: r["text"] for r in
-               extract_pdf(pages, skew_report=report).collect()}
-        # extraction text is unchanged by the report-out path
-        want = {r["url"]: r["text"] for r in
-                extract_pdf(pages).collect()}
-        assert got == want
-        (skew,) = report
-        rows_out = skew.collect()
-        assert rows_out and {r.url for r in rows_out} <= set(got)
+        got = {r["url"] for r in extract_pdf(pages).collect()}
+        rows_out = page_skew_angles(parse_runs(pages)).collect()
+        assert rows_out and {r.url for r in rows_out} <= got
         for r in rows_out:  # synthetic corpus is level
             if r.n_votes >= 3:
                 assert abs(r.skew_deg) < 1e-9

@@ -11,14 +11,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from clara_ocr_spark.pipeline import (
-    extract,
-    extract_encap,
-    extract_full_html,
-    extract_hqbin,
-    extract_markup,
-    read_pages,
-)
+from clara_ocr_spark.pipeline import extract, read_pages
 
 
 def test_byte_identity_vs_reference(spark, corpus_path):
@@ -97,7 +90,7 @@ def test_encap_text_byte_identical_and_spans_reconstruct(spark, corpus_path):
     document; excluded blocks carry start = end = -1."""
     pages = read_pages(spark, corpus_path)
     plain = {r.url: r.text for r in extract(pages).collect()}
-    enc = extract_encap(pages).collect()
+    enc = extract(pages, fmt="encap").collect()
     assert {r.url: r.text for r in enc} == plain
     for r in enc:
         kept = [b for b in r.blocks if b.start >= 0]
@@ -119,7 +112,7 @@ def test_full_html_wraps_plain_extract(spark, corpus_path):
 
     pages = read_pages(spark, corpus_path)
     plain = {r.url: r.text for r in extract(pages).collect()}
-    full = {r.url: r.html for r in extract_full_html(pages).collect()}
+    full = {r.url: r.html for r in extract(pages, fmt="full_html").collect()}
     assert set(full) == set(plain)
     unesc = lambda s: (  # noqa: E731
         s.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
@@ -253,7 +246,7 @@ def test_warc_timestamp_session_timezone(spark, tmp_path):
 
 
 def test_markup_byte_identity_vs_reference(spark, corpus_path):
-    """The <I>/<B> output variant: Spark extract_markup ≡ single-node
+    """The <I>/<B> output variant: Spark ``fmt="markup"`` ≡ single-node
     reference_extract_markup per url — over emphasis-bearing documents
     AND the full (emphasis-free) corpus, where it must also equal
     plain extract byte-for-byte."""
@@ -279,13 +272,13 @@ def test_markup_byte_identity_vs_reference(spark, corpus_path):
         for i, h in enumerate(payloads)
     ]
     df = spark.createDataFrame(rows, PAGES_SPARK_SCHEMA)
-    got = {r.url: r.text for r in extract_markup(df).collect()}
+    got = {r.url: r.text for r in extract(df, fmt="markup").collect()}
     assert got == {u: t for u, _, _, t, _ in rows}
     assert any("<i>" in t or "<b>" in t for t in got.values())
 
     pages = read_pages(spark, corpus_path)
     plain = {r.url: r.text for r in extract(pages).collect()}
-    marked = {r.url: r.text for r in extract_markup(pages).collect()}
+    marked = {r.url: r.text for r in extract(pages, fmt="markup").collect()}
     assert marked == plain  # corpus has no emphasis tags
 
 
@@ -294,7 +287,7 @@ def test_hqbin_passing_docs_untouched(spark, corpus_path):
     plain extract and never flagged; every url appears exactly once."""
     pages = read_pages(spark, corpus_path)
     base = {r.url: r.text for r in extract(pages).collect()}
-    rows = extract_hqbin(pages).collect()
+    rows = extract(pages, hqbin=True).collect()
     hq = {r.url: (r.text, r.hq_reparsed) for r in rows}
     assert len(rows) == len(hq) == len(base)
     for url, text in base.items():
@@ -323,7 +316,7 @@ def test_hqbin_recovers_low_quality_doc(spark):
         ),
     ]
     df = spark.createDataFrame(rows, PAGES_SPARK_SCHEMA)
-    got = {r.url: (r.text, r.hq_reparsed) for r in extract_hqbin(df).collect()}
+    got = {r.url: (r.text, r.hq_reparsed) for r in extract(df, hqbin=True).collect()}
     assert got["u_tiny"] == ("abc def", True)
     assert got["u_ok"][1] is False
     base = {r.url: r.text for r in extract(df).collect()}
@@ -352,7 +345,7 @@ def test_committed_encap_golden(spark):
         [(p["url"], ts, p["html"], "", "en") for p in pages],
         PAGES_SPARK_SCHEMA,
     )
-    got = extract_encap(df).collect()
+    got = extract(df, fmt="encap").collect()
     assert len(got) == len(want)
     for r in got:
         w = want[r.url]

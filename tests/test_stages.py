@@ -789,11 +789,35 @@ def test_correct_spelling_rewrites_only_hit_blocks(spark):
 def test_correct_spelling_default_path_disabled(spark, corpus_path):
     """The extraction pipeline never invokes the spelling stage by
     default — byte-identity with the reference is pinned by the golden
-    suite; this asserts the import surface stays decoupled."""
-    import clara_ocr_spark.pipeline as pipeline_mod
+    suite; this asserts the import surface stays decoupled (importing
+    the pipeline does not import the spelling stage) and that only an
+    explicit ``spell_min_count`` puts the stage into the plan."""
+    import subprocess
+    import sys
 
-    src = open(pipeline_mod.__file__).read()
-    assert "spell" not in src
+    from clara_ocr_spark.pipeline import extract, read_pages
+
+    probe = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, clara_ocr_spark.pipeline; "
+            "print('clara_ocr_spark.stages.spell' in sys.modules)",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120,
+    )
+    assert probe.stdout.strip() == "False", probe.stderr[-500:]
+
+    pages = read_pages(spark, corpus_path)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "levenshtein" not in plan(extract(pages))
+    assert "levenshtein" in plan(extract(pages, spell_min_count=50))
 
 
 def test_merge_upsert_concurrent_writer_rejected(spark, tmp_path):
