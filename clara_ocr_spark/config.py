@@ -4,8 +4,8 @@ clara.c:1749, magic alignment numbers build.c:62-79) as one explicit
 dataclass.
 
 Defaults reproduce the byte-identity reference semantics exactly;
-``pipeline.extract(cfg=…)`` reads them and the sweep harness
-(plans/sweep.py) explores the grid.
+``pipeline.extract(cfg=…)`` reads them, and ``extract_job --set``
+overrides them by name.
 """
 
 from __future__ import annotations
@@ -15,14 +15,15 @@ from dataclasses import dataclass, fields
 from .extract_rules import LINK_DENSITY_MAX, MIN_TEXT_LEN
 
 
-@dataclass(frozen=True)
-class ExtractConfig:
-    link_density_max: float = LINK_DENSITY_MAX  # ≈ avoid_geo cutoff
-    min_text_len: int = MIN_TEXT_LEN  # ≈ sdim size gate (clara.c:1557)
+class SetOverrides:
+    """The ``--set name=value`` parser shared by the job config
+    dataclasses (``ExtractConfig`` and ``curate.CurateConfig``)."""
 
     @classmethod
-    def from_args(cls, pairs: list[str]) -> "ExtractConfig":
-        """checkvar-style ``name=value`` overrides."""
+    def from_args(cls, pairs: list[str]):
+        """checkvar-style ``name=value`` overrides. An unknown name, a
+        value the field's type cannot parse, or a combination the
+        dataclass rejects raises ValueError."""
         kw = {}
         types = {f.name: f.type for f in fields(cls)}
         for p in pairs:
@@ -31,6 +32,12 @@ class ExtractConfig:
                 raise ValueError(f"unknown config var: {name}")
             kw[name] = (float if types[name] == "float" else int)(value)
         return cls(**kw)
+
+
+@dataclass(frozen=True)
+class ExtractConfig(SetOverrides):
+    link_density_max: float = LINK_DENSITY_MAX  # ≈ avoid_geo cutoff
+    min_text_len: int = MIN_TEXT_LEN  # ≈ sdim size gate (clara.c:1557)
 
 
 DEFAULT = ExtractConfig()

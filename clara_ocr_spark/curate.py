@@ -25,11 +25,12 @@ in SCALE.md); canonical election is lexicographic-min url per cluster
 
 from __future__ import annotations
 
-from dataclasses import dataclass, fields
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from .config import SetOverrides
 from .queries import (
     _band_candidates,
     _dup_2gram_frac,
@@ -56,7 +57,7 @@ REASON_LM = "lm_perplexity"
 
 
 @dataclass(frozen=True)
-class CurateConfig:
+class CurateConfig(SetOverrides):
     """Tunables of the curation gate (checkvar-style, like
     ExtractConfig)."""
 
@@ -94,17 +95,6 @@ class CurateConfig:
             raise ValueError(
                 "line_dedup_per_host=1 needs line_dedup_min_df > 0"
             )
-
-    @classmethod
-    def from_args(cls, pairs: list) -> "CurateConfig":
-        kw = {}
-        types = {f.name: f.type for f in fields(cls)}
-        for p in pairs:
-            name, _, value = p.partition("=")
-            if name not in types:
-                raise ValueError(f"unknown config var: {name}")
-            kw[name] = (float if types[name] == "float" else int)(value)
-        return cls(**kw)
 
 
 def drop_frequent_lines(

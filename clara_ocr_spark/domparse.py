@@ -13,7 +13,7 @@ Reference mapping (cited per SURVEY.md; files under /root/reference/):
   :func:`decode_html`: BOM sniff → UTF-8 strict → declared
   ``<meta charset>`` → Latin-1 fallback.
 * ``skel`` skeleton fingerprints (skel.c:765+) → tag-path n-gram
-  fingerprints in :func:`tag_path_ngrams`.
+  fingerprints (``stages/engines._path_grams``).
 
 EXTRACTION SPEC (the byte-exact semantics that the distributed pipeline
 must reproduce — the analogue of ``mk_page_output`` html.c:1986-2284):
@@ -410,14 +410,3 @@ def block_features(b: Block) -> Tuple[float, float, float, int, int]:
     stop = sum(1 for w in words if w in STOPWORDS)
     stopword_ratio = stop / n_words if n_words else 0.0
     return link_density, punct_ratio, stopword_ratio, n_words, n_words
-
-
-def tag_path_ngrams(tag_path: str, n: int = 2) -> List[str]:
-    """Tag-path n-grams — the skeleton fingerprint analogue
-    (skel.c:765+, SA heuristics → structural shape stripped of text)."""
-    parts = tag_path.split("/") if tag_path else []
-    if not parts:
-        return []
-    if len(parts) < n:
-        return ["/".join(parts)]
-    return ["/".join(parts[i : i + n]) for i in range(len(parts) - n + 1)]

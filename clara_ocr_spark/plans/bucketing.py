@@ -1,63 +1,15 @@
-"""Bucketed storage for co-located joins.
+"""Physical-plan inspection for plan-shape tests.
 
-The 100 TB join strategy for two corpus-sized relations on a shared
-key (blocks × per-host patterns, `stages/patterns.classify_by_host`;
-pages × per-host calibration): persist BOTH sides bucketed (and
-sorted) by the join key with the same bucket count, so the join
-compiles to a SortMergeJoin with NO Exchange on either side — the
-shuffle happens once at write time and is amortized over every
-subsequent join, the same economics as the reference persisting its
-pattern library per book rather than re-deriving it per page
-(``dump_patterns``, clara.c; SURVEY §2.1).
-
-Spark specifics this module pins down (test_bucketing):
-
-* ``bucketBy`` requires a catalog table (``saveAsTable``) — plain
-  ``parquet(path)`` writes ignore it;
-* both sides must share bucket count AND key, or Spark falls back to
-  shuffling the mismatched side;
-* ``sortBy`` additionally removes the per-task Sort under the merge
-  join;
-* bucket pruning: an equality filter on the bucket key scans 1/N of
-  the files.
-
-On a real cluster the catalog is Hive/Glue/Iceberg and the tables
-persist; in this sandbox the in-memory catalog scopes tables to the
-session, which is exactly enough to pin the plans.
+Plan tests pin how many shuffles a stage compiles to (``--deskew``'s
+profile is shuffle-free) and which join operators a catalog query
+uses (``spell_correct`` is an equi join, never a nested loop).  Both
+need the plan as text: ``df.explain`` only prints, and the executed
+plan's ``toString()`` elides scan details.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` bucketed (and optionally sorted) by ``key``.
-
-    ``n_buckets`` is a layout contract, not a tuning knob: every
-    relation that joins on ``key`` must use the SAME count, sized once
-    per deployment at ≈ total_bytes / (2 × HDFS block)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+from pyspark.sql import DataFrame
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -71,7 +23,7 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
 
 def n_exchanges(df: DataFrame) -> int:
     """Count shuffle Exchange operators in the final physical plan
-    (AQE-resolved). The assertion currency of the bucketing tests."""
+    (AQE-resolved). The assertion currency of the plan tests."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     # Count only genuine shuffle Exchange operators: BroadcastExchange
     # is not a shuffle, and ReusedExchange re-reads an already-counted

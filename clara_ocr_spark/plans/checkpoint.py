@@ -14,7 +14,6 @@ pattern is identical).
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,17 +38,6 @@ def checkpoint(df: DataFrame, path: str) -> DataFrame:
     df.write.mode("overwrite").format(CHECKPOINT_FORMAT).save(path)
     _write_version(path, version + 1)
     return df.sparkSession.read.format(CHECKPOINT_FORMAT).load(path)
-
-
-def resume_or_compute(
-    spark: SparkSession, path: str, compute: Callable[[], DataFrame]
-) -> DataFrame:
-    """recover_session semantics: a completed checkpoint is read back;
-    otherwise the stage runs and checkpoints. Spark's _SUCCESS marker
-    is the completion flag (a partial write without it is recomputed)."""
-    if os.path.exists(_done_marker(path)):
-        return spark.read.format(CHECKPOINT_FORMAT).load(path)
-    return checkpoint(compute(), path)
 
 
 def incremental_delta(

@@ -5198,7 +5198,7 @@ def pagerank_bipartite(spark, sf_dir):
     # Top-k tail: orderBy().limit() → TakeOrderedAndProject (partial
     # per-partition top-k, no single-task global sort of the full
     # |nodes| rank table); the (rank desc, node asc) total order makes
-    # the limit deterministic.  Same plan as doubts() (feedback.py).
+    # the limit deterministic.  Same plan as ``topk_doubts``.
     # The string node id is decoded here, BEFORE the orderBy, so the
     # tie-break is the same lexicographic (rank desc, node asc) order
     # the oracle uses.
@@ -9402,7 +9402,7 @@ def zipf_slope(spark, sf_dir):
 
     Scale shape: the term count is a map-side-partial groupBy; the
     head selection is ``orderBy().limit(512)`` — TakeOrderedAndProject
-    (per-partition partial top-k, the feedback.py:38 doubts pattern),
+    (per-partition partial top-k, the ``topk_doubts`` pattern),
     NEVER a global sort; ranking + regression then run over a
     BOUNDED <=512-row relation, so the one unpartitioned window is
     constant-size at any corpus scale.  regr_* over ln() doubles is

@@ -20,9 +20,27 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BinaryType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-#: text-container twin of streaming.incremental.PAGES_SPARK_SCHEMA —
-#: html travels base64-encoded
+#: the pages table as a Spark schema (the ``read_warc`` output shape)
+PAGES_SPARK_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("warc_ts", TimestampType()),
+        StructField("html", BinaryType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+    ]
+)
+
+#: text-container twin of PAGES_SPARK_SCHEMA — html travels
+#: base64-encoded
 PAGES_TEXT_SCHEMA = (
     "url string, warc_ts timestamp, html_b64 string, "
     "text string, lang string"
@@ -111,9 +129,8 @@ def wat_sidecar(
     map-side partial) — each carrying only urls, anchors and short
     strings; payloads never enter any of it, and the joins reuse the
     aggregates' url partitioning.  At 100 TB, land the three harvests
-    bucketed by url (`plans/bucketing`) and the compose becomes
-    zero-Exchange — the same co-location contract as
-    `classify_by_host`; url is
+    bucketed by url (``bucketBy``, one shared bucket count) and the
+    compose becomes zero-Exchange; url is
     ~unique, so no salt either way.  Output: (url, warc_ts,
     wat:string) where wat is deterministic JSON (struct field order is
     fixed by construction; collect_list order is pinned by
@@ -559,8 +576,6 @@ def read_pages_warc(spark: SparkSession, path: str) -> DataFrame:
                         )
                     out["lang"].append(None)
             yield pd.DataFrame(out)
-
-    from ..streaming.incremental import PAGES_SPARK_SCHEMA
 
     return files.select("content").mapInPandas(
         parse, schema=PAGES_SPARK_SCHEMA

@@ -4,7 +4,7 @@
 load (pgmblock.c:263-457) and PBM bit-unpacking (pbm2cl.c:824+) — the
 reference IS an image pipeline, so the corpus-scale analogue keeps
 media as opaque ``binary`` columns with typed metadata and runs
-decode/feature/resize/frame-sample as Arrow-batched stages.
+decode and feature extraction as Arrow-batched stages.
 
 Five containers decode NATIVELY (stdlib + numpy, from scratch): PNG
 (zlib + filter reconstruction), baseline JPEG (``sources/jpeg.py``),
@@ -29,7 +29,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -508,34 +507,6 @@ def decode(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_decode_batches, schema=DECODED_SCHEMA)
 
 
-def frame_sample(decoded: DataFrame, every: int = 4) -> DataFrame:
-    """Video frame sampling plan: one row per sampled frame index —
-    pure JVM explode of a sequence, no Python."""
-    # frames > 0: corrupt media decodes to an all-zero row, and
-    # sequence(0, -1, every) throws JVM-side — nothing to sample
-    vids = decoded.filter((F.col("kind") == "video") & (F.col("frames") > 0))
-    idx = F.sequence(
-        F.lit(0), F.col("frames") - 1, F.lit(every)
-    )
-    return vids.select(
-        "media_id", F.explode(idx).alias("frame_idx"), "width", "height"
-    )
-
-
-def resize_plan(decoded: DataFrame, max_dim: int = 64) -> DataFrame:
-    """Resize planning (aspect-preserving target dims) as column
-    arithmetic; actual pixel resample would live in the decode UDF."""
-    scale = F.least(
-        F.lit(max_dim) / F.col("width"), F.lit(max_dim) / F.col("height"), F.lit(1.0)
-    )
-    return decoded.select(
-        "media_id",
-        "kind",
-        F.greatest(F.floor(F.col("width") * scale), F.lit(1)).cast("int").alias("target_w"),
-        F.greatest(F.floor(F.col("height") * scale), F.lit(1)).cast("int").alias("target_h"),
-    )
-
-
 AUDIO_STATS_SCHEMA = StructType(
     [
         StructField("media_id", IntegerType(), False),
@@ -548,84 +519,6 @@ AUDIO_STATS_SCHEMA = StructType(
         StructField("n_segments", IntegerType(), False),
     ]
 )
-
-
-def _audio_stat_row(
-    payload: bytes, window: int, silence_db: float
-) -> tuple[int, int, int, float, float, float, int]:
-    """One audio payload → (rate, ch, frames, rms, peak,
-    silence_ratio, n_segments), all numpy-vectorized.  WAV payloads
-    decode natively; fake-codec audio blobs are read as unsigned 8-bit
-    PCM at ``width`` Hz so the fake path exercises identical math."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        rate, ch, frames, pcm = _decode_wav(payload)
-        x = np.frombuffer(pcm, dtype="<i2").astype(np.float32) / 32768.0
-    elif payload[:4] == _MAGIC:
-        rate, _h, frames, body = _decode_one(payload)
-        ch = 1
-        x = (np.frombuffer(body, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-        frames = x.size
-    elif (
-        payload[:3] == b"ID3"
-        or payload[:2] == b"\xff\xfb"
-        or payload[:4] in (b"OggS", b"fLaC")
-    ):
-        # valid-but-unsupported audio container: config gate, same
-        # contract as non-baseline JPEG — propagates, never a zero row
-        raise NotImplementedError("compressed audio needs an optional codec")
-    else:
-        raise ValueError("unrecognized audio payload")
-    if ch > 1:
-        x = x.reshape(-1, ch).mean(axis=1)  # downmix to mono
-    if x.size == 0:
-        return rate, ch, 0, 0.0, 0.0, 1.0, 0
-    rms = float(np.sqrt(np.mean(np.square(x))))
-    peak = float(np.max(np.abs(x)))
-    n_win = x.size // window
-    if n_win == 0:
-        voiced = np.array([rms >= 10.0 ** (silence_db / 20.0)])
-    else:
-        wr = np.sqrt(
-            np.mean(np.square(x[: n_win * window].reshape(n_win, window)), axis=1)
-        )
-        voiced = wr >= 10.0 ** (silence_db / 20.0)
-    silence_ratio = float(1.0 - voiced.mean())
-    # voiced segments = rising edges of the voiced mask
-    n_segments = int(
-        np.count_nonzero(np.diff(voiced.astype(np.int8), prepend=0) == 1)
-    )
-    return rate, ch, frames, rms, peak, silence_ratio, n_segments
-
-
-def audio_stats(
-    media: DataFrame, window: int = 1024, silence_db: float = -40.0
-) -> DataFrame:
-    """Audio feature extraction over the media table: per-clip RMS /
-    peak level, silence ratio, and voiced-segment count from windowed
-    energy (window ``window`` samples, threshold ``silence_db`` dBFS).
-
-    Same shape as :func:`decode`: Arrow-batched ``mapInPandas``, all
-    per-sample math vectorized numpy — the corpus-scale analogue of the
-    reference's per-page raster statistics (pgmblock.c histograms)
-    applied to the audio modality.  Corrupt payloads map to an empty
-    row (find_thing discipline), never a crash."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    row = _audio_stat_row(bytes(payload), window, silence_db)
-                except ValueError:
-                    row = (0, 0, 0, 0.0, 0.0, 1.0, 0)
-                out.append((int(mid), *row))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_STATS_SCHEMA.fields]
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, schema=AUDIO_STATS_SCHEMA
-    )
 
 
 def gen_media_blob(i: int, seed: int = 42) -> tuple[int, str, bytes]:

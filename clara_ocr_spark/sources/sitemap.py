@@ -152,57 +152,3 @@ def read_sitemaps(sitemaps: DataFrame) -> DataFrame:
     return sitemaps.select("url", "payload").mapInPandas(
         batches, schema=SITEMAP_SCHEMA
     )
-
-
-def sitemap_walk(sitemaps: DataFrame, max_depth: int = 3) -> DataFrame:
-    """Resolve the sitemap-index TREE over a table of fetched sitemap
-    files: parse every payload once (:func:`read_sitemaps`), take the
-    roots (files no index references), and walk index → child edges
-    level by level, emitting every page url with its discovery
-    lineage — ``(root, depth, sitemap_url, loc)``.  This is how
-    crawlers actually consume sitemaps: the robots.txt `Sitemap:`
-    line names an INDEX, and the 50k-entry cap forces big sites into
-    multi-level trees.
-
-    Scale shape: the parse is one map-only pass; each level is ONE
-    equi-join of the frontier against the edge table (frontier rows
-    are short strings), with a `localCheckpoint` per level truncating
-    the iterative lineage (the `integer_pagerank` discipline).  The
-    depth cap bounds the walk on HOSTILE graphs — an index citing
-    itself or a cycle of indexes terminates at ``max_depth`` instead
-    of looping; entries under an unreachable (orphan) sitemap simply
-    never appear, which is the correct crawl semantics."""
-    import pyspark.sql.functions as F
-
-    entries = read_sitemaps(sitemaps).localCheckpoint(eager=False)
-    referenced = entries.filter(F.col("is_index")).select(
-        F.col("loc").alias("sitemap_url")
-    )
-    roots = (
-        sitemaps.select(F.col("url").alias("sitemap_url"))
-        .distinct()
-        .join(referenced.distinct(), "sitemap_url", "left_anti")
-    )
-    frontier = roots.select(
-        F.col("sitemap_url").alias("root"),
-        "sitemap_url",
-        F.lit(0).alias("depth"),
-    )
-    out = None
-    for depth in range(max_depth + 1):
-        level = frontier.join(entries, "sitemap_url")
-        leaves = level.filter(~F.col("is_index")).select(
-            "root", "depth", "sitemap_url", "loc"
-        )
-        out = leaves if out is None else out.unionByName(leaves)
-        frontier = (
-            level.filter(F.col("is_index"))
-            .select(
-                "root",
-                F.col("loc").alias("sitemap_url"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    return out

@@ -1,77 +1,16 @@
-"""Per-host calibration with explicit salt-based skew mitigation.
+"""Per-document deskew calibration — the ``--deskew`` job stage.
 
-≈ Clara's ``balance``/``pre_balance`` local adaptive thresholds
-(preproc.c:490-599): thresholds are calibrated per *tile*; our tile is
-the host (site) — per-host feature statistics feed adaptive cutoffs
-and per-site quality reports.
-
-Skew is the whole point here (SURVEY §4 custom-work item 1): hosts are
-Zipf-distributed, so a plain ``groupBy(host)`` sends a hot host's
-entire corpus slice to one reducer.  The salted two-phase aggregation
-bounds any single task at ~1/N of the hot key:
-
-  phase 1: groupBy(host, salt) → partial sums   (salt = hash(url) % N)
-  phase 2: groupBy(host)       → merge partials
-
-Only algebraic aggregates (sum/count/min/max) are used, so the salted
-result is exactly equal to the unsalted one — asserted in tests.
-AQE's skew-join handling does not cover aggregations, hence explicit
-salting (north_rule).
+≈ Clara's ``pp_deskew`` (preproc.c:218-292): a per-page scalar search
+that maximizes a row-local alignment score.  The DOM analogue probes
+word-length cutoffs per extracted document and keeps the best one,
+as a diagnostic sidecar table beside the extraction output; the
+catalog twin is ``queries.deskew_search``.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-DEFAULT_SALTS = 16
-
-
-def with_salt(df: DataFrame, key: str = "url", n: int = DEFAULT_SALTS) -> DataFrame:
-    """Deterministic salt from a high-cardinality column (NOT rand():
-    retries/speculative tasks must agree)."""
-    return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key)), F.lit(n)))
-
-
-def calibrate_hosts(blocks_with_host: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
-    """Per-host calibration stats via salted two-phase aggregation.
-
-    Input needs columns host, url, link_density, text_len, pos.
-    Output: host, n_blocks, n_docs, avg_link_density, avg_text_len,
-    max_text_len — the per-site threshold inputs (pp_thresh/balance
-    analogues, preproc.c:455-476)."""
-    real = blocks_with_host.filter(F.col("pos") >= 0)
-    partial = (
-        with_salt(real, "url", n_salts)
-        .groupBy("host", "salt")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("link_density").alias("ld_sum"),
-            F.sum("text_len").alias("tl_sum"),
-            F.max("text_len").alias("tl_max"),
-            F.approx_count_distinct("url").alias("docs_part"),
-        )
-    )
-    merged = partial.groupBy("host").agg(
-        F.sum("n").alias("n_blocks"),
-        (F.sum("ld_sum") / F.sum("n")).alias("avg_link_density"),
-        (F.sum("tl_sum") / F.sum("n")).alias("avg_text_len"),
-        F.max("tl_max").alias("max_text_len"),
-        F.sum("docs_part").alias("n_docs_approx"),
-    )
-    return merged
-
-
-def calibrate_hosts_unsalted(blocks_with_host: DataFrame) -> DataFrame:
-    """Reference single-phase version (for the equality test; would
-    hot-spot at scale)."""
-    real = blocks_with_host.filter(F.col("pos") >= 0)
-    return real.groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.avg("link_density").alias("avg_link_density"),
-        F.avg("text_len").alias("avg_text_len"),
-        F.max("text_len").alias("max_text_len"),
-    )
 
 
 def deskew_profile(

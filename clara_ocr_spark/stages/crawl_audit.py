@@ -6,7 +6,7 @@ driver's oracle runs against the fixed ten-table sf schema (documented
 there; VERDICT r4 accepted the synthesis).  These stages are the
 PRODUCTION twins: the same operator plans over actual ``url:string``
 columns — crawled urls from the pages table, declared urls from
-``sources/sitemap.read_sitemaps``/``sitemap_walk`` output, frontier
+``sources/sitemap.read_sitemaps`` output, frontier
 urls from the links harvest — so a parquet-backed url table gets real
 predicate pushdown and column pruning at the scan
 (tests/test_crawl_audit.py pins ``PushedFilters`` on the url column).
@@ -78,8 +78,8 @@ def sitemap_coverage_urls(
     """Per-host sitemap-vs-crawl coverage over real url tables.
 
     ``crawled``: any frame with a ``url`` column (the pages table);
-    ``declared``: any frame with a ``loc`` column (``read_sitemaps`` /
-    ``sitemap_walk`` output).  Output per host: how many urls the
+    ``declared``: any frame with a ``loc`` column (``read_sitemaps``
+    output).  Output per host: how many urls the
     publisher declares, how many the crawl holds, and the two gap
     classes that drive scheduling (declared-but-unfetched feeds the
     frontier; fetched-but-undeclared is the orphan/trap-suspect set).
@@ -119,7 +119,7 @@ def sitemap_staleness_urls(
     at all, the publisher volunteers the signal).
 
     ``crawled``: any frame with (url, warc_ts); ``declared``:
-    ``read_sitemaps``/``sitemap_walk`` output (loc, lastmod — a W3C
+    ``read_sitemaps`` output (loc, lastmod — a W3C
     datetime STRING per the sitemaps.org protocol: date-only or full
     ISO 8601; unparseable/absent lastmod is counted but never stale,
     the conservative read).  Both sides reduce to one row per url

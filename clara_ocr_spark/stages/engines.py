@@ -37,8 +37,8 @@ PATTERN_FEATURES_SCHEMA = (
 
 
 def _path_grams(col: F.Column) -> F.Column:
-    """Tag-path 2-grams as an array<string> (JVM twin of
-    domparse.tag_path_ngrams): '' → [], single part → [part]."""
+    """Tag-path 2-grams as an array<string>: '' → [], single part →
+    [part]."""
     parts = F.when(col == "", F.array().cast("array<string>")).otherwise(
         F.split(col, "/")
     )

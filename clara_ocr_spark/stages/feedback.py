@@ -1,15 +1,12 @@
-"""Stage F — doubts + revision feedback.
+"""Stage F — revision feedback.
 
-≈ Clara step_14 doubt emission (clara.c:3403-3528), the acts log
+≈ Clara's acts log
 (``adesc``, common.h:372-401), ``review`` dispatch (revision.c:610-666)
 and transliteration election by preference (``UTSEAN``,
 symbol.c:1496-1579; vote origins common.h:413-423).
 
 Spark shapes:
 
-* doubts = rank blocks by uncertainty with a strict total order
-  (score asc, text_len desc, url, pos) and cap at ``max_doubts``
-  (common.h:875) — ``row_number`` + ``limit``;
 * acts = an append-only feedback table
   ``acts(act_id, url, pos, label, reviewer_type, submitted_at)``;
 * election = deterministic, idempotent argmax per (url, pos):
@@ -17,14 +14,15 @@ Spark shapes:
   then recency, then act_id — a window, not a loop;
 * apply = left join of elected labels onto blocks; an elected label is
   authoritative (≈ REV_TR acts beating SHAPE votes).
+
+The step_14 doubts ranking (clara.c:3403-3528) is the ``topk_doubts``
+catalog query.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-
-from ..extract_rules import STRONG_MATCH
 
 #: reviewer privilege, ≈ anon/trusted/arbiter (common.h:801-805)
 REVIEWER_RANK = {"arbiter": 3, "trusted": 2, "anon": 1}
@@ -33,32 +31,6 @@ ACTS_SCHEMA = (
     "act_id bigint, url string, pos int, label string, "
     "reviewer_type string, submitted_at timestamp"
 )
-
-
-def doubts(blocks: DataFrame, max_doubts: int = 1000) -> DataFrame:
-    """Uncertain blocks ranked for human revision (step_14).
-
-    Scale shape (VERDICT r1 #4): the cap runs as ``orderBy().limit()``
-    — Spark compiles that to TakeOrderedAndProject, a per-partition
-    partial top-k merged on the driver, so no row ever shuffles to a
-    single-task global sort. Only the ≤ max_doubts survivors (human
-    review scale) pass through the rank window, whose unpartitioned
-    frame is then trivially small. Tie-break stays the strict total
-    order (score asc, text_len desc, url, pos)."""
-    uncertain = blocks.filter(
-        (F.col("score") < STRONG_MATCH) & (F.col("pos") >= 0)
-    )
-    order = [
-        F.asc("score"), F.desc("text_len"), F.asc("url"), F.asc("pos")
-    ]
-    top = (
-        uncertain.select(
-            "url", "pos", "tag_path", "label", "score", "text_len"
-        )
-        .orderBy(*order)
-        .limit(max_doubts)
-    )
-    return top.withColumn("doubt_rank", F.row_number().over(Window.orderBy(*order)))
 
 
 def elect_labels(acts: DataFrame) -> DataFrame:
@@ -304,17 +276,4 @@ def apply_structural_acts(blocks: DataFrame, sacts: DataFrame) -> DataFrame:
             "url", "zone", "pos", "text", "tag_path", "label",
             "score", "text_len", "link_text_len",
         )
-    )
-
-
-def merge_acts(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Append-only merge of the acts log (``process_webdata`` ingest,
-    clara.c:2952-3013): dedup on act_id, existing rows win."""
-    w = Window.partitionBy("act_id").orderBy(F.asc("_src"))
-    return (
-        existing.withColumn("_src", F.lit(0))
-        .unionByName(incoming.withColumn("_src", F.lit(1)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_src", "_rn")
     )

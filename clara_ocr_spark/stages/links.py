@@ -213,95 +213,6 @@ def host_graph(links: DataFrame) -> DataFrame:
     )
 
 
-def integer_pagerank(
-    edges: DataFrame, iters: int = 3, top_k: int = 20
-) -> DataFrame:
-    """edges(src, dst, w) → the top-k (node, rank) authority table.
-
-    The general-digraph twin of the `pagerank_bipartite` catalog query
-    (same integer discipline: ranks in 1e-12 units, div floor, 85/100
-    damping — bit-reproducible on any partitioning, unlike a
-    double-precision PageRank; dangling nodes drop their mass, same
-    documented simplification).  Per iteration: ONE broadcast join of
-    the edge list against the |nodes|-sized rank table and ONE
-    groupBy(dst) with map-side partial sums; the edge list and each
-    rank table are localCheckpointed so iteration i never re-executes
-    iterations 1..i-1 (the lineage-blowup fix the catalog query
-    carries)."""
-    w_edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
-    ow = w_edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = w_edges.join(ow, "src").localCheckpoint(eager=False)
-    nodes = (
-        ew.select(F.col("src").alias("node"))
-        .unionByName(ew.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n_nodes = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-    ranks = (
-        nodes.crossJoin(F.broadcast(n_nodes))
-        .select(
-            "node",
-            F.expr("1000000000000 div n_nodes").alias("rank"),
-            "n_nodes",
-        )
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(iters):
-        contrib = ew.join(
-            F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr("(rank * w) div out_w").alias("c"),
-        )
-        inflow = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        ranks = (
-            ranks.select("node", "n_nodes")
-            .join(inflow, "node", "left")
-            .select(
-                "node",
-                (
-                    F.expr("(15 * (1000000000000 div n_nodes)) div 100")
-                    + F.expr(
-                        "(85 * coalesce(inflow, cast(0 as bigint))) div 100"
-                    )
-                ).alias("rank"),
-                "n_nodes",
-            )
-            .localCheckpoint(eager=False)
-        )
-    # Final top-k: orderBy().limit() plans as TakeOrderedAndProject —
-    # per-partition partial top-k merged at the driver — instead of a
-    # row_number() window, which would force the ENTIRE rank table
-    # (|hosts| ~ 1e8 at 100 TB) through one task for a global sort.
-    # The (rank desc, node asc) total order keeps the limit
-    # deterministic.  Same discipline as doubts() (feedback.py).
-    return (
-        ranks.select("node", "rank")
-        .orderBy(F.desc("rank"), F.asc("node"))
-        .limit(top_k)
-    )
-
-
-def rank_hosts(links: DataFrame, iters: int = 3, top_k: int = 20) -> DataFrame:
-    """Host authority rank over the EXTRACTED link graph — the
-    composition a crawl-quality prior is built from: extract_links →
-    host_graph → integer PageRank. Self-loops are excluded (a site
-    linking to itself is navigation, not endorsement — and the
-    synthetic corpus's nav/linkfarm links are all intra-site, so this
-    is also what makes the composition honest on real cross-site
-    graphs)."""
-    g = host_graph(links).filter(F.col("src_host") != F.col("dst_host"))
-    return integer_pagerank(
-        g.select(
-            F.col("src_host").alias("src"),
-            F.col("dst_host").alias("dst"),
-            F.col("n_links").alias("w"),
-        ),
-        iters,
-        top_k,
-    )
-
-
 def top_anchor_text(links: DataFrame) -> DataFrame:
     """Anchor-text election per destination url: total in-links and
     the most frequent non-empty anchor (count desc, text asc — a
@@ -335,8 +246,8 @@ def reciprocity_ledger(edges: DataFrame) -> DataFrame:
     flag (≥ 50% reciprocal with ≥ 3 neighbors) — mutual-link density
     is the classic quid-pro-quo link-spam signal (TrustRank-family
     anti-spam heuristics), demoting hosts whose neighborhoods are
-    mostly reciprocal in the crawl-quality prior next to
-    ``rank_hosts``.
+    mostly reciprocal in the crawl-quality prior next to the host
+    authority rank (``pagerank_bipartite``).
 
     Scale shape: three Exchanges, all id-sized keys — the directed
     distinct (multi-edges collapse in the map-side partial), the
@@ -345,7 +256,7 @@ def reciprocity_ledger(edges: DataFrame) -> DataFrame:
     |pairs|-row endpoint rollup fed by a single-pass explode (a
     two-leg union would re-execute the whole pair subtree — observed
     in the plan and avoided).  Self-loops excluded (intra-site
-    navigation is not endorsement, the `rank_hosts` rule).  The
+    navigation is not endorsement).  The
     oracle-checked catalog twin is ``queries.reciprocal_link_audit``.
     Reference analogue: the mutual-confirmation vote (`review_merge`
     slink/alink cross-links, stages/feedback.py) — agreement counts

@@ -153,63 +153,3 @@ def bootstrap_patterns(spark, rows: list[tuple[str, str]]) -> DataFrame:
     return spark.createDataFrame(
         [(fp, lb, 0) for fp, lb in rows], PATTERNS_SCHEMA
     )
-
-
-def grow_patterns_by_host(labeled_blocks: DataFrame, min_support: int = 3) -> DataFrame:
-    """Per-site pattern library — the per-BOOK font (a host plays the
-    role of one book: its template is the book's typeface). Same
-    majority election as grow_patterns, keyed by (host, fingerprint).
-
-    Skew note: the group key (host, tag_path) is high-cardinality even
-    for a hot Zipf host (its rows spread over its many tag paths), so
-    no salt is needed HERE — unlike per-host scalar calibration
-    (stages/calibrate.py) where the key is host alone. Partial
-    aggregation handles the fan-in."""
-    from .segment import with_host
-
-    blocks = labeled_blocks if "host" in labeled_blocks.columns else with_host(labeled_blocks)
-    candidates = blocks.filter(
-        F.col("pattern_label").isNull()
-        & (F.col("pos") >= 0)
-        & (F.col("text_len") >= MIN_TEXT_LEN)
-        & (F.col("tag_path") != "")
-    )
-    by_label = candidates.groupBy("host", "tag_path", "label").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return (
-        by_label.groupBy("host", "tag_path")
-        .agg(
-            F.min_by("label", F.struct((-F.col("n")).alias("neg"), "label")).alias(
-                "label"
-            ),
-            F.sum("n").alias("matches"),
-            F.max("n").alias("top_n"),
-        )
-        .filter(
-            (F.col("matches") >= min_support)
-            & (F.col("top_n") * 2 > F.col("matches"))
-        )
-        .select("host", F.col("tag_path").alias("fingerprint"), "label", "matches")
-    )
-
-
-def classify_by_host(blocks: DataFrame, host_patterns: DataFrame) -> DataFrame:
-    """Label blocks against the per-site library: equi-join on
-    (host, fingerprint). Both sides are corpus-sized at 100 TB, so this
-    is a shuffle join — co-locate by bucketing both tables by host in
-    storage; AQE's skew-join split covers hot hosts at runtime. A
-    host's patterns never leak onto another host's pages."""
-    from .segment import with_host
-
-    b = blocks if "host" in blocks.columns else with_host(blocks)
-    pat = host_patterns.select(
-        F.col("host").alias("_ph"),
-        F.col("fingerprint").alias("_pf"),
-        F.col("label").alias("pattern_label"),
-    ).dropDuplicates(["_ph", "_pf"])
-    return b.join(
-        pat,
-        (b["host"] == pat["_ph"]) & (b["tag_path"] == pat["_pf"]),
-        "left",
-    ).drop("_ph", "_pf")

@@ -145,29 +145,3 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn(
         "host", F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/]+)", 1)
     )
-
-
-def zones_from_geometry(blocks: list, depth_tol: int = 1) -> list:
-    """Optional geometric zoning (the ``blockfind`` dominant-column
-    selection, pgmblock.c:1108-1271: cluster detected structures by
-    proximity, the largest cluster wins): blocks whose tree depths are
-    within ``depth_tol`` of each other cluster together via the
-    reference's clusterize primitive; the LARGEST cluster is the main
-    zone (0), everything else zone 1.
-
-    For documents WITHOUT explicit ``data-zone`` markers. Not in the
-    default path — explicit markers win (they are exact); enable per
-    deployment where column layout is only structural. Per-document
-    work, runs inside the segmentation P-UDF when enabled."""
-    from ..functions.cluster import clusterize
-
-    if not blocks:
-        return []
-    depths = [b.depth for b in blocks]
-
-    def dist(i: int, j: int) -> int:
-        return abs(depths[i] - depths[j])
-
-    _, main = clusterize(len(blocks), depth_tol, dist)
-    main_set = set(main)
-    return [0 if i in main_set else 1 for i in range(len(blocks))]

@@ -1,10 +1,10 @@
 """Structured Streaming operators over the events stream.
 
 The reference has no streaming engine — its closest analogue is the
-``clara.pl -d`` polling daemon (clara.pl:26-44), mapped to incremental
-batch in ``incremental.py``.  This module provides the *streaming*
-versions of the engine's time-keyed operators for deployments where the
-corpus/event feed arrives continuously:
+``clara.pl -d`` polling daemon (clara.pl:26-44), mapped to the
+incremental batch job (``extract_job --incremental``).  This module
+provides the *streaming* versions of the engine's time-keyed operators
+for deployments where the event feed arrives continuously:
 
 - ``windowed_event_counts``: event-time tumbling-window aggregation
   with a watermark for late data (append mode — a window is emitted
@@ -241,54 +241,6 @@ def recrawl_changes_stateful(captures: DataFrame) -> DataFrame:
         stateStructType=_RECRAWL_STATE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def user_totals_tws(stream: DataFrame) -> DataFrame:
-    """Running per-user totals via transformWithStateInPandas — the
-    Spark 4 arbitrary-state API (typed ValueState, RocksDB-backed;
-    successor to applyInPandasWithState). Same update-mode contract as
-    user_sessions_stateful.
-
-    Requires ``google.protobuf`` on the workers (the TWS state-server
-    protocol) and the RocksDB state store provider; this container
-    lacks protobuf, so the test is skipped here and
-    ``user_sessions_stateful`` is the exercised stateful path."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, round(total, 6)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Proc(),
-        outputStructType="user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

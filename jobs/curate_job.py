@@ -159,7 +159,10 @@ def main(argv: list[str] | None = None) -> None:
     from clara_ocr_spark.pipeline import extract
     from clara_ocr_spark.stages.consist import append_metrics, partition_lineage
 
-    cfg = CurateConfig.from_args(args.overrides)
+    try:
+        cfg = CurateConfig.from_args(args.overrides)
+    except ValueError as e:
+        ap.error(str(e))
     spark = build_session()
     if args.input_format == "parquet":
         pages = spark.read.parquet(args.input)

@@ -1,5 +1,5 @@
-"""Salted calibration correctness + physical-plan shape assertions
-(the .explain checks: pushdown, broadcast, single-shuffle pipeline)."""
+"""Physical-plan shape assertions (the .explain checks: pushdown,
+broadcast, single-shuffle pipeline) and the --deskew profile."""
 
 from __future__ import annotations
 
@@ -7,43 +7,10 @@ import pyspark.sql.functions as F
 
 from clara_ocr_spark.pipeline import extract, read_pages
 from clara_ocr_spark.queries import REGISTRY
-from clara_ocr_spark.stages.calibrate import (
-    calibrate_hosts,
-    calibrate_hosts_unsalted,
-    with_salt,
-)
-from clara_ocr_spark.stages.classify import classify
-from clara_ocr_spark.stages.segment import segment, with_host
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_salted_equals_unsalted(spark, corpus_path):
-    pages = read_pages(spark, corpus_path)
-    blocks = with_host(classify(segment(pages)))
-    a = {
-        r.host: (r.n_blocks, round(r.avg_link_density, 9), round(r.avg_text_len, 9), r.max_text_len)
-        for r in calibrate_hosts(blocks).collect()
-    }
-    b = {
-        r.host: (r.n_blocks, round(r.avg_link_density, 9), round(r.avg_text_len, 9), r.max_text_len)
-        for r in calibrate_hosts_unsalted(blocks).collect()
-    }
-    assert a == b
-    # the Zipf skew is real: hottest host ≫ median host
-    counts = sorted(v[0] for v in a.values())
-    assert counts[-1] > 5 * counts[len(counts) // 2]
-
-
-def test_salt_deterministic(spark, corpus_path):
-    pages = read_pages(spark, corpus_path)
-    s1 = with_salt(pages.select("url")).collect()
-    s2 = with_salt(pages.select("url")).collect()
-    assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
-    n_salts = len({r.salt for r in s1})
-    assert n_salts > 8  # actually spreads
 
 
 # -- plan-shape assertions (SURVEY: iterate on .explain output) ---------
@@ -373,7 +340,7 @@ def test_heavy_hitters_plan_shape(spark, sf001):
 
 def test_zipf_slope_plan_top_k_and_bounded_window(spark, sf001):
     """zipf_slope's head selection must be TakeOrderedAndProject
-    (per-partition partial top-k — the feedback.py:38 doubts pattern),
+    (per-partition partial top-k — the ``topk_doubts`` pattern),
     NEVER a global Sort of the term relation; the one unpartitioned
     row_number window sits strictly ABOVE the limit, so it only ever
     sees <=512 rows; the regression aggregate partially aggregates."""

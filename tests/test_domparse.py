@@ -16,7 +16,6 @@ from clara_ocr_spark.domparse import (
     block_features,
     decode_html,
     parse_blocks,
-    tag_path_ngrams,
 )
 from clara_ocr_spark.extract_rules import (
     LABEL_BOILER,
@@ -175,12 +174,6 @@ def test_malformed_unclosed_tags_salvaged():
 def test_entities_resolved():
     blocks = parse_blocks(b"<body><p>a &amp; b &copy; c</p></body>")
     assert blocks[0].text == "a & b \xa9 c"
-
-
-def test_tag_path_ngrams():
-    assert tag_path_ngrams("html/body/div/p", 2) == ["html/body", "body/div", "div/p"]
-    assert tag_path_ngrams("p", 2) == ["p"]
-    assert tag_path_ngrams("", 2) == []
 
 
 # -- rule chain (case table, clara-tests.c style) -------------------------

@@ -19,15 +19,6 @@ from clara_ocr_spark.streaming.events_stream import (
 )
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 @pytest.fixture(scope="module")
 def events_dir(spark, sf001, tmp_path_factory):
     root = tmp_path_factory.mktemp("events_feed")
@@ -184,53 +175,6 @@ def test_streaming_dedup_drops_replays(spark, sf001, tmp_path):
     rows = got.collect()
     assert len(rows) == 500
     assert len({r.event_id for r in rows}) == 500
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(), reason="transformWithState needs google.protobuf (not in this container)"
-)
-def test_transform_with_state_totals(spark, sf001, events_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API) running
-    totals must equal the batch groupBy at end of drain."""
-    from clara_ocr_spark.streaming.events_stream import user_totals_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir + "/shard=*")
-        got = drain_to_memory(
-            spark,
-            user_totals_tws(stream),
-            "user_totals_tws",
-            str(tmp_path / "ck4"),
-            output_mode="update",
-        )
-        final = got.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-        )
-        ev = spark.read.parquet(f"{sf001}/events.parquet")
-        want = ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-        )
-        got_map = {
-            r.user_id: (r.n_events, round(r.total_value, 4))
-            for r in final.collect()
-        }
-        want_map = {
-            r.user_id: (r.n_events, round(r.total_value, 4))
-            for r in want.collect()
-        }
-        assert got_map == want_map
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_stateful_sessions_hot_key_skew(spark, tmp_path):

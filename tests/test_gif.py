@@ -33,7 +33,7 @@ def test_roundtrip_exact():
 
 def test_multiframe():
     """Multi-frame streams decode every frame in order (the animated-
-    GIF case; frame_sample downstream thins them like AVI video)."""
+    GIF case, like AVI video)."""
     frames = [_gray(5), _gray(6), _gray(7)]
     w, h, n, body = decode_gif(encode_gif(frames))
     assert n == 3

@@ -1064,6 +1064,31 @@ def test_extract_job_set_and_engine(spark, tmp_path):
     assert any(got[r["url"]] != r["text"] for r in rows)
 
 
+def test_curate_job_bad_set_is_usage_error(tmp_path):
+    """A ``--set`` the curation config rejects (unknown name, or the
+    per-host switch without its min_df) is an argparse usage error:
+    exit 2 with the reason on stderr, no traceback, no output."""
+    for pair, msg in (
+        ("nope=1", "unknown config var: nope"),
+        ("line_dedup_per_host=1", "needs line_dedup_min_df > 0"),
+    ):
+        proc = subprocess.run(
+            [
+                sys.executable,
+                os.path.join(ROOT, "jobs", "curate_job.py"),
+                "--input", str(tmp_path / "absent.parquet"),
+                "--curated", str(tmp_path / "curated"),
+                "--rejects", str(tmp_path / "rejects"),
+                "--set", pair,
+            ],
+            capture_output=True, text=True, timeout=300,
+        )
+        assert proc.returncode == 2, proc.stderr[-2000:]
+        assert msg in proc.stderr
+        assert "Traceback" not in proc.stderr
+        assert not (tmp_path / "curated").exists()
+
+
 def test_extract_job_revisit_out(tmp_path):
     """--revisit-out over a recrawl input: the second identical
     capture of a url becomes ONE WARC revisit pointer referencing the

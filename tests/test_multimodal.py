@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: decode UDF shape, determinism,
-frame sampling, resize planning, real-codec stub behavior."""
+real-codec stub behavior."""
 
 from __future__ import annotations
 
@@ -11,9 +11,7 @@ from clara_ocr_spark.sources.multimodal import (
     _decode_one,
     decode,
     encode_fake,
-    frame_sample,
     make_media,
-    resize_plan,
 )
 
 
@@ -36,27 +34,6 @@ def test_kind_distribution_and_frames(spark):
     kinds = {r.kind for r in d.collect()}
     assert kinds == {"image", "audio", "video"}
     assert d.filter((F.col("kind") == "image") & (F.col("frames") != 1)).count() == 0
-
-
-def test_frame_sampling(spark):
-    media = make_media(spark, n=30)
-    d = decode(media)
-    frames = frame_sample(d, every=4)
-    per_vid = {
-        r.media_id: r.n for r in frames.groupBy("media_id").agg(
-            F.count(F.lit(1)).alias("n")).collect()
-    }
-    vid_frames = {r.media_id: r.frames for r in d.filter(F.col("kind") == "video").collect()}
-    assert set(per_vid) == set(vid_frames)
-    for mid, n in per_vid.items():
-        assert n == len(range(0, vid_frames[mid], 4))
-
-
-def test_resize_plan_aspect(spark):
-    media = make_media(spark, n=20)
-    plans = resize_plan(decode(media), max_dim=64).collect()
-    for r in plans:
-        assert 1 <= r.target_w <= 64 and 1 <= r.target_h <= 64
 
 
 def test_real_codec_stub_raises():
@@ -487,15 +464,12 @@ def test_avi_mjpeg_roundtrip():
 
 
 def test_avi_decodes_through_spark_media_stage(spark):
-    """AVI rides the same mapInPandas decode stage; frame_sample then
-    explodes the sampled frame indices JVM-side."""
+    """AVI rides the same mapInPandas decode stage as images: frame
+    count and dims come from the RIFF walk; a corrupt container maps
+    to an empty row."""
     import numpy as np
 
-    from clara_ocr_spark.sources.multimodal import (
-        decode,
-        encode_avi_mjpeg,
-        frame_sample,
-    )
+    from clara_ocr_spark.sources.multimodal import decode, encode_avi_mjpeg
 
     rng = np.random.default_rng(5)
     frames = [
@@ -513,8 +487,6 @@ def test_avi_decodes_through_spark_media_stage(spark):
     assert (out[1].width, out[1].height, out[1].frames) == (24, 16, 8)
     assert out[1].n_bytes == 24 * 16 * 8
     assert out[2].width == 0 and out[2].n_bytes == 0
-    sampled = frame_sample(d, every=3).collect()
-    assert sorted(r.frame_idx for r in sampled if r.media_id == 1) == [0, 3, 6]
 
 
 def test_avi_codec_and_hostility_gates():
@@ -551,52 +523,6 @@ def test_avi_codec_and_hostility_gates():
             _decode_avi(bytes(m))
         except (ValueError, NotImplementedError):
             pass
-
-
-def test_audio_stats_tone_vs_silence(spark):
-    """audio_stats: a clip of [silence | tone | silence | tone] yields
-    2 voiced segments, ~half silence, RMS ≈ amplitude/√2."""
-    import numpy as np
-
-    from clara_ocr_spark.sources.multimodal import audio_stats, encode_wav
-
-    rate, amp, span = 16000, 12000, 4096  # span = 4 analysis windows
-    t = np.arange(span)
-    tone = (amp * np.sin(2 * np.pi * 440 * t / rate)).astype(np.int16)
-    quiet = np.zeros(span, dtype=np.int16)
-    clip = np.concatenate([quiet, tone, quiet, tone])
-    rows = [
-        (1, "audio", bytearray(encode_wav(clip, rate))),
-        (2, "audio", bytearray(b"RIFFbadWAVE")),  # corrupt → zero row
-        (3, "image", bytearray(b"ignored")),  # filtered out by kind
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary"
-    )
-    out = {r.media_id: r for r in audio_stats(media).collect()}
-    assert set(out) == {1, 2}
-    r1 = out[1]
-    assert (r1.sample_rate, r1.channels, r1.n_frames) == (rate, 1, 4 * span)
-    assert r1.n_segments == 2
-    assert abs(r1.silence_ratio - 0.5) < 1e-6  # spans are window-aligned
-    expected_rms = (amp / 32768.0) / np.sqrt(2) * np.sqrt(0.5)  # half duty
-    assert abs(r1.rms - expected_rms) < 0.01
-    assert abs(r1.peak - amp / 32768.0) < 0.01
-    assert out[2].sample_rate == 0 and out[2].silence_ratio == 1.0
-
-
-def test_audio_stats_fake_codec_path(spark):
-    """Fake-codec audio blobs run the identical stats math (uint8 PCM
-    reinterpretation) so the plumbing is exercised without WAV."""
-    from clara_ocr_spark.sources.multimodal import audio_stats, make_media
-
-    media = make_media(spark, n=12)
-    out = audio_stats(media).collect()
-    assert len(out) == 4  # kinds cycle img/audio/video
-    for r in out:
-        assert r.channels == 1 and r.n_frames > 0
-        assert 0.0 <= r.silence_ratio <= 1.0
-        assert r.rms > 0.0  # byte-ramp payload is never silent
 
 
 def test_media_corpus_generator_deterministic(tmp_path):

@@ -584,38 +584,6 @@ def test_committed_pdf_goldens(spark):
     assert got == want
 
 
-def test_streaming_incremental_mixed(spark, tmp_path, pdf_rows):
-    """The daemon analogue processes mixed HTML+PDF shards and stays
-    idempotent for already-seen files (clara.pl -d semantics)."""
-    import pyarrow.parquet as pq
-
-    from clara_ocr_spark.sources.corpus import gen_page
-    from clara_ocr_spark.streaming.incremental import run_incremental
-
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    html_rows = [gen_page(i, seed=31) for i in range(20)]
-    pdfs = pdf_rows[:20]
-    pq.write_table(
-        pa.Table.from_pylist(html_rows, schema=PAGES_SCHEMA),
-        str(corpus / "part-html.parquet"),
-    )
-    pq.write_table(
-        pa.Table.from_pylist(pdfs, schema=PAGES_SCHEMA),
-        str(corpus / "part-pdf.parquet"),
-    )
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    assert run_incremental(spark, str(corpus), out, ck, mixed=True) >= 1
-    got = {
-        r["url"]: r["text"] for r in spark.read.parquet(out).collect()
-    }
-    want = {r["url"]: r["text"] for r in html_rows + pdfs}
-    assert got == want
-    # replay: nothing new → no duplicates
-    run_incremental(spark, str(corpus), out, ck, mixed=True)
-    assert spark.read.parquet(out).count() == len(want)
-
-
 def test_layout_plan_one_exchange(spark, pdf_rows):
     """Scale pin: the whole geometric assembly costs exactly ONE
     shuffle (url, carrying lines) behind ONE Python boundary that

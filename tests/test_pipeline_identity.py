@@ -58,7 +58,7 @@ def test_identity_on_adversarial_rows(spark):
     import datetime
 
     from clara_ocr_spark.extract_rules import reference_extract
-    from clara_ocr_spark.streaming.incremental import PAGES_SPARK_SCHEMA
+    from clara_ocr_spark.sources.formats import PAGES_SPARK_SCHEMA
 
     ts = datetime.datetime(2026, 1, 1)
     payloads = [
@@ -253,7 +253,7 @@ def test_markup_byte_identity_vs_reference(spark, corpus_path):
     import datetime
 
     from clara_ocr_spark.extract_rules import reference_extract_markup
-    from clara_ocr_spark.streaming.incremental import PAGES_SPARK_SCHEMA
+    from clara_ocr_spark.sources.formats import PAGES_SPARK_SCHEMA
 
     ts = datetime.datetime(2026, 1, 1)
     payloads = [
@@ -302,7 +302,7 @@ def test_hqbin_recovers_low_quality_doc(spark):
     by the loose second pass; a healthy page is untouched."""
     import datetime
 
-    from clara_ocr_spark.streaming.incremental import PAGES_SPARK_SCHEMA
+    from clara_ocr_spark.sources.formats import PAGES_SPARK_SCHEMA
 
     ts = datetime.datetime(2026, 1, 1)
     rows = [
@@ -332,7 +332,7 @@ def test_committed_encap_golden(spark):
     import os
 
     from clara_ocr_spark.sources.corpus import gen_page
-    from clara_ocr_spark.streaming.incremental import PAGES_SPARK_SCHEMA
+    from clara_ocr_spark.sources.formats import PAGES_SPARK_SCHEMA
 
     path = os.path.join(
         os.path.dirname(__file__), "goldens", "encap_seed42_60.json"
@@ -361,7 +361,7 @@ def test_committed_goldens(spark, tmp_path):
     import os
 
     from clara_ocr_spark.sources.corpus import gen_page
-    from clara_ocr_spark.streaming.incremental import PAGES_SPARK_SCHEMA
+    from clara_ocr_spark.sources.formats import PAGES_SPARK_SCHEMA
 
     path = os.path.join(os.path.dirname(__file__), "goldens", "extract_seed42_60.json")
     with open(path) as f:

@@ -152,44 +152,3 @@ def test_parse_sitemap_fuzz_never_raises(raw):
 ).via('discovered failure')
 def test_parse_sitemap_fuzz_gzip_prefixed(raw):
     assert isinstance(parse_sitemap_bytes(b"\x1f\x8b" + raw), list)
-
-
-def test_sitemap_walk_tree_orphan_and_cycle(spark):
-    """Two-level index tree walks to its leaves with lineage; an
-    orphan sitemap (referenced by nothing, referencing nothing as a
-    root) is itself a root; a self-citing index terminates at the
-    depth cap instead of looping."""
-    from clara_ocr_spark.sources.sitemap import sitemap_walk
-
-    def urlset(*locs):
-        return ("<urlset>" + "".join(
-            f"<url><loc>{u}</loc></url>" for u in locs
-        ) + "</urlset>").encode()
-
-    def index(*locs):
-        return ("<sitemapindex>" + "".join(
-            f"<sitemap><loc>{u}</loc></sitemap>" for u in locs
-        ) + "</sitemapindex>").encode()
-
-    rows = [
-        ("https://s/root.xml", index("https://s/a.xml", "https://s/b.xml")),
-        ("https://s/a.xml", urlset("https://s/p1", "https://s/p2")),
-        ("https://s/b.xml", index("https://s/c.xml")),
-        ("https://s/c.xml", urlset("https://s/p3")),
-        ("https://s/orphan.xml", urlset("https://s/p9")),
-        ("https://s/loop.xml", index("https://s/loop.xml")),  # hostile
-    ]
-    df = spark.createDataFrame(
-        [(u, bytearray(p)) for u, p in rows], "url string, payload binary"
-    )
-    got = {
-        (r["root"], r["depth"], r["sitemap_url"], r["loc"])
-        for r in sitemap_walk(df, max_depth=3).collect()
-    }
-    assert got == {
-        ("https://s/root.xml", 1, "https://s/a.xml", "https://s/p1"),
-        ("https://s/root.xml", 1, "https://s/a.xml", "https://s/p2"),
-        ("https://s/root.xml", 2, "https://s/c.xml", "https://s/p3"),
-        ("https://s/orphan.xml", 0, "https://s/orphan.xml",
-         "https://s/p9"),
-    }  # the self-loop contributes nothing and the walk terminates

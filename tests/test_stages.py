@@ -1,5 +1,5 @@
-"""Stage tests: feedback election/apply, doubts, consistency,
-pattern growth, checkpoint/resume, incremental streaming driver."""
+"""Stage tests: feedback election/apply, consistency, pattern growth,
+checkpoints and the incremental high-water mark."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from clara_ocr_spark.plans.checkpoint import (
     append_increment,
     checkpoint,
     incremental_delta,
-    resume_or_compute,
 )
 from clara_ocr_spark.stages.classify import classify
 from clara_ocr_spark.stages.consist import (
@@ -29,9 +28,7 @@ from clara_ocr_spark.stages.feedback import (
     STRUCT_ACTS_SCHEMA,
     apply_feedback,
     apply_structural_acts,
-    doubts,
     elect_labels,
-    merge_acts,
 )
 from clara_ocr_spark.stages.patterns import (
     PATT_ACTS_SCHEMA,
@@ -108,19 +105,6 @@ def test_apply_feedback_overrides_and_rescores(spark, labeled):
     assert row.label == "boilerplate" and row.score == 10
     # extraction changes accordingly: that block's text disappears
     assert out.count() == labeled.count()
-
-
-def test_merge_acts_existing_wins(spark):
-    old = _acts(spark, [(1, "u1", 0, "content", "arbiter", TS)])
-    new = _acts(
-        spark,
-        [
-            (1, "u1", 0, "noise", "anon", TS),  # same act_id: ignored
-            (2, "u2", 1, "noise", "anon", TS),
-        ],
-    )
-    got = {r.act_id: r.label for r in merge_acts(old, new).collect()}
-    assert got == {1: "content", 2: "noise"}
 
 
 def test_merge_upsert_semantics(spark, tmp_path):
@@ -362,34 +346,6 @@ def test_structural_split_offsets_sanitized(spark):
     assert all(r.text_len == 2 for r in rows)
 
 
-# -- doubts ------------------------------------------------------------
-
-
-def test_doubts_ranked_and_capped(spark, labeled):
-    d = doubts(labeled, max_doubts=25).collect()
-    assert 0 < len(d) <= 25
-    ranks = [r.doubt_rank for r in d]
-    assert ranks == sorted(ranks) == list(range(1, len(d) + 1))
-    scores = [r.score for r in d]
-    assert scores == sorted(scores)  # most uncertain first
-    assert all(r.pos >= 0 for r in d)  # sentinels never surface
-
-
-def test_doubts_plan_topk_not_global_window(spark, labeled):
-    """The cap must compile to TakeOrderedAndProject (per-partition
-    partial top-k); the rank window may only ever see the ≤ max_doubts
-    survivors — no corpus-wide single-task sort (VERDICT r1 #4)."""
-    plan = (
-        doubts(labeled, max_doubts=25)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    # the Window must sit ABOVE the top-k, never on the raw corpus
-    assert plan.index("Window") < plan.index("TakeOrderedAndProject")
-
-
 # -- consistency + lineage ----------------------------------------------
 
 
@@ -561,22 +517,7 @@ def test_two_pass_classify_stable(spark, corpus_path):
     assert diff == 0
 
 
-# -- checkpoint / resume / incremental ------------------------------------
-
-
-def test_checkpoint_resume(spark, corpus_path, tmp_path):
-    pages = read_pages(spark, corpus_path)
-    path = str(tmp_path / "blocks_ckpt")
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return classify(segment(pages))
-
-    a = resume_or_compute(spark, path, compute)
-    b = resume_or_compute(spark, path, compute)
-    assert calls["n"] == 1  # second call resumed from checkpoint
-    assert a.count() == b.count()
+# -- checkpoint / incremental ------------------------------------
 
 
 def test_incremental_delta_and_append(spark, corpus_path, tmp_path):
@@ -592,88 +533,6 @@ def test_incremental_delta_and_append(spark, corpus_path, tmp_path):
     assert done.select("url").distinct().count() == pages.count()
 
 
-def test_streaming_incremental_driver(spark, tmp_path):
-    from clara_ocr_spark.sources.corpus import ensure_corpus
-    from clara_ocr_spark.streaming.incremental import run_incremental
-
-    corpus = str(tmp_path / "corpus")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    ensure_corpus(corpus, n=40, seed=9)
-    n1 = run_incremental(spark, corpus, out, ck)
-    assert n1 >= 1
-    got1 = spark.read.parquet(out).count()
-    assert got1 == 40
-    # second invocation: nothing new → no duplicate outputs
-    run_incremental(spark, corpus, out, ck)
-    assert spark.read.parquet(out).count() == 40
-    # new shards arrive → only they are processed
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from clara_ocr_spark.sources.corpus import PAGES_SCHEMA, gen_page
-
-    rows = [gen_page(i, seed=77) for i in range(40, 56)]
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=PAGES_SCHEMA),
-        os.path.join(corpus, "part-late.parquet"),
-    )
-    run_incremental(spark, corpus, out, ck)
-    assert spark.read.parquet(out).count() == 56
-
-
-def test_streaming_incremental_curate(spark, tmp_path):
-    """Incremental curation: per-batch full curation + cross-batch
-    exact-dup rejection. A byte-identical page arriving in a LATER
-    batch is rejected as duplicate against the curated high-water
-    mark; outputs still partition the inputs exactly."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from clara_ocr_spark.curate import REASON_DUPLICATE
-    from clara_ocr_spark.sources.corpus import (
-        PAGES_SCHEMA,
-        ensure_corpus,
-        gen_page,
-    )
-    from clara_ocr_spark.streaming.incremental import run_incremental_curate
-
-    corpus = str(tmp_path / "corpus")
-    cur = str(tmp_path / "cur")
-    rej = str(tmp_path / "rej")
-    ck = str(tmp_path / "ck")
-    ensure_corpus(corpus, n=30, seed=13)
-    assert run_incremental_curate(spark, corpus, cur, rej, ck) >= 1
-    n_cur1 = spark.read.parquet(cur).count()
-    n_rej1 = spark.read.parquet(rej).count()
-    assert n_cur1 + n_rej1 == 30
-    curated_urls = {
-        r.url for r in spark.read.parquet(cur).select("url").collect()
-    }
-    # late batch: a byte-identical re-crawl of a curated page under a
-    # new url, plus one genuinely new page
-    src = next(
-        r for r in (gen_page(i, seed=13) for i in range(30))
-        if r["url"] in curated_urls
-    )
-    recrawl = dict(src)
-    recrawl["url"] = "https://mirror.example/recrawl"
-    late = [recrawl, gen_page(997, seed=31)]
-    pq.write_table(
-        pa.Table.from_pylist(late, schema=PAGES_SCHEMA),
-        os.path.join(corpus, "part-late.parquet"),
-    )
-    run_incremental_curate(spark, corpus, cur, rej, ck)
-    rejected = {
-        r.url: r.reason
-        for r in spark.read.parquet(rej).collect()
-    }
-    assert rejected["https://mirror.example/recrawl"] == REASON_DUPLICATE
-    assert (
-        spark.read.parquet(cur).count() + len(rejected) == 32
-    )
-
-
 def test_consistency_on_empty_frame(spark):
     """Empty incremental delta: zero violations, not null crash."""
     from clara_ocr_spark.stages.segment import BLOCKS_SCHEMA
@@ -681,53 +540,6 @@ def test_consistency_on_empty_frame(spark):
     empty = spark.createDataFrame([], BLOCKS_SCHEMA)
     labeled = classify(empty)
     assert_consistent(labeled)  # must not raise
-
-
-def test_zones_from_geometry_dominant_cluster():
-    """blockfind analogue: the largest depth-proximity cluster is the
-    main zone; outliers (chrome at different tree depth) are zone 1."""
-    from clara_ocr_spark.domparse import parse_blocks
-    from clara_ocr_spark.stages.segment import zones_from_geometry
-
-    html = (
-        b"<body><nav><ul><li><a href='/'>deep nav chrome</a></li></ul></nav>"
-        b"<p>one</p><p>two</p><p>three</p>"
-        b"<footer><div><div><span>deep footer</span></div></div></footer></body>"
-    )
-    blocks = parse_blocks(html)
-    zones = zones_from_geometry(blocks, depth_tol=0)
-    by_zone = {}
-    for b, z in zip(blocks, zones):
-        by_zone.setdefault(z, []).append(b.text)
-    assert by_zone[0] == ["one", "two", "three"]
-    assert all(z == 1 for b, z in zip(blocks, zones) if b.text not in ("one", "two", "three"))
-    assert zones_from_geometry([], 1) == []
-
-
-def test_per_host_patterns_do_not_leak(spark, labeled):
-    """Per-site libraries (the per-book font): a fingerprint trained on
-    host A must not label pages of host B."""
-    from clara_ocr_spark.stages.patterns import (
-        classify_by_host,
-        grow_patterns_by_host,
-    )
-    from clara_ocr_spark.stages.segment import with_host
-
-    lib = grow_patterns_by_host(labeled, min_support=2)
-    assert lib.count() > 0
-    hosts_per_fp = (
-        lib.groupBy("fingerprint").count().filter("count > 1").count()
-    )
-    out = classify_by_host(with_host(labeled.drop("pattern_label")), lib)
-    hit = out.filter(F.col("pattern_label").isNotNull())
-    assert hit.count() > 0
-    # every hit's (host, tag_path) must exist in the library
-    bad = (
-        hit.select("host", F.col("tag_path").alias("fingerprint"))
-        .join(lib.select("host", "fingerprint"), ["host", "fingerprint"], "left_anti")
-        .count()
-    )
-    assert bad == 0
 
 
 # -- spelling stage (step_12 beyond the reference stub) -----------------

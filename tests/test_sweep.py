@@ -1,75 +1,27 @@
-"""Sweep harness (selthresh analogue) tests."""
+"""The ``--set name=value`` config surface shared by the extraction
+and curation jobs."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import pytest
 
 from clara_ocr_spark.config import ExtractConfig
-from clara_ocr_spark.pipeline import read_pages
-from clara_ocr_spark.plans.sweep import best_config, sweep
-from clara_ocr_spark.stages.classify import classify
-from clara_ocr_spark.stages.segment import segment
+from clara_ocr_spark.curate import CurateConfig
 
 
 def test_config_from_args_roundtrip():
     cfg = ExtractConfig.from_args(["min_text_len=20", "link_density_max=0.4"])
     assert cfg.min_text_len == 20 and cfg.link_density_max == 0.4
-    try:
-        ExtractConfig.from_args(["nope=1"])
-        raise AssertionError("should reject unknown var")
-    except ValueError:
-        pass
-
-
-def test_sweep_monotone_and_matches_default(spark, corpus_path):
-    pages = read_pages(spark, corpus_path)
-    blocks = classify(segment(pages))
-    grid = [
-        ExtractConfig(min_text_len=m, link_density_max=ld)
-        for m in (5, 10, 40)
-        for ld in (0.3, 0.5)
-    ]
-    swept = {r.cfg_id: r for r in sweep(blocks, grid).collect()}
-    assert len(swept) == len(grid)
-    # stricter min_text_len can only reduce kept content
-    for ld in (0.3, 0.5):
-        ids = [i for i, c in enumerate(grid) if c.link_density_max == ld]
-        by_m = sorted((grid[i].min_text_len, swept[i].n_content_blocks) for i in ids)
-        kept = [n for _m, n in by_m]
-        assert kept == sorted(kept, reverse=True)
-    # the default config's swept label counts == the real classify stage
-    default_id = next(
-        i for i, c in enumerate(grid)
-        if c.min_text_len == 10 and c.link_density_max == 0.5
+    cur = CurateConfig.from_args(
+        ["min_tokens=7", "jaccard_tau=0.8", "line_dedup_min_df=3",
+         "line_dedup_per_host=1"]
     )
-    real_content = blocks.filter(
-        (F.col("label") == "content") & (F.col("pos") >= 0)
-    ).count()
-    assert swept[default_id].n_content_blocks == real_content
-
-
-def test_best_config_coverage_floor(spark, corpus_path):
-    pages = read_pages(spark, corpus_path)
-    blocks = classify(segment(pages))
-    grid = [ExtractConfig(min_text_len=m) for m in (5, 10, 1000)]
-    swept = sweep(blocks, grid)
-    total = swept.filter(F.col("cfg_id") == 0).first().total_content_chars
-    cfg_id, m, _ld = best_config(swept, min_coverage_chars=total // 2)
-    assert m != 1000  # the keep-nothing degenerate config is rejected
-
-
-def test_engine_sweep(spark, corpus_path):
-    from clara_ocr_spark.pipeline import read_pages
-    from clara_ocr_spark.plans.sweep import sweep_engines
-    from clara_ocr_spark.stages.classify import classify
-    from clara_ocr_spark.stages.engines import ENGINES, pattern_features
-    from clara_ocr_spark.stages.segment import segment
-
-    blocks = segment(read_pages(spark, corpus_path)).localCheckpoint()
-    patterns = pattern_features(classify(blocks))
-    rows = {r.engine: r for r in sweep_engines(blocks, patterns).collect()}
-    assert set(rows) == set(ENGINES)
-    for r in rows.values():
-        assert r.n_strong + r.n_weak + r.n_unmatched > 0
-    # the containment engine must dominate on a self-trained library
-    assert rows["skel"].n_strong >= rows["shape"].n_strong
+    assert (cur.min_tokens, cur.jaccard_tau) == (7, 0.8)
+    assert (cur.line_dedup_min_df, cur.line_dedup_per_host) == (3, 1)
+    assert CurateConfig.from_args([]) == CurateConfig()
+    for cls in (ExtractConfig, CurateConfig):
+        with pytest.raises(ValueError, match="unknown config var: nope"):
+            cls.from_args(["nope=1"])
+    # a combination the dataclass rejects is the same ValueError
+    with pytest.raises(ValueError, match="line_dedup_min_df"):
+        CurateConfig.from_args(["line_dedup_per_host=1"])
