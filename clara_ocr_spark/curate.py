@@ -46,6 +46,7 @@ from .queries import (
     bigram_nll,
     dsir_logweights,
     spark_hash60,
+    winnow_pairs,
 )
 
 REASON_TOO_SHORT = "too_short"
@@ -336,50 +337,12 @@ def winnow_dup_pairs(docs: DataFrame, min_pm: int) -> DataFrame:
     ≥ 11 normalized chars are guaranteed a shared fingerprint), the
     complement of the vocabulary-sensitive MinHash tier: a page that
     embeds another page verbatim inside much more text has low token
-    Jaccard but high containment.  Same chain as the oracle-checked
-    ``winnow_near_dup`` catalog entry via the shared
-    ``winnow_select``; the df ≤ FP_MAX_DF hot-fingerprint cap bounds
-    every join bucket (boilerplate fingerprints are not dup signal
-    and an f-doc fingerprint contributes f² pairs)."""
-    from .queries import FP_MAX_DF, winnow_select
-
-    sel = winnow_select(docs, key="url")
-    hs = (
-        sel.select("url", "fp_hash")
-        .distinct()
-        # the corpus-side winnowing window runs once; df gate, pair
-        # join sides and per-doc sizes read the materialized relation
-        .localCheckpoint(eager=False)
-    )
-    dfq = hs.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("nd"))
-    kept = (
-        hs.join(dfq.filter(F.col("nd") <= FP_MAX_DF), "fp_hash")
-        .select("url", "fp_hash")
-        .localCheckpoint(eager=False)
-    )
-    m = kept.groupBy("url").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = kept.select(F.col("url").alias("i_id"), "fp_hash")
-    b = kept.select(F.col("url").alias("j_id"), "fp_hash")
-    p = (
-        a.join(b, "fp_hash")
-        .filter(F.col("i_id") < F.col("j_id"))
-        .groupBy("i_id", "j_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        p.join(
-            m.select(F.col("url").alias("i_id"), F.col("n_fp").alias("na")),
-            "i_id",
-        )
-        .join(
-            m.select(F.col("url").alias("j_id"), F.col("n_fp").alias("nb")),
-            "j_id",
-        )
-        .filter(
-            F.expr("(1000 * shared) div least(na, nb)") >= F.lit(min_pm)
-        )
-        .select("i_id", "j_id")
-    )
+    Jaccard but high containment.  ``queries.winnow_pairs`` is the
+    chain, shared with the oracle-checked ``winnow_near_dup`` catalog
+    entry; its df ≤ FP_MAX_DF hot-fingerprint cap bounds every join
+    bucket (boilerplate fingerprints are not dup signal and an f-doc
+    fingerprint contributes f² pairs)."""
+    return winnow_pairs(docs, "url", min_pm).select("i_id", "j_id")
 
 
 def near_dup_canonical(
@@ -389,8 +352,8 @@ def near_dup_canonical(
     cluster (canonical = lexicographic-min url, deterministic).
     MinHash over word-2-gram shingles → 2 band buckets (equi-join
     candidates) → exact token-set Jaccard ≥ tau → min-label
-    components — the SAME chain as the oracle-checked
-    ``dedup_canonicalize`` catalog entry, via the shared helpers.
+    components.  The oracle-checked ``dedup_canonicalize`` catalog
+    entry computes through this function.
     Docs in no cluster are absent from the result.
 
     With ``winnow_pm > 0`` the winnowing-containment pairs

@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-CHECKPOINT_FORMAT = os.environ.get("SPARK_GRAFT_CHECKPOINT_FORMAT", "parquet")
+CHECKPOINT_FORMAT = "parquet"
 
 
 def _done_marker(path: str) -> str:

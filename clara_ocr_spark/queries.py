@@ -1331,29 +1331,19 @@ def dedup_canonicalize(spark, sf_dir):
     doc_id per cluster) → every document labeled with its canonical
     and a keep/drop flag. Oracle: same pipeline in SQL with a
     recursive-CTE transitive closure."""
-    # fanned by doc_id: the minhash fold and tokenize below otherwise
-    # run on the single-row-group scan's one task
+    from .curate import near_dup_canonical
+
+    # fanned by doc_id: the minhash fold and tokenize inside the stage
+    # otherwise run on the single-row-group scan's one task
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
-    toks = _tokens(F.lower(F.col("text")))
-    # materialize the signature bands and token sets ONCE — both join
-    # sides read them, and Catalyst would otherwise re-tokenize and
-    # re-minhash the full corpus per side (the `banded` discipline of
-    # _near_dup_pairs; measured ~2× on the composed pipeline)
-    b = d.select(
-        "doc_id", F.explode(_minhash_bands(toks)).alias("bucket")
-    ).localCheckpoint(eager=False)
-    cand = _band_candidates(b, "doc_id")
-    ws = d.select(
-        "doc_id", F.array_distinct(F.array_sort(toks)).alias("toks")
-    ).localCheckpoint(eager=False)
-    pairs = _jaccard_pairs(cand, ws, "doc_id", 0.7)
-    comp = _min_label_components(pairs)
-    return d.select("doc_id").join(
-        comp, d["doc_id"] == comp["node"], "left"
-    ).select(
+    near = near_dup_canonical(
+        d.select(F.col("doc_id").alias("url"), "text"), 0.7
+    ).withColumnRenamed("url", "doc_id")
+    canon = F.coalesce("canonical_url", "doc_id")
+    return d.select("doc_id").join(near, "doc_id", "left").select(
         "doc_id",
-        F.coalesce("cluster", "doc_id").alias("canonical_id"),
-        (F.coalesce("cluster", "doc_id") == F.col("doc_id")).alias("is_canonical"),
+        canon.alias("canonical_id"),
+        (canon == F.col("doc_id")).alias("is_canonical"),
     )
 
 
@@ -4200,28 +4190,18 @@ def deskew_search(spark, sf_dir):
 
     Scale shape: like the reference's per-page search, this is
     embarrassingly row-local — the word-length array is bound ONCE per
-    doc (``_let``; a bare column reference would re-split the text per
-    grid point), the whole search is one JVM higher-order expression,
-    zero shuffles, zero Python."""
+    doc, the whole search is one JVM higher-order expression, zero
+    shuffles, zero Python.  Computed through the ``--deskew`` job
+    stage, ``stages/calibrate.deskew_profile``."""
+    from .stages.calibrate import deskew_profile
+
     d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.col("text")), r"\s+")
-    lens = F.transform(ws, lambda w: F.length(w))
-    scores = _let(
-        lens,
-        lambda ls: F.transform(
-            F.sequence(F.lit(1), F.lit(12)),
-            lambda t: (t * F.size(F.filter(ls, lambda l: l >= t))).cast(
-                "bigint"
-            ),
-        ),
-    )
-    return d.select(
-        "doc_id",
-        _let(
-            scores,
-            lambda sc: F.array_position(sc, F.array_max(sc)).cast("int"),
-        ).alias("best_t"),
-        _let(scores, lambda sc: F.array_max(sc)).alias("best_score"),
+    return deskew_profile(
+        d.select(F.col("doc_id").alias("url"), "text")
+    ).select(
+        F.col("url").alias("doc_id"),
+        F.col("deskew_t").alias("best_t"),
+        F.col("deskew_score").alias("best_score"),
     )
 
 
@@ -4382,19 +4362,17 @@ def spell_correct(spark, sf_dir):
     100 TB shape: the variant explode multiplies tokens by ~len+1 but
     the join is hash-partitioned on short strings; the expensive
     verify runs only on candidates (same cheap-filter → expensive-
-    verify split as minhash/simhash). The stage twin
-    (stages/spell.py:correct_spelling) applies elected corrections to
-    block text behind an off-by-default config gate."""
+    verify split as minhash/simhash). Vocabulary and election are the
+    ``stages/spell.py`` stage's own (``build_vocab``,
+    ``elect_corrections``); ``correct_spelling`` there applies the
+    elected corrections to block text behind an off-by-default config
+    gate."""
+    from .stages.spell import build_vocab, elect_corrections
+
     # fanned out of the single-row-group documents scan (one task
     # otherwise does all the tokenize/hash map work)
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
-    toks = d.select(
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
-    ).filter(F.col("tok").rlike("^[a-z]{4,16}$"))
-    vocab = (
-        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 50)
-    )
+    vocab = build_vocab(d, 50)
     wrongs = (
         vocab.filter(F.length("tok") >= 5)
         .select(
@@ -4405,40 +4383,8 @@ def spell_correct(spark, sf_dir):
         .distinct()
         .join(vocab, "tok", "left_anti")
     )
-
-    def variants(df):
-        t = F.col("tok")
-        var = F.array_append(
-            F.transform(
-                F.sequence(F.lit(1), F.length(t)),
-                lambda i: F.concat(
-                    t.substr(F.lit(1), i - 1), t.substr(i + 1, F.lit(100))
-                ),
-            ),
-            t,
-        )
-        return df.select("*", F.explode(var).alias("var"))
-
-    cand = (
-        variants(wrongs.select("tok"))
-        .withColumnRenamed("tok", "wrong")
-        .join(
-            variants(vocab).select(
-                F.col("tok").alias("suggestion"), "c", "var"
-            ),
-            "var",
-        )
-        .filter(F.levenshtein("wrong", "suggestion") == 1)
-        .select("wrong", "suggestion", "c")
-        .distinct()
-    )
-    w = Window.partitionBy("wrong").orderBy(F.desc("c"), "suggestion")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "wrong", "suggestion", F.col("c").cast("bigint").alias("vocab_count")
-        )
+    return elect_corrections(wrongs, vocab).select(
+        "wrong", "suggestion", F.col("c").cast("bigint").alias("vocab_count")
     )
 
 
@@ -7893,7 +7839,11 @@ def url_trap_audit(spark, sf_dir):
     map-side-partial distinct then one host-keyed agg; integer
     per-mille keeps the hash exact.  The Zipf host key is safe here
     because the heavy lifting (distinct urls) happened BEFORE the
-    host rollup, which only merges counters."""
+    host rollup, which only merges counters.  Computed through the
+    ``extract_job --trap-audit`` stage,
+    ``stages/crawl_audit.url_trap_audit_urls``."""
+    from .stages.crawl_audit import url_trap_audit_urls
+
     e = _t(spark, sf_dir, "events")
     url = F.concat(
         F.lit("h"),
@@ -7906,32 +7856,7 @@ def url_trap_audit(spark, sf_dir):
             F.concat(F.lit("?sid="), F.col("event_id").cast("string")),
         ).otherwise(F.lit("")),
     )
-    u = (
-        e.select(url.alias("url"))
-        .distinct()
-        .select(
-            "url", F.regexp_replace("url", r"\?.*$", "").alias("clean")
-        )
-    )
-    h = u.select(
-        F.split_part(F.col("url"), F.lit("/"), F.lit(1)).alias("host"),
-        "url",
-        "clean",
-    )
-    n = F.count(F.lit(1))
-    nc = F.countDistinct("clean")
-    return (
-        h.groupBy("host")
-        .agg(
-            n.cast("bigint").alias("n_urls"),
-            nc.cast("bigint").alias("n_clean"),
-            (n - nc).cast("bigint").alias("n_param_variants"),
-        )
-        .withColumn(
-            "trap_pm",
-            F.expr("(1000 * n_param_variants) div n_urls").cast("bigint"),
-        )
-    )
+    return url_trap_audit_urls(e.select(url.alias("url")))
 
 
 def _robots_rx(pattern: str) -> str:
@@ -9856,6 +9781,57 @@ FP_MAX_DF = 16
 NEAR_DUP_MIN_PM = 500
 
 
+def winnow_pairs(d: DataFrame, key: str, min_pm: int) -> DataFrame:
+    """(key, text) → (i_id, j_id, shared, containment_pm): document
+    pairs (i_id < j_id) whose winnowing-fingerprint sets overlap by
+    >= ``min_pm`` per-mille of the smaller set, after the
+    df <= FP_MAX_DF hot-fingerprint cap.  The one fingerprint-pair
+    chain behind ``winnow_near_dup`` and ``curate.winnow_dup_pairs``."""
+    sel = winnow_select(d, key=key)
+    hs = (
+        sel.select(key, "fp_hash")
+        .distinct()
+        # fingerprint-space-bounded; consumers: df gate, pair join
+        # (twice), per-doc sizes — materialize so the corpus-side
+        # winnowing window runs once
+        .localCheckpoint(eager=False)
+    )
+    df = hs.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("nd"))
+    kept = (
+        hs.join(df.filter(F.col("nd") <= FP_MAX_DF), "fp_hash")
+        .select(key, "fp_hash")
+        .localCheckpoint(eager=False)
+    )
+    m = kept.groupBy(key).agg(F.count(F.lit(1)).alias("n_fp"))
+    a = kept.select(F.col(key).alias("i_id"), "fp_hash")
+    b = kept.select(F.col(key).alias("j_id"), "fp_hash")
+    p = (
+        a.join(b, "fp_hash")
+        .filter(F.col("i_id") < F.col("j_id"))
+        .groupBy("i_id", "j_id")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return (
+        p.join(
+            m.select(F.col(key).alias("i_id"), F.col("n_fp").alias("n_a")),
+            "i_id",
+        )
+        .join(
+            m.select(F.col(key).alias("j_id"), F.col("n_fp").alias("n_b")),
+            "j_id",
+        )
+        .select(
+            "i_id",
+            "j_id",
+            F.col("shared").cast("bigint").alias("shared"),
+            F.expr("(1000 * shared) div least(n_a, n_b)")
+            .cast("bigint")
+            .alias("containment_pm"),
+        )
+        .filter(F.col("containment_pm") >= min_pm)
+    )
+
+
 @q(
     "winnow_near_dup",
     f"""
@@ -9898,50 +9874,13 @@ def winnow_near_dup(spark, sf_dir):
     every join bucket and makes the pair relation linear in the
     corpus); the pair rollup and both size joins partially aggregate
     map-side.  All scoring is integer per-mille."""
-    sel = winnow_select(_t(spark, sf_dir, "documents"))
-    hs = (
-        sel.select("doc_id", "fp_hash")
-        .distinct()
-        # fingerprint-space-bounded; consumers: df gate, pair join
-        # (twice), per-doc sizes — materialize so the corpus-side
-        # winnowing window runs once
-        .localCheckpoint(eager=False)
-    )
-    df = hs.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("nd"))
-    kept = (
-        hs.join(df.filter(F.col("nd") <= FP_MAX_DF), "fp_hash")
-        .select("doc_id", "fp_hash")
-        .localCheckpoint(eager=False)
-    )
-    m = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = kept.select(F.col("doc_id").alias("doc_a"), "fp_hash")
-    b = kept.select(F.col("doc_id").alias("doc_b"), "fp_hash")
-    p = (
-        a.join(b, "fp_hash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        p.join(
-            m.select(F.col("doc_id").alias("doc_a"),
-                     F.col("n_fp").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            m.select(F.col("doc_id").alias("doc_b"),
-                     F.col("n_fp").alias("n_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("shared").cast("bigint").alias("shared"),
-            F.expr("(1000 * shared) div least(n_a, n_b)")
-            .cast("bigint")
-            .alias("containment_pm"),
-        )
-        .filter(F.col("containment_pm") >= NEAR_DUP_MIN_PM)
+    return winnow_pairs(
+        _t(spark, sf_dir, "documents"), "doc_id", NEAR_DUP_MIN_PM
+    ).select(
+        F.col("i_id").alias("doc_a"),
+        F.col("j_id").alias("doc_b"),
+        "shared",
+        "containment_pm",
     )
 
 

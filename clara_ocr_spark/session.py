@@ -41,11 +41,8 @@ def get_spark(
         # local[32], fresh JVM, 100k docs: 2048 ≈ 36k docs/s beats
         # 16384 ≈ 29k (bigger frames lose more to allocation than they
         # save in per-batch overhead); within a long-warm JVM the
-        # ranking flips, so tune per deployment via env.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"),
-        )
+        # ranking flips, so a long-lived deployment should re-measure.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -58,15 +55,12 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         # Local corpora are tiny vs the 128 MB default split size; size
         # splits so small-file scans still fan out across all cores (on
-        # a real cluster the default is right — override via env).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
+        # a real cluster the 128 MB default is right).
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         .getOrCreate()
     )

@@ -242,28 +242,6 @@ def _tokens(buf: bytes):
             i = j
 
 
-#: Fast path (same fast-path/fallback discipline as ``fastparse`` vs
-#: ``domparse`` for HTML): ONE compiled-regex pass with the
-#: interpretation fused into the match loop — scanning happens in C,
-#: dispatch on the integer ``lastindex``, operators compared as bytes.
-#: Valid only when the stream has no escape sequences and every
-#: paren/angle construct matches cleanly; the ``other`` catch-all
-#: makes the pattern TOTAL over non-whitespace bytes, so any byte the
-#: fast grammar can't place (unbalanced paren, stray ``<``/``{``)
-#: bails to the exact byte-scanner interpreter — the two paths can
-#: never silently disagree, and a fuzz test pins them equal.
-_FAST_TOK_RE = re.compile(
-    rb"(\([^()]*\))"  # 1 literal string, no escapes/nesting
-    rb"|(<<|>>)"  # 2 dict marks (ignored in content)
-    rb"|(<[^<>]*>)"  # 3 hex string
-    rb"|([\[\]])"  # 4 array marks
-    rb"|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 5 name
-    rb"|([-+.0-9][-+.0-9eE]*)"  # 6 number
-    rb"|(%[^\r\n]*)"  # 7 comment
-    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"  # 8 operator
-    rb"|([^\x00\t\n\x0c\r ])"  # 9 anything else → bail
-)
-
 _HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
 
 
@@ -274,17 +252,18 @@ def _hex_to_text(body: bytes) -> str:
     return bytes.fromhex(digits.decode("ascii")).decode("latin-1")
 
 
-#: Fastest path: statement-level block matching.  The most common
-#: emission shape in real generators (and this corpus) is one text
-#: object per run with absolute positioning —
+#: Fast path (same fast-path/fallback discipline as ``fastparse`` vs
+#: ``domparse`` for HTML): statement-level block matching.  The most
+#: common emission shape in real generators (and this corpus) is one
+#: text object per run with absolute positioning —
 #: ``BT  /F n Tf  x y Td|1 0 0 1 x y Tm  (s) Tj|<hex> Tj|[(a) k (b)] TJ  ET``
 #: — which needs NO interpreter state across statements, so the whole
 #: block collapses into ONE C-regex match (≈5 token dispatches and a
 #: stack per run on the token path).  The matcher must consume the
 #: ENTIRE stream as a sequence of such blocks; the first byte it
-#: cannot place bails to ``_page_runs_fast`` (which itself bails to
-#: the exact interpreter) — three tiers, never a silent disagreement,
-#: pinned by the TestFastPath differential fuzz.
+#: cannot place bails to the exact interpreter ``_page_runs`` — two
+#: tiers, never a silent disagreement, pinned by the TestFastPath
+#: differential fuzz.
 _B_WS = rb"[\x00\t\n\x0c\r ]"  # PDF whitespace, NOT \s (\x0b differs)
 _B_NUM = rb"[-+.0-9][-+.0-9eE]*"
 _BLOCK_RE = re.compile(
@@ -360,134 +339,6 @@ def _page_runs_blocks(stream: bytes, page: int):
                     Run(page, round(cx, 2), round(cx + w, 2), ry, size, b)
                 )
         pos = m.end()
-    return runs
-
-
-def _page_runs_fast(stream: bytes, page: int):
-    """Fused tokenize+interpret; returns the run list, or None when
-    the stream needs the exact path. Semantics identical to
-    ``_page_runs`` (pinned by TestFastPath differential fuzz)."""
-    if b"\\" in stream:
-        return None
-    runs: List[Run] = []
-    stack: List = []
-    arr: Optional[List] = None
-    size = 12.0
-    leading = 0.0
-    ex = ey = cx = cy = 0.0
-    in_text = False
-    for m in _FAST_TOK_RE.finditer(stream):
-        gi = m.lastindex
-        if gi == 8:  # operator (most frequent token kind)
-            op = m.group()
-            if op == b"Tj":
-                if stack and isinstance(stack[-1], str) and in_text:
-                    s = stack[-1]
-                    w = CHAR_W * size * len(s)
-                    if s:
-                        runs.append(
-                            Run(
-                                page,
-                                round(cx, 2),
-                                round(cx + w, 2),
-                                round(cy, 2),
-                                size,
-                                s,
-                            )
-                        )
-                    cx += w
-            elif op == b"TJ":
-                if stack and isinstance(stack[-1], list) and in_text:
-                    for el in stack[-1]:
-                        if isinstance(el, str):
-                            w = CHAR_W * size * len(el)
-                            if el:
-                                runs.append(
-                                    Run(
-                                        page,
-                                        round(cx, 2),
-                                        round(cx + w, 2),
-                                        round(cy, 2),
-                                        size,
-                                        el,
-                                    )
-                                )
-                            cx += w
-                        else:
-                            cx -= float(el) / 1000.0 * size
-            elif op == b"Td":
-                if len(stack) >= 2 and type(stack[-1]) is float and type(stack[-2]) is float:
-                    ex += stack[-2]
-                    ey += stack[-1]
-                    cx, cy = ex, ey
-            elif op == b"Tm":
-                if len(stack) >= 6 and type(stack[-1]) is float and type(stack[-2]) is float:
-                    ex, ey = stack[-2], stack[-1]
-                    cx, cy = ex, ey
-            elif op == b"BT":
-                in_text = True
-                ex = ey = cx = cy = 0.0
-            elif op == b"ET":
-                in_text = False
-            elif op == b"Tf":
-                if stack and type(stack[-1]) is float:
-                    size = stack[-1]
-            elif op == b"TL":
-                if stack and type(stack[-1]) is float:
-                    leading = stack[-1]
-            elif op == b"TD":
-                if len(stack) >= 2 and type(stack[-1]) is float and type(stack[-2]) is float:
-                    leading = -stack[-1]
-                    ex += stack[-2]
-                    ey += stack[-1]
-                    cx, cy = ex, ey
-            elif op == b"T*":
-                ey -= leading
-                cx, cy = ex, ey
-            elif op == b"'":
-                if stack and isinstance(stack[-1], str):
-                    ey -= leading
-                    cx, cy = ex, ey
-                    if in_text:
-                        s = stack[-1]
-                        w = CHAR_W * size * len(s)
-                        if s:
-                            runs.append(
-                                Run(
-                                    page,
-                                    round(cx, 2),
-                                    round(cx + w, 2),
-                                    round(cy, 2),
-                                    size,
-                                    s,
-                                )
-                            )
-                        cx += w
-            stack.clear()
-        elif gi == 6:  # number
-            try:
-                (arr if arr is not None else stack).append(float(m.group()))
-            except ValueError:
-                pass
-        elif gi == 1:  # literal string
-            (arr if arr is not None else stack).append(
-                m.group()[1:-1].decode("latin-1")
-            )
-        elif gi == 5:  # name
-            stack.append(m.group()[1:].decode("latin-1"))
-        elif gi == 3:  # hex string
-            (arr if arr is not None else stack).append(
-                _hex_to_text(m.group()[1:-1])
-            )
-        elif gi == 4:  # array marks
-            if m.group() == b"[":
-                arr = []
-            else:
-                stack.append(arr if arr is not None else [])
-                arr = None
-        elif gi == 9:  # byte the fast grammar can't place → exact path
-            return None
-        # gi == 2 (dict marks) and gi == 7 (comments): ignored
     return runs
 
 
@@ -601,8 +452,6 @@ def parse_pdf_runs(raw: Optional[bytes]) -> List[Run]:
     page = 0
     for stream in _decode_streams(bytes(raw)):
         page_runs = _page_runs_blocks(stream, page)
-        if page_runs is None:
-            page_runs = _page_runs_fast(stream, page)
         if page_runs is None:
             page_runs = _page_runs(stream, page)
         if page_runs:

@@ -4,7 +4,8 @@
 that maximizes a row-local alignment score.  The DOM analogue probes
 word-length cutoffs per extracted document and keeps the best one,
 as a diagnostic sidecar table beside the extraction output; the
-catalog twin is ``queries.deskew_search``.
+``queries.deskew_search`` catalog entry computes through
+``deskew_profile``, so its DuckDB oracle checks this code.
 """
 
 from __future__ import annotations
@@ -13,18 +14,20 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def deskew_profile(
-    extracted: DataFrame, text_col: str = "text", max_t: int = 12
-) -> DataFrame:
+#: Upper end of the word-length cutoff grid t ∈ 1..DESKEW_MAX_T.
+DESKEW_MAX_T = 12
+
+
+def deskew_profile(extracted: DataFrame) -> DataFrame:
     """Per-document deskew calibration profile (``pp_deskew``,
     preproc.c:218-292: a per-page scalar search maximizing a row-local
-    alignment score; the catalog twin is ``queries.deskew_search``).
+    alignment score).
 
-    DOM transliteration: probe word-length cutoffs t ∈ 1..max_t, score
-    each as t · |{words with len ≥ t}| (projection-profile mass), keep
-    the argmax with first-max tie-break. Emitted as a DIAGNOSTIC table
-    (url, deskew_t, deskew_score) that rides the extraction job — it
-    never edits text, so byte-identity with the reference output is
+    DOM transliteration: probe word-length cutoffs t ∈ 1..DESKEW_MAX_T,
+    score each as t · |{words with len ≥ t}| (projection-profile mass),
+    keep the argmax with first-max tie-break. Emitted as a DIAGNOSTIC
+    table (url, deskew_t, deskew_score) that rides the extraction job —
+    it never edits text, so byte-identity with the reference output is
     untouched (the --deskew job-flag contract).
 
     Scale shape: the word-length array is bound once per doc, the
@@ -36,14 +39,13 @@ def deskew_profile(
         # re-split the text per grid point)
         return F.element_at(F.transform(F.array(col), fn), 1)
 
-    t = F.col(text_col)
     lens = F.transform(
-        F.split(F.trim(t), r"\s+"), lambda w: F.length(w)
+        F.split(F.trim(F.col("text")), r"\s+"), lambda w: F.length(w)
     )
     scores = let(
         lens,
         lambda ls: F.transform(
-            F.sequence(F.lit(1), F.lit(max_t)),
+            F.sequence(F.lit(1), F.lit(DESKEW_MAX_T)),
             lambda i: (i * F.size(F.filter(ls, lambda l: l >= i))).cast(
                 "bigint"
             ),

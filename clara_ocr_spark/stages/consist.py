@@ -28,17 +28,21 @@ BLOCK_INVARIANTS = {
 }
 
 
-def check_blocks(blocks: DataFrame) -> DataFrame:
-    """One row per invariant with its violation count (0 = healthy)."""
-    aggs = [
+def _violation_sums() -> list:
+    """One violation-count aggregate per invariant, named after it."""
+    return [
         # coalesce: sum over ZERO rows is null (empty incremental
         # delta must read as 0 violations, not crash the gate)
-        F.coalesce(F.sum(F.when(F.expr(pred), 1).otherwise(0)), F.lit(0)).alias(
-            name
-        )
+        F.coalesce(
+            F.sum(F.when(F.expr(pred), 1).otherwise(0)), F.lit(0)
+        ).alias(name)
         for name, pred in BLOCK_INVARIANTS.items()
     ]
-    wide = blocks.agg(*aggs)
+
+
+def check_blocks(blocks: DataFrame) -> DataFrame:
+    """One row per invariant with its violation count (0 = healthy)."""
+    wide = blocks.agg(*_violation_sums())
     stack = ", ".join(f"'{n}', {n}" for n in BLOCK_INVARIANTS)
     return wide.selectExpr(
         f"stack({len(BLOCK_INVARIANTS)}, {stack}) as (invariant, violations)"
@@ -77,13 +81,7 @@ def observe_consistency(blocks: DataFrame, obs=None):
 
     if obs is None:
         obs = Observation()
-    aggs = [
-        F.coalesce(
-            F.sum(F.when(F.expr(pred), 1).otherwise(0)), F.lit(0)
-        ).alias(name)
-        for name, pred in BLOCK_INVARIANTS.items()
-    ]
-    return blocks.observe(obs, *aggs), obs
+    return blocks.observe(obs, *_violation_sums()), obs
 
 
 def assert_observed(obs) -> None:

@@ -1,15 +1,17 @@
 """Crawl-audit stages over REAL url tables.
 
-The catalog queries ``sitemap_coverage`` and ``url_trap_audit``
-synthesize their url spaces from ``doc_id``/``event_id`` because the
-driver's oracle runs against the fixed ten-table sf schema (documented
-there; VERDICT r4 accepted the synthesis).  These stages are the
-PRODUCTION twins: the same operator plans over actual ``url:string``
-columns — crawled urls from the pages table, declared urls from
-``sources/sitemap.read_sitemaps`` output, frontier
-urls from the links harvest — so a parquet-backed url table gets real
-predicate pushdown and column pruning at the scan
-(tests/test_crawl_audit.py pins ``PushedFilters`` on the url column).
+These stages run over actual ``url:string`` columns — crawled urls
+from the pages table, declared urls from
+``sources/sitemap.read_sitemaps`` output, frontier urls from the links
+harvest — so a parquet-backed url table gets real predicate pushdown
+and column pruning at the scan (tests/test_crawl_audit.py pins
+``PushedFilters`` on the url column).  The catalog entries
+``url_trap_audit`` and ``revisit_policy`` synthesize url spaces from
+``event_id``/``doc_id`` (the driver's oracle runs against the fixed
+ten-table sf schema) and then call ``url_trap_audit_urls`` /
+``revisit_schedule`` here, so their DuckDB oracles check this code.
+``sitemap_coverage`` stays a separate plan: its keys differ from
+``sitemap_coverage_urls``.
 
 Reference analogue: the coverage ledger is the crawl-side dual of the
 reference's per-page completeness accounting (write_report,
@@ -250,7 +252,8 @@ def url_trap_audit_urls(urls: DataFrame) -> DataFrame:
     ids, calendars, faceted search) and the scheduler should cap or
     canonicalize it.
 
-    Scale shape — identical to the catalog query's: distinct urls
+    The ``url_trap_audit`` catalog entry computes through this
+    function over its synthesized urls.  Scale shape: distinct urls
     partially aggregate BEFORE the host rollup merges counters;
     integer per-mille keeps any downstream hash exact."""
     u = (

@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..extract_rules import STRONG_MATCH, WEAK_MATCH
+
 ENGINES = ("skel", "map", "pd", "shape")
 
 PATTERN_FEATURES_SCHEMA = (
@@ -116,16 +118,13 @@ def _engine_score(engine: str) -> F.Column:
 
 
 def classify_scored(
-    blocks: DataFrame,
-    patterns: DataFrame,
-    engine: str = "skel",
-    strong: int = 8,
-    weak: int = 4,
+    blocks: DataFrame, patterns: DataFrame, engine: str = "skel"
 ) -> DataFrame:
     """Scan-compare-argmax: score every block against the candidate
     patterns with the selected engine, keep the best match, accept by
-    strong/weak thresholds. Adds columns ``pattern_label`` (null if
-    rejected), ``best_fingerprint``, ``match_score``, ``match_grade``
+    the STRONG_MATCH / WEAK_MATCH thresholds. Adds columns
+    ``pattern_label`` (null if rejected), ``best_fingerprint``,
+    ``match_score``, ``match_grade``
     ('strong' | 'weak' | null). Sentinel rows (pos < 0) pass through
     unmatched."""
     if engine not in ENGINES:
@@ -170,13 +169,13 @@ def classify_scored(
         .join(best, ["url", "pos"], "left")
         .withColumn(
             "match_grade",
-            F.when(F.col("match_score") >= strong, F.lit("strong"))
-            .when(F.col("match_score") >= weak, F.lit("weak"))
+            F.when(F.col("match_score") >= STRONG_MATCH, F.lit("strong"))
+            .when(F.col("match_score") >= WEAK_MATCH, F.lit("weak"))
             .otherwise(F.lit(None).cast("string")),
         )
         .withColumn(
             "pattern_label",
-            F.when(F.col("match_score") >= strong, F.col("_best_label")),
+            F.when(F.col("match_score") >= STRONG_MATCH, F.col("_best_label")),
         )
         .drop("_best_label")
     )

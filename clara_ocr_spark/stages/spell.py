@@ -29,8 +29,9 @@ only) and broadcast into the application join; block text is
 re-assembled in the SAME partitioning as the explode (url, zone, pos
 keys), costing one shuffle.
 
-The catalog twin (queries.spell_correct) carries the DuckDB oracle
-for the candidate/election logic.
+The catalog entry ``queries.spell_correct`` computes through
+``build_vocab`` and ``elect_corrections``, so its DuckDB oracle checks
+this module's candidate/election logic.
 """
 
 from __future__ import annotations
@@ -95,6 +96,14 @@ def correction_map(
         .distinct()
         .join(vocab, "tok", "left_anti")
     )
+    return elect_corrections(rare, vocab).select("wrong", "suggestion")
+
+
+def elect_corrections(rare: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(wrong, suggestion, c): for each ``rare(tok)`` token, the
+    levenshtein-1 ``vocab(tok, c)`` neighbor with the highest count
+    (ties → smallest word).  Candidates come from an equi-join on
+    shared delete-1 variants; levenshtein verifies only those."""
     cand = (
         _variants(rare)
         .withColumnRenamed("tok", "wrong")
@@ -112,7 +121,7 @@ def correction_map(
     return (
         cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("wrong", "suggestion")
+        .drop("rn")
     )
 
 

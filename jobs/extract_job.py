@@ -278,7 +278,7 @@ def main(argv: list[str] | None = None) -> None:
         metavar="PATH",
         help="also export the extraction as WET conversion records "
         "(Common-Crawl interchange; sources/formats.to_wet_records) — "
-        "raw text lines, readable back by --input-format wet",
+        "raw text lines, readable back by curate_job --input-format wet",
     )
     ap.add_argument(
         "--revisit-out",

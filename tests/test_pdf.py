@@ -249,58 +249,53 @@ class TestFastPath:
         from clara_ocr_spark.sources.pdfparse import (
             _page_runs,
             _page_runs_blocks,
-            _page_runs_fast,
         )
 
-        exact = None
         blocks = _page_runs_blocks(buf, 0)
         if blocks is not None:
-            exact = _page_runs(buf, 0)
-            assert blocks == exact, buf[:120]
-        fast = _page_runs_fast(buf, 0)
-        if fast is not None:
-            assert fast == (exact if exact is not None else _page_runs(buf, 0)), buf[:120]
-        return fast
+            assert blocks == _page_runs(buf, 0), buf[:120]
+        return blocks
 
     def test_generator_streams_take_fast_path(self):
-        from clara_ocr_spark.sources.pdfparse import (
-            _decode_streams,
-            _page_runs_blocks,
-        )
+        from clara_ocr_spark.sources.pdfparse import _decode_streams
 
-        n_fast = n_blocks = n_total = 0
+        n_blocks = n_total = 0
         for i in range(80):
             for stream in _decode_streams(gen_pdf_page(i, seed=3)["html"]):
                 n_total += 1
-                n_fast += self._diff(stream) is not None
-                n_blocks += _page_runs_blocks(stream, 0) is not None
+                n_blocks += self._diff(stream) is not None
         assert n_total > 0
-        # the synthetic corpus never emits escapes → fast path always,
-        # and its emission shape is all absolute-positioned blocks →
-        # the statement-level tier always hits too
-        assert n_fast == n_total
+        # the synthetic corpus's emission shape is all absolute-positioned
+        # blocks → the statement-level tier takes every stream
         assert n_blocks == n_total
+
+    _STATEFUL = [
+        b"BT /F1 12 Tf 10 20 Td (a) Tj 0 -14 Td (b) Tj ET",  # 2 shows
+        b"BT /F1 12 Tf 14 TL 10 20 Td (a) ' ET",  # quote op
+        b"BT /F1 12 Tf 10 20 Td (a) Tj ET BT (b) Tj ET",  # no Tf/pos
+        b"BT /F1 12 Tf 2 0 0 2 10 20 Tm (a) Tj ET",  # scaled Tm
+        rb"BT /F1 12 Tf 10 20 Td (a\)b) Tj ET",  # escape
+    ]
 
     def test_blocks_path_bails_on_stateful_streams(self):
         """Any operator needing interpreter state across statements
-        (T*, ', TL, relative Td chains) must fall through to the token
-        tiers — the block grammar cannot place it."""
+        (T*, ', TL, relative Td chains) must fall through to the exact
+        interpreter — the block grammar cannot place it."""
         from clara_ocr_spark.sources.pdfparse import _page_runs_blocks
 
-        for buf in [
-            b"BT /F1 12 Tf 10 20 Td (a) Tj 0 -14 Td (b) Tj ET",  # 2 shows
-            b"BT /F1 12 Tf 14 TL 10 20 Td (a) ' ET",  # quote op
-            b"BT /F1 12 Tf 10 20 Td (a) Tj ET BT (b) Tj ET",  # no Tf/pos
-            b"BT /F1 12 Tf 2 0 0 2 10 20 Tm (a) Tj ET",  # scaled Tm
-            rb"BT /F1 12 Tf 10 20 Td (a\)b) Tj ET",  # escape
-        ]:
+        for buf in self._STATEFUL:
             assert _page_runs_blocks(buf, 0) is None, buf
 
-    def test_fallback_cases_bail(self):
-        from clara_ocr_spark.sources.pdfparse import _page_runs_fast
+    def test_fallback_streams_parse_exactly(self):
+        """Streams the block tier rejects go through ``parse_pdf_runs``
+        to the exact interpreter's runs, end to end from PDF bytes."""
+        from clara_ocr_spark.sources.pdfparse import _page_runs
 
         for buf in [rb"(a\(b) Tj", b"(unbalanced", b"BT (a(b)c) Tj", b"< <4>"]:
-            assert _page_runs_fast(buf, 0) is None
+            assert parse_pdf_runs(_mk_pdf(buf)) == _page_runs(buf, 0), buf
+        for buf in self._STATEFUL:
+            runs = parse_pdf_runs(_mk_pdf(buf))
+            assert runs and runs == _page_runs(buf, 0), buf
 
     @pytest.mark.parametrize("seed", range(25))
     def test_fuzz_equivalence(self, seed):
