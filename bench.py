@@ -434,9 +434,9 @@ def main() -> None:
     for name, df in (
         ("curate_fix_encoding", repair_text_encoding(docs)),
         ("curate_encoding_audit", encoding_damage_audit(docs)),
-        # the pre-mix snapshot audit (--corpus-health): five pruned
-        # text scans composing the Zipf/Heaps/Good-Turing/quantile/KS
-        # catalog algebra into one sidecar
+        # the pre-mix snapshot audit (--corpus-health): four pruned
+        # text scans in one SQL execution composing the Zipf/Heaps/
+        # Good-Turing/quantile/KS catalog algebra into one sidecar
         ("curate_corpus_health", corpus_health(docs)),
         ("crawl_soft404_audit", soft404_audit(docs)),
         ("psl_domain_map", registered_domain_map(with_host(docs), rules)),

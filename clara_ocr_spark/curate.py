@@ -482,7 +482,12 @@ def curate(
     per duplicate family. rejected(url, reason): everything else, with
     the first failing rule or ``duplicate``. The two partition the
     input urls exactly (asserted in tests — the consistency-gate
-    discipline of step_6).
+    discipline of step_6): both are filters of ONE decision relation,
+    (url, text, n_tokens, reason) with one row per input url and
+    reason NULL when curated, built as left joins onto the gated rows
+    and persisted (retry-safe: a lost block recomputes from lineage).
+    The first write materializes it; the second reads the cache, so
+    dedup runs once per call however many outputs are written.
 
     Dedup is two-tier, the production shape: exact (hash groupBy,
     cheap, collapses byte-identical docs) then near (minhash/LSH over
@@ -540,17 +545,19 @@ def curate(
     gated = feats.withColumn("reason", quality_reason(cfg))
     if gate_obs is not None:
         # Input-count observation for the caller's consistency gate,
-        # attached ABOVE the checkpoint: a CollectMetrics node below a
-        # localCheckpoint is compiled into the checkpointed RDD and
-        # never appears in any downstream QueryExecution, so an
+        # attached ABOVE the features checkpoint: a CollectMetrics node
+        # below a localCheckpoint is compiled into the checkpointed RDD
+        # and never appears in any downstream QueryExecution, so an
         # Observation on `extracted` silently never fills (VERDICT r3
-        # item 6 found this the hard way).  Here the node sits in both
-        # the curated and rejected write plans; filters are not pushed
-        # through CollectMetrics, so the first write streams every
-        # gated row through it and fills the count.
+        # item 6 found this the hard way).  It sits below the decision
+        # persist, upstream of its joins: the first write streams every
+        # gated row through it while building the cache (filters are
+        # not pushed through CollectMetrics).  So n_in counts the gate's
+        # input, and the caller's n_cur + n_rej == n_in still catches a
+        # decision join that loses or duplicates a url.
         gated = gated.observe(gate_obs, F.count(F.lit(1)).alias("n_in"))
     passing = gated.filter(F.col("reason").isNull())
-    cont_rejected = None
+    cont = None
     if eval_texts is not None:
         cont = contaminated_urls(passing.select("url", "text"), eval_texts)
         if fuzzy_tau is not None:
@@ -565,15 +572,11 @@ def curate(
                 ).select("url")
             ).distinct()
         cont = cont.localCheckpoint(eager=False)
-        cont_rejected = cont.select(
-            "url", F.lit(REASON_CONTAMINATED).alias("reason")
-        )
         passing = passing.join(cont, "url", "left_anti")
 
     # tier 1: exact duplicates by content hash
     exact = exact_dup_canonical(passing.select("url", "text"))
-    with_exact = passing.join(exact, "url")
-    reps = with_exact.filter(
+    reps = passing.join(exact, "url").filter(
         F.col("exact_canonical") == F.col("url")
     ).localCheckpoint(eager=False)
 
@@ -588,22 +591,30 @@ def curate(
         F.col("url").alias("rep_url"),
         F.coalesce("canonical_url", "url").alias("final_canonical"),
     )
-    resolved = with_exact.join(
-        rep_final, with_exact["exact_canonical"] == rep_final["rep_url"]
+
+    # the decision: left joins onto `gated` (the url-keyed ones first,
+    # so they share one partitioning) and one coalesce — first failing
+    # gate reason, then contaminated, then duplicate; NULL = curated.
+    # Persisted once: both outputs are filters of it.
+    decision, reasons = gated, [F.col("reason")]
+    if cont is not None:
+        decision = decision.join(
+            cont.withColumn("cont", F.lit(REASON_CONTAMINATED)), "url", "left"
+        )
+        reasons.append(F.col("cont"))
+    decision = decision.join(exact, "url", "left").join(
+        rep_final, F.col("exact_canonical") == F.col("rep_url"), "left"
     )
-    curated = resolved.filter(F.col("final_canonical") == F.col("url")).select(
-        "url", "text", "n_tokens"
+    reasons.append(
+        F.when(F.col("final_canonical") != F.col("url"), REASON_DUPLICATE)
     )
-    rejected = gated.filter(F.col("reason").isNotNull()).select(
-        "url", "reason"
+    decision = decision.select(
+        "url", "text", "n_tokens", F.coalesce(*reasons).alias("reason")
+    ).persist()
+    return (
+        decision.filter(F.col("reason").isNull()).drop("reason"),
+        decision.filter(F.col("reason").isNotNull()).select("url", "reason"),
     )
-    dup_rejected = resolved.filter(
-        F.col("final_canonical") != F.col("url")
-    ).select("url", F.lit(REASON_DUPLICATE).alias("reason"))
-    all_rejected = rejected.unionByName(dup_rejected)
-    if cont_rejected is not None:
-        all_rejected = all_rejected.unionByName(cont_rejected)
-    return curated, all_rejected
 
 
 def assign_split(curated: DataFrame) -> DataFrame:
@@ -710,27 +721,19 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
       probe: iid halves should sit near 0; a big value means the
       corpus is ordered/partitioned in a length-correlated way)
 
-    Scale notes: five pruned text scans total (counters, Zipf
-    tokens, Heaps k-grams, Good–Turing bigrams, and ONE length
-    histogram serving both the quantiles and the KS probe — the
-    bounded histogram is checkpointed).  Every window frame is
-    bounded (top-512 head, 32 batches, |distinct lengths|); heads
-    are TakeOrderedAndProject; totals ride 1-row broadcasts.  The
-    extra passes are the honest cost of a whole-corpus audit sidecar
-    (the --encoding-audit precedent)."""
+    Scale notes: four pruned text scans (Zipf tokens, Heaps k-grams,
+    Good–Turing bigrams, and ONE length histogram that also sums the
+    token counts), all in one SQL execution — nothing is
+    checkpointed.  The bounded histogram feeds the counters, the
+    quantiles and the KS probe through one ordered window (running
+    sums; its whole-frame sums are the totals) and one aggregate.
+    Every window frame is bounded (top-512 head, 32 batches,
+    |distinct lengths|); heads are TakeOrderedAndProject.  The extra
+    passes are the honest cost of a whole-corpus audit sidecar (the
+    --encoding-audit precedent)."""
     from .queries import WIN_K
 
     toks = _tokens(F.lower(F.col("text")))
-
-    counts = extracted.agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.sum(F.size(toks)).alias("nt"),
-    ).select(
-        F.expr(
-            "stack(2, 'n_docs', cast(nd as double),"
-            " 'n_tokens', cast(nt as double)) as (metric, value)"
-        )
-    )
 
     head = (
         extracted.select(F.explode(toks).alias("w"))
@@ -844,72 +847,63 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
         )
     )
 
-    h = (
-        extracted.groupBy(F.length("text").alias("v"))
-        .agg(
-            F.sum(
-                F.when(F.expr("pmod(xxhash64(url), 2)") == 0, 1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("ca"),
-            F.sum(
-                F.when(F.expr("pmod(xxhash64(url), 2)") == 1, 1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("cb"),
-        )
-        # ONE histogram serves the quantiles AND the KS probe
-        .localCheckpoint(eager=False)
+    # ONE bounded length histogram serves the counters, the quantiles
+    # and the KS probe: one ordered window gives the running sums, its
+    # whole-frame sums the totals, and one aggregate reads them all
+    parity = F.expr("pmod(xxhash64(url), 2)")
+    h = extracted.groupBy(F.length("text").alias("v")).agg(
+        F.count(F.lit(1)).alias("c"),
+        F.sum(F.size(toks)).alias("nt"),
+        F.count(F.when(parity == 0, 1)).alias("ca"),
+        F.count(F.when(parity == 1, 1)).alias("cb"),
     )
-    vcum = Window.orderBy("v").rowsBetween(
+    run = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    s = (
-        h.withColumn("c", F.col("ca") + F.col("cb"))
-        .withColumn("cum", F.sum(F.col("ca") + F.col("cb")).over(vcum))
-        .withColumn("cum_a", F.sum("ca").over(vcum))
-        .withColumn("cum_b", F.sum("cb").over(vcum))
+    whole = run.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    tot = h.agg(
-        F.sum(F.col("ca") + F.col("cb")).alias("n"),
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
+    st = h.select(
+        "v", "c", "nt",
+        F.sum("c").over(run).alias("cum"),
+        F.sum("ca").over(run).alias("cum_a"),
+        F.sum("cb").over(run).alias("cum_b"),
+        F.sum("c").over(whole).alias("n"),
+        F.sum("ca").over(whole).alias("na"),
+        F.sum("cb").over(whole).alias("nb"),
     )
-    st = s.crossJoin(F.broadcast(tot)).localCheckpoint(eager=False)
-    p = st.sparkSession.range(1).select(
-        F.explode(
-            F.array(F.lit(500), F.lit(900), F.lit(990))
-        ).alias("pm")
-    )
-    quant = (
-        st.join(
-            F.broadcast(p),
-            F.col("cum") >= F.expr("(pm * n + 999) div 1000"),
-        )
-        .groupBy("pm")
-        .agg(F.min("v").alias("val"))
-        .select(
-            F.concat(F.lit("len_p"), F.expr("pm div 10")).alias("metric"),
-            F.col("val").cast("double").alias("value"),
-        )
-    )
-    maxd = st.agg(
+
+    def quantile(pm: int) -> F.Column:
+        # min length whose cumulative count reaches ceil(pm * n / 1000)
+        reached = F.col("cum") >= F.expr(f"({pm} * n + 999) div 1000")
+        return F.min(F.when(reached, F.col("v"))).cast("double")
+
+    sized = st.agg(
+        F.sum("c").alias("nd"),
+        F.sum("nt").alias("nt"),
+        quantile(500).alias("p50"),
+        quantile(900).alias("p90"),
+        quantile(990).alias("p99"),
         F.max(
             F.abs(F.col("cum_a") * F.col("nb") - F.col("cum_b") * F.col("na"))
         ).alias("md"),
         F.max("na").alias("na"),
         F.max("nb").alias("nb"),
-    )
-    ks = maxd.select(
-        F.lit("ks_parity_d_pm").alias("metric"),
+    ).select(
+        "nd",
         F.expr(
-            "cast(case when na > 0 and nb > 0"
-            " then (1000 * md) div (na * nb) else 0 end as double)"
-        ).alias("value"),
+            "stack(6, 'n_docs', cast(coalesce(nd, 0) as double),"
+            " 'n_tokens', cast(nt as double),"
+            " 'len_p50', p50, 'len_p90', p90, 'len_p99', p99,"
+            " 'ks_parity_d_pm', cast(case when na > 0 and nb > 0"
+            "   then (1000 * md) div (na * nb) else 0 end as double)"
+            ") as (metric, value)"
+        ),
     )
+    # an empty corpus has no length quantiles (no rows), but still
+    # reports its counters and a zero KS distance
+    sized = sized.filter(
+        F.col("nd").isNotNull() | ~F.col("metric").startswith("len_p")
+    ).drop("nd")
 
-    return counts.unionAll(zipf).unionAll(heaps).unionAll(gt).unionAll(
-        quant
-    ).unionAll(ks)
+    return sized.unionAll(zipf).unionAll(heaps).unionAll(gt)

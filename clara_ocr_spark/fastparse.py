@@ -213,6 +213,10 @@ def _parse_events(s: str, p: _BlockParser) -> None:
                     self_closing = True  # <br/>, <img src="x"/>
                 elif t[-2].isspace():
                     raise _OffDomain("slash-space start tag")  # <p / >
+                elif "=" not in t.split()[-1]:
+                    # <b ;/> self-closes after a valueless attr name,
+                    # <b a = 1/> folds it into a spaced value; spec parser
+                    raise _OffDomain("slash after unquoted attr token")
                 # else <p a=1/> : slash folds into the attr value "1/"
         attrs = []
         if "data-zone" in attr_src:

@@ -216,9 +216,10 @@ def main(argv: list[str] | None = None) -> None:
     # Consistency gate with ZERO extra passes (VERDICT r3 item 6):
     # the three counts ride the two write actions as CollectMetrics
     # observations instead of three post-hoc rescans.  The input count
-    # is attached inside curate() above its checkpoint (gate_obs) —
-    # both write plans contain that node, and it fills from whichever
-    # write runs first.
+    # is attached inside curate() on the gated rows (gate_obs): above
+    # the features checkpoint, below the persisted decision that both
+    # outputs filter.  The curated write builds that cache and fills
+    # n_in; the rejected write reads the cache in one job.
     import pyspark.sql.functions as F
     from pyspark.sql import Observation
 

@@ -508,15 +508,25 @@ def test_curate_fuzzy_tau_catches_what_exact_misses(spark):
     }
 
 
-def test_corpus_health_report(spark):
-    """The corpus-health sidecar emits the full metric set with exact
-    counters and exact length quantiles (checked against a direct
-    computation on the fixture), sane fit ranges for the Zipf head
-    and Heaps growth, and a KS self-consistency probe inside the
-    per-mille domain.  The report must be deterministic — two calls
-    on the same input collect identically."""
+def _health(df) -> dict:
     from clara_ocr_spark.curate import corpus_health
 
+    return {r["metric"]: r["value"] for r in corpus_health(df).collect()}
+
+
+def test_corpus_health_report(spark):
+    """The corpus-health sidecar emits the full metric set, every value
+    pinned on three inputs.  On the fixture the counters and length
+    quantiles also match a direct computation, and the report is
+    deterministic (two calls collect identically).  Degenerate docs
+    (empty and blank text, single tokens, texts shorter than the Heaps
+    k-gram width, plus one doc just over it) leave the Heaps fit one
+    batch to fit, so only it is NULL.  An EMPTY table reports
+    n_docs = 0, NULL for every sum and fit, a zero KS distance and NO
+    length-quantile rows (not NULL ones)."""
+    from clara_ocr_spark.queries import WIN_K
+
+    schema = "url string, text string"
     rows = []
     for i in range(120):
         body = " ".join(
@@ -524,16 +534,17 @@ def test_corpus_health_report(spark):
             + [f"w{j % 37}" for j in range(10 + i % 50)]
         )
         rows.append((f"https://h{i % 7}.example/p{i}", body))
-    df = spark.createDataFrame(rows, "url string, text string")
+    df = spark.createDataFrame(rows, schema)
 
-    got = {r["metric"]: r["value"] for r in corpus_health(df).collect()}
-    expected_metrics = {
-        "n_docs", "n_tokens", "zipf_slope", "zipf_r2", "heaps_beta",
-        "heaps_r2", "gt_p0_pm", "gt_chao1", "len_p50", "len_p90",
-        "len_p99", "ks_parity_d_pm",
+    got = _health(df)
+    assert got == {
+        "n_docs": 120.0, "n_tokens": 4194.0,
+        "zipf_slope": -0.988, "zipf_r2": 0.518,
+        "heaps_beta": 0.23, "heaps_r2": 0.924,
+        "gt_p0_pm": 0.0, "gt_chao1": 68.0,
+        "len_p50": 125.0, "len_p90": 205.0, "len_p99": 235.0,
+        "ks_parity_d_pm": 138.0,
     }
-    assert set(got) == expected_metrics
-    assert got["n_docs"] == 120
     assert got["n_tokens"] == sum(len(t.split()) for _, t in rows)
 
     lens = sorted(len(t) for _, t in rows)
@@ -546,13 +557,72 @@ def test_corpus_health_report(spark):
     assert got["len_p90"] == q(900)
     assert got["len_p99"] == q(990)
 
-    assert got["zipf_slope"] < 0  # frequency falls with rank
-    assert 0 < got["heaps_beta"] < 1  # sublinear vocabulary growth
-    assert 0 <= got["ks_parity_d_pm"] <= 1000
-    assert got["gt_chao1"] >= 0
+    assert _health(df) == got
 
-    again = {r["metric"]: r["value"] for r in corpus_health(df).collect()}
-    assert again == got
+    degenerate = [
+        ("https://d.example/empty", ""),
+        ("https://d.example/blank", "   "),
+        ("https://d.example/one-a", "alpha"),
+        ("https://d.example/one-b", "alpha"),
+        ("https://d.example/one-c", "omega"),
+        ("https://d.example/short-a", "ab cd"),
+        ("https://d.example/short-b", "x y z"),
+        ("https://d.example/win", "abc defg hij"),
+    ]
+    assert all(len(t.strip()) < WIN_K for _, t in degenerate[:-1])
+    assert _health(spark.createDataFrame(degenerate, schema)) == {
+        "n_docs": 8.0, "n_tokens": 11.0,
+        "zipf_slope": -0.216, "zipf_r2": 0.524,
+        "heaps_beta": None, "heaps_r2": None,
+        "gt_p0_pm": 1000.0, "gt_chao1": 15.0,
+        "len_p50": 5.0, "len_p90": 12.0, "len_p99": 12.0,
+        "ks_parity_d_pm": 500.0,
+    }
+    assert _health(spark.createDataFrame([], schema)) == {
+        "n_docs": 0.0, "n_tokens": None,
+        "zipf_slope": None, "zipf_r2": None,
+        "heaps_beta": None, "heaps_r2": None,
+        "gt_p0_pm": None, "gt_chao1": None,
+        "ks_parity_d_pm": 0.0,
+    }
+
+
+def test_curation_decides_once(spark, tmp_path):
+    """Curated and rejected are filters of ONE persisted decision: once
+    the curated write has run, the rejected write reads the cache in a
+    single Spark job instead of re-running exact dedup and its joins.
+    The input-count observation still fills and the two outputs still
+    partition it.  The corpus-health report is one plan with no
+    checkpoint underneath (a checkpoint shows up as a LogicalRDD)."""
+    from pyspark.sql import Observation
+
+    from clara_ocr_spark.curate import corpus_health
+
+    rows = [gen_page(i, seed=61) for i in range(30)]
+    for k, src in enumerate((2, 2, 5)):
+        dup = dict(rows[src])
+        dup["url"] = f"https://dupes.example/copy/{k}"
+        rows.append(dup)
+    obs = Observation()
+    curated, rejected = curate(extract(_mk_pages(spark, rows)), gate_obs=obs)
+    curated.write.parquet(str(tmp_path / "cur"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("rejected-write", "rejected write after curated")
+    try:
+        rejected.write.parquet(str(tmp_path / "rej"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("rejected-write")) <= 1
+
+    n_cur = spark.read.parquet(str(tmp_path / "cur")).count()
+    rej = spark.read.parquet(str(tmp_path / "rej")).collect()
+    assert obs.get["n_in"] == len(rows) == n_cur + len(rej)
+    assert {r["reason"] for r in rej} == {REASON_DUPLICATE}
+
+    health = corpus_health(spark.read.parquet(str(tmp_path / "cur")))
+    plan = health._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan
 
 
 def test_winnow_dedup_tier_catches_embedded_run(spark):

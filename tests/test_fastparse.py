@@ -62,6 +62,8 @@ EDGES = [
     b"<div data-zone='2'><p>q</p></div><div data-zone=1><p>r</p></div>",
     b"<a href='/x'>link <b>bold link</b></a> tail",
     b"<p>self-close <span/>span after</p>",
+    b"<b ;/>;",
+    b"<p a = 1/>spaced value",
     b"< notatag <p>real</p>",
     b"<p>a</p>\n\n  \t<p>b</p>",
     b"<ul><li>one<li>two<li>three</ul>",

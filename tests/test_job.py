@@ -640,6 +640,61 @@ def test_curate_job_wet_input(tmp_path):
     assert health["n_docs"] == n_c
 
 
+def test_curate_job_metrics_lineage(tmp_path):
+    """The extract → curate job with --metrics and --corpus-health:
+    one lineage row per written curated data file, lineage rows that
+    add up to the curated table, no zero-row part file in either
+    output, the health counter agreeing with the published table, and
+    the injected exact copies rejected as duplicates."""
+    import glob
+
+    import duckdb
+
+    from clara_ocr_spark.sources.corpus import PAGES_SCHEMA, gen_page
+
+    rows = [gen_page(i, seed=33) for i in range(30)]
+    for k, src in enumerate((1, 1, 4)):
+        dup = dict(rows[src])
+        dup["url"] = f"https://mirror.example/copy/{k}"
+        rows.append(dup)
+    pages = tmp_path / "pages.parquet"
+    pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_SCHEMA), str(pages))
+    out_c, out_r = tmp_path / "curated", tmp_path / "rejects"
+    out_h, out_m = tmp_path / "health", tmp_path / "metrics"
+    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(ROOT, "jobs", "curate_job.py"),
+            "--input", str(pages),
+            "--curated", str(out_c),
+            "--rejects", str(out_r),
+            "--corpus-health", str(out_h),
+            "--metrics", str(out_m),
+        ],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+    n_cur = duckdb.sql(f"select count(*) from '{out_c}/*.parquet'").fetchone()[0]
+    lineage = duckdb.sql(
+        f"select count(*), sum(n_rows) from '{out_m}/*.parquet'"
+    ).fetchone()
+    assert lineage == (len(glob.glob(f"{out_c}/part-*.parquet")), n_cur)
+    for out in (out_c, out_r):
+        for f in glob.glob(f"{out}/part-*.parquet"):
+            assert pq.read_metadata(f).num_rows > 0, f
+    rej = dict(duckdb.sql(
+        f"select url, reason from '{out_r}/*.parquet'").fetchall())
+    assert n_cur + len(rej) == len(rows)
+    assert {u for u, r in rej.items() if r == "duplicate"} >= {
+        f"https://mirror.example/copy/{k}" for k in range(3)
+    }
+    health = dict(duckdb.sql(
+        f"select metric, value from '{out_h}/*.parquet'").fetchall())
+    assert health["n_docs"] == n_cur
+
+
 def test_curate_job_lm_gate_and_dsir(tmp_path):
     """spark-submit-shaped curation with the trained-LM gate and the
     DSIR sidecar: --lm-ref + --set lm_nll_max rejects docs the
