@@ -264,10 +264,19 @@ def run_media_decode(
     return min(times)
 
 
-def extract_only(cores: int, n_docs: int | None = None, pdf: bool = False) -> None:
-    from clara_ocr_spark.session import get_spark
+def launch(cores: int) -> None:
+    """Master and driver heap for this process's JVM, passed the way
+    spark-submit passes them; they apply when the first session starts."""
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--master local[{cores}] --driver-memory 24g pyspark-shell"
+    )
 
-    spark = get_spark(f"bench-extract-{cores}", cores=cores)
+
+def extract_only(cores: int, n_docs: int | None = None, pdf: bool = False) -> None:
+    from clara_ocr_spark.session import build_session
+
+    launch(cores)
+    spark = build_session(f"bench-extract-{cores}")
     spark.sparkContext.setLogLevel("ERROR")
     if pdf:
         n_docs = n_docs or PDF_BENCH_DOCS
@@ -362,11 +371,12 @@ def main() -> None:
         return
 
     from clara_ocr_spark.queries import REGISTRY
-    from clara_ocr_spark.session import get_spark
+    from clara_ocr_spark.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench", cores=cores)
+    launch(cores)
+    spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, float] = {}

@@ -47,10 +47,12 @@ def main() -> None:
                                            "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from bench import launch
     from clara_ocr_spark.queries import REGISTRY
-    from clara_ocr_spark.session import get_spark
+    from clara_ocr_spark.session import build_session
 
-    spark = get_spark("bench-extra")
+    launch(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_session("bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
 
     names = args.names

@@ -10238,7 +10238,7 @@ def session_gap_quantiles(spark, sf_dir):
         ),
     )
     # events.ts is TIMESTAMP_NTZ; unix_micros needs TIMESTAMP — the
-    # cast is wall-time-stable because get_spark pins the session to
+    # cast is wall-time-stable because build_session pins the session to
     # UTC (and DuckDB's epoch_us reads the same wall time)
     g = o.filter(F.col("prev").isNotNull()).select(
         "event_type",

@@ -1,8 +1,11 @@
-"""SparkSession factory tuned for the extraction workload.
+"""The one SparkSession builder: the jobs, perfbench, ``bench.py``, the
+scripts and the tests all get their session here, so each runs the
+configuration that ships.
 
-Defaults target local[N] sandbox runs; every knob is the one that
-matters at cluster scale too (AQE, Arrow batching, shuffle partition
-count, UTC for oracle comparison).
+Master and driver memory are launch settings, not program settings:
+jobs take them from ``spark-submit --master … --driver-memory …``, and
+in-process callers put the same flags in ``PYSPARK_SUBMIT_ARGS`` before
+their first session starts.
 """
 
 from __future__ import annotations
@@ -12,55 +15,33 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app: str = "clara-ocr-spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
-    # Make this package importable on Python workers regardless of the
-    # driver's cwd (local mode inherits env; on a real cluster ship the
-    # package with ``spark-submit --py-files clara_ocr_spark.zip``).
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def build_session(app: str = "clara-ocr-spark") -> SparkSession:
+    # Python workers are separate processes and resolve imports from
+    # env, not the driver's sys.path: export this package's root so a
+    # driver started from any cwd finds it on its workers (local mode
+    # inherits env; on a real cluster ``--py-files`` ships the package).
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + pp if pp else "")
-        )
+    if root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = root + (os.pathsep + pp if pp else "")
     return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        SparkSession.builder.appName(app)
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final exchange of a cached plan too (off
+        # by default): a persisted job output would otherwise keep
+        # spark.sql.shuffle.partitions partitions, and its cache build,
+        # output write and lineage pass each run that many near-empty
+        # tasks
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true",
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size for the mapInPandas parse stage. A/B at
-        # local[32], fresh JVM, 100k docs: 2048 ≈ 36k docs/s beats
-        # 16384 ≈ 29k (bigger frames lose more to allocation than they
-        # save in per-batch overhead); within a long-warm JVM the
-        # ranking flips, so a long-lived deployment should re-measure.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Let the planner pick shuffled-hash over sort-merge when the
-        # per-partition build side fits (guide §3.1/§9: SHJ skips both
-        # sorts), and let AQE rewrite SMJ->SHJ at runtime when every
-        # post-shuffle partition is small. Join-strategy only — results
-        # are identical; scale-safe because both knobs stay size-gated
-        # by the planner/AQE rather than forcing a strategy.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
-        # Local corpora are tiny vs the 128 MB default split size; size
-        # splits so small-file scans still fan out across all cores (on
-        # a real cluster the 128 MB default is right).
-        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        # no call-site capture: with it on, every PySpark API call
+        # walks the stack and tries ``import IPython`` and
+        # ``import ipykernel`` to annotate error messages
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -24,10 +24,6 @@ import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-# The worker PYTHONPATH export (Python workers resolve imports from
-# env, not the driver's sys.path) lives in jobs/extract_job.py — the
-# single copy of the bootstrap — and runs when main() imports
-# build_session from it, before any Spark session exists.
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -153,10 +149,9 @@ def main(argv: list[str] | None = None) -> None:
         ap.error("--fuzzy-tau needs --decontaminate (the eval set "
                  "both probes run against)")
 
-    from jobs.extract_job import build_session
-
     from clara_ocr_spark.curate import CurateConfig, curate
     from clara_ocr_spark.pipeline import extract
+    from clara_ocr_spark.session import build_session
     from clara_ocr_spark.stages.consist import append_metrics, partition_lineage
 
     try:

@@ -36,39 +36,9 @@ import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-# Python workers are separate processes and resolve imports from env,
-# not the driver's sys.path: without this, running the job from any
-# cwd outside the repo dies with ModuleNotFoundError on the first
-# mapInPandas batch (same hook as session.get_spark; on a real
-# cluster --py-files ships the package instead).
-if _ROOT not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        _ROOT
-        + (os.pathsep + os.environ["PYTHONPATH"]
-           if os.environ.get("PYTHONPATH") else "")
-    )
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-
-def build_session() -> SparkSession:
-    return (
-        SparkSession.builder.appName("clara-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce the final exchange of a cached plan too (off
-        # by default): the persisted extraction output below would
-        # otherwise keep spark.sql.shuffle.partitions partitions, and
-        # its cache build, output write and lineage pass each run that
-        # many near-empty tasks
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+# perfbench imports the session builder from this module
+from clara_ocr_spark.session import build_session  # noqa: E402
 
 
 def main(argv: list[str] | None = None) -> None:

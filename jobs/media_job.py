@@ -27,10 +27,6 @@ import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-# The worker PYTHONPATH export (Python workers resolve imports from
-# env, not the driver's sys.path) lives in jobs/extract_job.py — the
-# single copy of the bootstrap — and runs when main() imports
-# build_session from it, before any Spark session exists.
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -63,14 +59,13 @@ def main(argv: list[str] | None = None) -> None:
     )
     args = ap.parse_args(argv)
 
-    from jobs.extract_job import build_session
-
     import pyspark.sql.functions as F
 
     from clara_ocr_spark.functions.phash import (
         dhash_near_dup,
         media_fingerprints,
     )
+    from clara_ocr_spark.session import build_session
     from clara_ocr_spark.sources.multimodal import decode
     from clara_ocr_spark.stages.consist import (
         append_metrics,

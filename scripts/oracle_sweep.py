@@ -11,6 +11,7 @@ query fails.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -22,7 +23,7 @@ from clara_ocr_spark.queries import (  # noqa: E402
     get_oracle_sql,
     get_queries,
 )
-from clara_ocr_spark.session import get_spark  # noqa: E402
+from clara_ocr_spark.session import build_session  # noqa: E402
 
 
 def main() -> int:
@@ -33,7 +34,10 @@ def main() -> int:
     names = list(qs)
     if window_only:
         names = names[: len(DRIVER_WINDOW)]
-    spark = get_spark("oracle-sweep", cores=8)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--master local[8] --driver-memory 4g pyspark-shell"
+    )
+    spark = build_session("oracle-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(sf_dir)
     failed = []

@@ -50,11 +50,13 @@ def build(stage: str, pages):
 
 def child(cores: int, stage: str, docs: int, runs: int,
           overrides: list[str]) -> None:
-    from clara_ocr_spark.session import get_spark
+    from bench import launch
+    from clara_ocr_spark.session import build_session
     from clara_ocr_spark.sources.pdfgen import ensure_pdf_corpus
 
     extra = dict(kv.split("=", 1) for kv in overrides)
-    spark = get_spark(f"pdfprof-{cores}-{stage}", cores=cores)
+    launch(cores)
+    spark = build_session(f"pdfprof-{cores}-{stage}")
     for k, v in extra.items():
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")

@@ -10,7 +10,7 @@ import pytest
 if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
     os.environ["SPARK_LOCAL_DIRS"] = "/dev/shm/spark-local-tests"
 
-from clara_ocr_spark.session import get_spark
+from clara_ocr_spark.session import build_session
 from clara_ocr_spark.sources.corpus import ensure_corpus
 
 DATA_DIR = os.path.join(os.path.dirname(__file__), "..", ".data")
@@ -18,7 +18,14 @@ DATA_DIR = os.path.join(os.path.dirname(__file__), "..", ".data")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("clara-tests", cores=8, shuffle_partitions=8)
+    # Master and driver heap are launch settings, passed the way
+    # spark-submit passes them; the JVM reads them once, at start.  The
+    # job subprocesses the tests start make their own launch.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--master local[8] --driver-memory 4g pyspark-shell"
+    )
+    s = build_session("clara-tests")
+    del os.environ["PYSPARK_SUBMIT_ARGS"]
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -15,7 +15,7 @@ import pyarrow.parquet as pq
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_extract_job_mixed(tmp_path):
+def test_extract_job_mixed(spark, tmp_path):
     from clara_ocr_spark.sources.corpus import PAGES_SCHEMA, gen_page
     from clara_ocr_spark.sources.pdfgen import gen_pdf_page
 
@@ -53,6 +53,9 @@ def test_extract_job_mixed(tmp_path):
     )
     out = tmp_path / "out"
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    # run from outside the checkout with no PYTHONPATH: the Python
+    # workers find the package only through the session builder's export
+    bare_env = {k: v for k, v in env.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [
             sys.executable,
@@ -78,7 +81,8 @@ def test_extract_job_mixed(tmp_path):
         ],
         capture_output=True,
         text=True,
-        env=env,
+        cwd=str(tmp_path),
+        env=bare_env,
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -416,13 +420,10 @@ def test_extract_job_mixed(tmp_path):
     # text-container roundtrip: pages written as JSONL (html base64),
     # read by the job with --input-format jsonl, emitted as JSONL —
     # extraction byte-identical to the parquet path
-    from clara_ocr_spark.session import get_spark as _gs
     from clara_ocr_spark.sources.formats import write_pages_text
 
-    _s = _gs("fmt-prep", cores=4)
-    _s.sparkContext.setLogLevel("ERROR")
     write_pages_text(
-        _s.read.parquet(str(inp_fm)), str(tmp_path / "pages_jsonl"), "jsonl"
+        spark.read.parquet(str(inp_fm)), str(tmp_path / "pages_jsonl"), "jsonl"
     )
     proc_fmt = subprocess.run(
         [

@@ -164,3 +164,24 @@ def test_every_unreached_def_is_allowlisted():
     assert not dead, f"defs no job, bench or catalog entry reaches: {dead}"
     stale = sorted(ALLOWED - unreached)
     assert not stale, f"allowlisted defs that are now reached or gone: {stale}"
+
+
+def test_one_session_builder():
+    """Every session comes from ``session.build_session``: nothing else
+    in the package, the jobs, the scripts, the bench drivers or the
+    tests reaches ``SparkSession.builder``, and the jobs' name for the
+    builder is that function."""
+    import jobs.extract_job
+    from clara_ocr_spark.session import build_session
+
+    files = [ROOT / "bench.py", ROOT / "bench_extra.py"]
+    for d in (PKG, "jobs", "scripts", "tests"):
+        files += (ROOT / d).rglob("*.py")
+    builders = sorted(
+        str(path.relative_to(ROOT))
+        for path in files
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Attribute) and n.attr == "builder"
+    )
+    assert builders == [f"{PKG}/session.py"]
+    assert jobs.extract_job.build_session is build_session

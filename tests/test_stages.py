@@ -738,12 +738,12 @@ def test_checkpoint_and_append_bump_version_fence(spark, tmp_path):
 _MERGE_WORKER = r"""
 import os, sys, time
 sys.path.insert(0, os.environ["CLARA_ROOT"])
-from clara_ocr_spark.session import get_spark
+from clara_ocr_spark.session import build_session
 import clara_ocr_spark.plans.checkpoint as cp
 import datetime as dt
 
 path, ready_dir, tag, lo = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-spark = get_spark("merge-worker-" + tag, cores=2, shuffle_partitions=2)
+spark = build_session("merge-worker-" + tag)
 from clara_ocr_spark.stages.feedback import ACTS_SCHEMA
 rows = [(i, "u%d" % i, i, "content", "anon", dt.datetime(2024, 5, 1)) for i in range(lo, lo + 5)]
 batch = spark.createDataFrame(rows, ACTS_SCHEMA)
@@ -785,7 +785,10 @@ def test_merge_upsert_two_real_processes_no_lost_update(spark, tmp_path):
     )
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, CLARA_ROOT=root)
+    env = dict(
+        os.environ, CLARA_ROOT=root,
+        PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
+    )
     procs = {
         tag: subprocess.Popen(
             [_sys.executable, str(worker), path, str(ready), tag, str(lo)],
