@@ -266,9 +266,11 @@ def run_media_decode(
 
 def launch(cores: int) -> None:
     """Master and driver heap for this process's JVM, passed the way
-    spark-submit passes them; they apply when the first session starts."""
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f"--master local[{cores}] --driver-memory 24g pyspark-shell"
+    spark-submit passes them; they apply when the first session starts.
+    A ``PYSPARK_SUBMIT_ARGS`` already in the environment wins."""
+    os.environ.setdefault(
+        "PYSPARK_SUBMIT_ARGS",
+        f"--master local[{cores}] --driver-memory 24g pyspark-shell",
     )
 
 
@@ -329,7 +331,11 @@ def scaling(lo: int = 8, hi: int = 32, pdf: bool = False) -> None:
                "--cores", str(cores), "--docs", str(n_docs)]
         if pdf:
             cmd.append("--pdf")
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
+        # each leg makes its own launch at its own core count
+        env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+        out = subprocess.run(
+            cmd, capture_output=True, text=True, check=True, env=env
+        )
         res[cores] = json.loads(out.stdout.strip().splitlines()[-1])
     tlo = n_docs / res[lo]["secs"]
     thi = n_docs / res[hi]["secs"]

@@ -16,6 +16,7 @@ sys.path.insert(0, ROOT)
 from clara_ocr_spark.pipeline import extract, read_pages  # noqa: E402
 from clara_ocr_spark.queries import REGISTRY  # noqa: E402
 from clara_ocr_spark.session import build_session  # noqa: E402
+from tests.conftest import LAUNCH  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 CORPUS = os.path.join(ROOT, ".data", "pages_300.parquet")
@@ -30,9 +31,7 @@ pinned as assertions in tests/test_calibrate_and_plans.py.
 
 def main() -> None:
     # the tests' launch settings: these are the plans the tests pin
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--master local[8] --driver-memory 4g pyspark-shell"
-    )
+    os.environ.setdefault("PYSPARK_SUBMIT_ARGS", LAUNCH)
     spark = build_session("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 

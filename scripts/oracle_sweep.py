@@ -24,6 +24,7 @@ from clara_ocr_spark.queries import (  # noqa: E402
     get_queries,
 )
 from clara_ocr_spark.session import build_session  # noqa: E402
+from tests.conftest import LAUNCH  # noqa: E402
 
 
 def main() -> int:
@@ -34,9 +35,7 @@ def main() -> int:
     names = list(qs)
     if window_only:
         names = names[: len(DRIVER_WINDOW)]
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--master local[8] --driver-memory 4g pyspark-shell"
-    )
+    os.environ.setdefault("PYSPARK_SUBMIT_ARGS", LAUNCH)
     spark = build_session("oracle-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(sf_dir)

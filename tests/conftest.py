@@ -15,17 +15,22 @@ from clara_ocr_spark.sources.corpus import ensure_corpus
 
 DATA_DIR = os.path.join(os.path.dirname(__file__), "..", ".data")
 
+# Master and driver heap of the tests' session, passed the way
+# spark-submit passes them; scripts that reproduce what the tests pin
+# launch with it too.
+LAUNCH = "--master local[8] --driver-memory 4g pyspark-shell"
+
 
 @pytest.fixture(scope="session")
 def spark():
-    # Master and driver heap are launch settings, passed the way
-    # spark-submit passes them; the JVM reads them once, at start.  The
-    # job subprocesses the tests start make their own launch.
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--master local[8] --driver-memory 4g pyspark-shell"
-    )
+    # The JVM reads the launch once, at start; a PYSPARK_SUBMIT_ARGS
+    # already in the environment wins.  Otherwise it is removed again
+    # so the job subprocesses the tests start make their own launch.
+    preset = "PYSPARK_SUBMIT_ARGS" in os.environ
+    os.environ.setdefault("PYSPARK_SUBMIT_ARGS", LAUNCH)
     s = build_session("clara-tests")
-    del os.environ["PYSPARK_SUBMIT_ARGS"]
+    if not preset:
+        del os.environ["PYSPARK_SUBMIT_ARGS"]
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -12,6 +12,7 @@ from pyspark.sql import Window
 
 from clara_ocr_spark.streaming.events_stream import (
     SESSION_GAP_S,
+    core_state_partitions,
     drain_to_memory,
     read_events_stream,
     user_sessions_stateful,
@@ -127,21 +128,22 @@ def test_recrawl_state_carries_across_drains(spark, tmp_path):
     emitted = []
 
     def drain():
-        q = (
-            recrawl_changes_stateful(
-                spark.readStream.schema(
-                    "event_id long, url string, digest string"
-                ).parquet(str(src) + "/shard=*")
+        with core_state_partitions(spark):
+            q = (
+                recrawl_changes_stateful(
+                    spark.readStream.schema(
+                        "event_id long, url string, digest string"
+                    ).parquet(str(src) + "/shard=*")
+                )
+                .writeStream.foreachBatch(
+                    lambda df, _id: emitted.extend(df.collect())
+                )
+                .outputMode("update")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
             )
-            .writeStream.foreachBatch(
-                lambda df, _id: emitted.extend(df.collect())
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            q.awaitTermination()
 
     feed([(0, "u0", "da"), (1, "u0", "da"), (2, "u1", "dx")], 0)
     drain()
@@ -285,16 +287,17 @@ def test_streaming_dedup_state_bounded_by_watermark(spark, tmp_path):
             str(src / f"shard={name}")
         )
     stream = read_events_stream(spark, str(src) + "/shard=*")
-    q = (
-        dedup_events(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_state_bound")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_late"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with core_state_partitions(spark):
+        q = (
+            dedup_events(stream)
+            .writeStream.format("memory")
+            .queryName("dedup_state_bound")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ck_late"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     ids = sorted(r.event_id for r in spark.table("dedup_state_bound").collect())
     assert ids == list(range(2100)), "exactly-once violated"
     progresses = [p for p in q.recentProgress if p["stateOperators"]]
