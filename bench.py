@@ -267,10 +267,14 @@ def run_media_decode(
 def launch(cores: int) -> None:
     """Master and driver heap for this process's JVM, passed the way
     spark-submit passes them; they apply when the first session starts.
-    A ``PYSPARK_SUBMIT_ARGS`` already in the environment wins."""
+    The heap is 24g or half of physical memory, whichever is less, so
+    local mode leaves room for the Python workers on a small host.  A
+    ``PYSPARK_SUBMIT_ARGS`` already in the environment wins."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap_mb = min(24 * 1024, phys_mb // 2)
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS",
-        f"--master local[{cores}] --driver-memory 24g pyspark-shell",
+        f"--master local[{cores}] --driver-memory {heap_mb}m pyspark-shell",
     )
 
 

@@ -11,10 +11,11 @@ preferred-symbol partition (keep one representative per equivalence
 class, common.h:612-631): every input url lands in exactly ONE of the
 two outputs, with a deterministic reason when rejected.
 
-Everything is built from the same column-expression library the
-oracle-checked catalog uses (``queries._tokens`` / ``_grams`` /
-``_minhash_sig`` / ``_min_label_components``) — the catalog entries
-are the unit-verified pieces; this module is their composition.
+Everything is built from the text-signature primitives in
+``functions/textsig`` (``_tokens`` / ``_grams`` / ``_minhash_sig`` /
+``_min_label_components``), the same ones the oracle-checked catalog
+entries call — the catalog entries are the unit-verified pieces; this
+module is their composition, and it imports nothing from the catalog.
 
 Scale notes: features are per-row expressions (no shuffle); the
 quality gate is a filter; near-dup is the minhash → band equi-join →
@@ -31,7 +32,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from .config import SetOverrides
-from .queries import (
+from .functions.textsig import (
+    WIN_K,
     _band_candidates,
     _dup_2gram_frac,
     _gram5_hashes,
@@ -113,7 +115,7 @@ def drop_frequent_lines(
     key is (host, line-hash), which line diversity spreads — unlike
     host-only aggregates, no salt is needed.  Same line unit as the
     oracle-checked ``line_dedup_corpus`` catalog query
-    (queries._positional_lines_arr — single source of truth); lines
+    (functions/textsig._positional_lines_arr, shared); lines
     are built from the ORIGINAL-case tokens so surviving text keeps
     its casing, while frequency is counted on the lowercased 60-bit
     line hash (8 bytes per line through both shuffles, never text).
@@ -165,7 +167,7 @@ def text_features(extracted: DataFrame) -> DataFrame:
     """(url, text) → + n_tokens, top_word_frac, dup_2gram_frac.
     Pure higher-order array expressions, zero shuffle — the SAME
     expressions the oracle-checked ``repetition_filter`` catalog
-    entry uses (queries._top_word_frac / _dup_2gram_frac)."""
+    entry uses (functions/textsig._top_word_frac / _dup_2gram_frac)."""
     toks = _tokens(F.lower(F.col("text")))
     return extracted.select(
         "*",
@@ -306,8 +308,8 @@ def quality_reason(cfg: CurateConfig) -> F.Column:
 def lm_nll(docs: DataFrame, ref: DataFrame) -> DataFrame:
     """(url, text) × reference corpus (text) → (url, lm_nll): mean
     bigram NLL under the add-0.1-smoothed LM trained on ``ref`` — the
-    `ngram_lm_score` catalog core (queries.bigram_nll, single source
-    of truth) applied at the job boundary.  Docs with < 2 tokens emit
+    `ngram_lm_score` catalog core (functions/textsig.bigram_nll)
+    applied at the job boundary.  Docs with < 2 tokens emit
     no row (left-join to NULL upstream)."""
     d = docs.select("url", _tokens(F.lower(F.col("text"))).alias("ws"))
     r = ref.select(_tokens(F.lower(F.col("text"))).alias("ws"))
@@ -317,9 +319,9 @@ def lm_nll(docs: DataFrame, ref: DataFrame) -> DataFrame:
 def dsir_weights(curated: DataFrame, target: DataFrame) -> DataFrame:
     """Per-url DSIR log importance weight of every curated doc against
     a target-domain sample (text column) — the `dsir_importance`
-    catalog core (queries.dsir_logweights) as a job sidecar: the
-    resampling key for target-matched corpus selection.  O(1)-size
-    broadcast model; token-less docs score NULL."""
+    catalog core (functions/textsig.dsir_logweights) as a job
+    sidecar: the resampling key for target-matched corpus selection.
+    O(1)-size broadcast model; token-less docs score NULL."""
     d = curated.select(
         "url", F.explode(_tokens(F.lower(F.col("text")))).alias("w")
     )
@@ -337,11 +339,11 @@ def winnow_dup_pairs(docs: DataFrame, min_pm: int) -> DataFrame:
     ≥ 11 normalized chars are guaranteed a shared fingerprint), the
     complement of the vocabulary-sensitive MinHash tier: a page that
     embeds another page verbatim inside much more text has low token
-    Jaccard but high containment.  ``queries.winnow_pairs`` is the
-    chain, shared with the oracle-checked ``winnow_near_dup`` catalog
-    entry; its df ≤ FP_MAX_DF hot-fingerprint cap bounds every join
-    bucket (boilerplate fingerprints are not dup signal and an f-doc
-    fingerprint contributes f² pairs)."""
+    Jaccard but high containment.  ``functions/textsig.winnow_pairs``
+    is the chain, shared with the oracle-checked ``winnow_near_dup``
+    catalog entry; its df ≤ FP_MAX_DF hot-fingerprint cap bounds every
+    join bucket (boilerplate fingerprints are not dup signal and an
+    f-doc fingerprint contributes f² pairs)."""
     return winnow_pairs(docs, "url", min_pm).select("i_id", "j_id")
 
 
@@ -404,8 +406,8 @@ def contaminated_urls(
     """urls of ``docs(url, text)`` sharing at least one word-5-gram
     with ``eval_texts(text)`` — the benchmark-decontamination probe
     (same shingle unit and portable hash as the oracle-checked
-    ``decontaminate`` catalog query; queries._gram5_hashes is the
-    single source of truth).
+    ``decontaminate`` catalog query; both call
+    functions/textsig._gram5_hashes).
 
     Scale shape: the eval side is benchmark-sized at any corpus scale,
     so its distinct hashed shingle set broadcasts; the corpus side
@@ -433,8 +435,8 @@ def fuzzy_contaminated_urls(
     near-match decontamination are this shape).  Returns
     (url, jaccard) with the best match's token-set Jaccard ≥ tau.
 
-    Banding is 4 bands × 1 row (`queries._recall_bands` — the single
-    source of truth shared with the oracle-checked
+    Banding is 4 bands × 1 row (`functions/textsig._recall_bands`,
+    shared with the oracle-checked
     `fuzzy_decontaminate` catalog twin), NOT the 2×2
     `_minhash_bands` the dedup tier uses: dedup wants precision at
     τ ≈ 0.8+, decontamination wants RECALL at τ ≈ 0.5, where 4×1
@@ -731,8 +733,6 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
     |distinct lengths|); heads are TakeOrderedAndProject.  The extra
     passes are the honest cost of a whole-corpus audit sidecar (the
     --encoding-audit precedent)."""
-    from .queries import WIN_K
-
     toks = _tokens(F.lower(F.col("text")))
 
     head = (

@@ -1,4 +1,3 @@
-"""Scalar column functions — SURVEY §2.7 analogues, all JVM-side."""
-
-from .intervals import intersize, ldist  # noqa: F401
-from .text import accent_fold, compose_marks  # noqa: F401
+"""Column functions — SURVEY §2.7 analogues, all JVM-side — and the
+text-signature primitives (``textsig``) that curation, the pipeline
+and the catalog share."""

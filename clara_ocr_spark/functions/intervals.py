@@ -1,8 +1,8 @@
 """1-D closed-interval algebra as pure column expressions.
 
-≈ ``intersize`` / ``ldist`` (clara.c:1246-1274): the primitives under
-Clara's geometric pairing tests (s_pair vertical intersection,
-w_pair horizontal gaps).  Closed integer intervals [a,b], [c,d].
+≈ ``intersize`` (clara.c:1246-1274): the primitive under Clara's
+geometric pairing tests (s_pair vertical intersection).  Closed
+integer intervals [a,b], [c,d].
 """
 
 from __future__ import annotations
@@ -17,18 +17,7 @@ def intersize(a: Column, b: Column, c: Column, d: Column) -> Column:
     return F.greatest(F.least(b, d) - F.greatest(a, c) + 1, F.lit(0))
 
 
-def ldist(a: Column, b: Column, c: Column, d: Column) -> Column:
-    """Gap between [a,b] and [c,d]: 0 when they touch or overlap, else
-    the count of integers strictly between them.  ldist(0,1, 3,4) = 1
-    (the point 2)."""
-    return F.greatest(F.greatest(a, c) - F.least(b, d) - 1, F.lit(0))
-
-
 def py_intersize(a: int, b: int, c: int, d: int) -> int:
     """Python oracle (the clara-tests.c ldist2 pattern: an independent
     reimplementation the column version is checked against)."""
     return max(min(b, d) - max(a, c) + 1, 0)
-
-
-def py_ldist(a: int, b: int, c: int, d: int) -> int:
-    return max(max(a, c) - min(b, d) - 1, 0)

@@ -150,13 +150,10 @@ def _hqbin_residual(
     the residual, not the corpus). Output ``(url, text, hq_reparsed)``."""
     import pyspark.sql.functions as F
 
-    def ntok(c):
-        return F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
-            F.size(F.split(F.trim(c), r"\s+"))
-        )
+    from .functions.textsig import _tokens
 
     first = extracted.select("url", "text").withColumn(
-        "_n1", ntok(F.col("text"))
+        "_n1", F.size(_tokens(F.col("text")))
     )
     passing = first.filter(F.col("_n1") >= HQ_MIN_TOKENS).select(
         "url", "text", F.lit(False).alias("hq_reparsed")
@@ -166,7 +163,7 @@ def _hqbin_residual(
     second = extract(retry_pages, patterns, cfg=HQ_LOOSE).select(
         "url", F.col("text").alias("_t2")
     )
-    second = second.withColumn("_n2", ntok(F.col("_t2")))
+    second = second.withColumn("_n2", F.size(_tokens(F.col("_t2"))))
     better = F.coalesce(F.col("_n2") > F.col("_n1"), F.lit(False))
     resolved = failing.join(second, "url", "left").select(
         "url",

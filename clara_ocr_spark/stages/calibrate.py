@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.textsig import _let
+
 
 #: Upper end of the word-length cutoff grid t ∈ 1..DESKEW_MAX_T.
 DESKEW_MAX_T = 12
@@ -33,16 +35,12 @@ def deskew_profile(extracted: DataFrame) -> DataFrame:
     Scale shape: the word-length array is bound once per doc, the
     whole grid is one JVM higher-order expression — zero shuffles,
     zero Python, cost ∝ tokens."""
-    def let(col, fn):
-        # lambda-bind: evaluate col once, reference it many times
-        # (same idiom as queries._let; a bare column reference would
-        # re-split the text per grid point)
-        return F.element_at(F.transform(F.array(col), fn), 1)
-
     lens = F.transform(
         F.split(F.trim(F.col("text")), r"\s+"), lambda w: F.length(w)
     )
-    scores = let(
+    # let-bound: a bare column reference would re-split the text per
+    # grid point
+    scores = _let(
         lens,
         lambda ls: F.transform(
             F.sequence(F.lit(1), F.lit(DESKEW_MAX_T)),
@@ -53,8 +51,8 @@ def deskew_profile(extracted: DataFrame) -> DataFrame:
     )
     return extracted.select(
         "url",
-        let(scores, lambda sc: F.array_position(sc, F.array_max(sc)))
+        _let(scores, lambda sc: F.array_position(sc, F.array_max(sc)))
         .cast("int")
         .alias("deskew_t"),
-        let(scores, lambda sc: F.array_max(sc)).alias("deskew_score"),
+        _let(scores, lambda sc: F.array_max(sc)).alias("deskew_score"),
     )

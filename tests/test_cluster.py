@@ -1,4 +1,4 @@
-"""Distributed connected components (``queries._min_label_components``)
+"""Distributed connected components (``textsig._min_label_components``)
 stress tests.
 
 The cross-document generalization of Clara's ``clusterize``
@@ -15,7 +15,7 @@ from __future__ import annotations
 def _cc(spark, edge_list):
     import math
 
-    from clara_ocr_spark.queries import _min_label_components
+    from clara_ocr_spark.functions.textsig import _min_label_components
 
     pairs = spark.createDataFrame(edge_list, "i_id bigint, j_id bigint")
     stats = {}

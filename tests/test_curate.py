@@ -524,7 +524,7 @@ def test_corpus_health_report(spark):
     batch to fit, so only it is NULL.  An EMPTY table reports
     n_docs = 0, NULL for every sum and fit, a zero KS distance and NO
     length-quantile rows (not NULL ones)."""
-    from clara_ocr_spark.queries import WIN_K
+    from clara_ocr_spark.functions.textsig import WIN_K
 
     schema = "url string, text string"
     rows = []

@@ -1,4 +1,4 @@
-"""Interval algebra + text function tests.
+"""Interval algebra tests.
 
 Mirrors the reference's own unit-test strategy (clara-tests.c:3-96):
 an independent Python oracle + exhaustive case enumeration, here as a
@@ -12,8 +12,7 @@ import itertools
 
 import pyspark.sql.functions as F
 
-from clara_ocr_spark.functions import accent_fold, compose_marks, intersize, ldist
-from clara_ocr_spark.functions.intervals import py_intersize, py_ldist
+from clara_ocr_spark.functions.intervals import intersize, py_intersize
 
 
 def test_interval_algebra_exhaustive(spark):
@@ -28,14 +27,10 @@ def test_interval_algebra_exhaustive(spark):
     got = df.select(
         "a", "b", "c", "d",
         intersize(F.col("a"), F.col("b"), F.col("c"), F.col("d")).alias("i"),
-        ldist(F.col("a"), F.col("b"), F.col("c"), F.col("d")).alias("l"),
     ).collect()
     assert len(got) == len(cases)
     for r in got:
         assert r.i == py_intersize(r.a, r.b, r.c, r.d), (r.a, r.b, r.c, r.d)
-        assert r.l == py_ldist(r.a, r.b, r.c, r.d), (r.a, r.b, r.c, r.d)
-        # identities: overlapping ⇒ gap 0; disjoint ⇒ size 0
-        assert r.i == 0 or r.l == 0
 
 
 def test_interval_known_values(spark):
@@ -44,20 +39,6 @@ def test_interval_known_values(spark):
         "a int, b int, c int, d int",
     ).select(
         intersize(F.col("a"), F.col("b"), F.col("c"), F.col("d")).alias("i"),
-        ldist(F.col("a"), F.col("b"), F.col("c"), F.col("d")).alias("l"),
     ).collect()
-    assert [(r.i, r.l) for r in rows] == [(2, 0), (0, 1), (1, 0), (2, 0)]
+    assert [r.i for r in rows] == [2, 0, 1, 2]
 
-
-def test_accent_fold(spark):
-    df = spark.createDataFrame([("ação coração über GRÖSSE",)], "s string")
-    # Ö is in the fold table; ß is not (no ASCII single-char fold)
-    got = df.select(accent_fold(F.col("s")).alias("f")).first().f
-    assert got == "acao coracao uber GROSSE"
-
-
-def test_compose_marks(spark):
-    decomposed = "a" + "c\u0327" + "a\u0303" + "o e\u0302"
-    df = spark.createDataFrame([(decomposed,)], "s string")
-    got = df.select(compose_marks(F.col("s")).alias("c")).first().c
-    assert got == "a\u00e7\u00e3o \u00ea"

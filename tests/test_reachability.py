@@ -8,7 +8,9 @@ The roots are the jobs, the bench drivers, the driver contract
 fixed point over the ``ast``: a reached def or an imported module's
 top-level code references names (``Name``, ``Attribute`` and import
 names; strings, docstrings and comments do not count), and every
-package def with a referenced name is reached.  Resolution is by name
+package def with a referenced name is reached.  A package
+``__init__``'s top-level ``from … import`` is a re-export: it loads the
+module but references none of the names it lists.  Resolution is by name
 alone, so the pass over-approximates: anything it calls unreached is
 truly reached by no production path.
 """
@@ -16,6 +18,8 @@ truly reached by no production path.
 from __future__ import annotations
 
 import ast
+import subprocess
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -28,7 +32,6 @@ ALLOWED = frozenset({
     "extract_rules.reference_extract_markup",
     "sources.pdfparse.pdf_reference_extract",
     "functions.intervals.py_intersize",
-    "functions.intervals.py_ldist",
     "functions.phash.media_dhash",
     "functions.phash.media_audio_fp",
     # fixture writers and producers of job inputs (--patterns and
@@ -87,7 +90,8 @@ def _references(nodes, module: str, is_package: bool):
                     base = ".".join(pkg + ([base] if base else []))
                 modules.add(base)
                 for a in n.names:
-                    names.add(a.name)
+                    if not (is_package and n is top):
+                        names.add(a.name)
                     modules.add(f"{base}.{a.name}")
     return names, modules
 
@@ -185,3 +189,34 @@ def test_one_session_builder():
     )
     assert builders == [f"{PKG}/session.py"]
     assert jobs.extract_job.build_session is build_session
+
+
+def test_catalog_imports_one_way():
+    """The oracle catalog (``queries``) imports the production modules,
+    never the reverse: no other package module imports it, at the top
+    or inside a function, and importing curation and the extraction
+    pipeline leaves it unloaded."""
+    catalog = f"{PKG}.queries"
+    importers = sorted(
+        str(path.relative_to(ROOT))
+        for path in (ROOT / PKG).rglob("*.py")
+        if path.name != "queries.py"
+        and any(
+            m == catalog or m.startswith(catalog + ".")
+            for m in _references(
+                [ast.parse(path.read_text())],
+                _module_name(path),
+                path.name == "__init__.py",
+            )[1]
+        )
+    )
+    assert not importers, f"package modules importing the catalog: {importers}"
+    probe = (
+        f"import sys, {PKG}.curate, {PKG}.pipeline; "
+        f"print({catalog!r} in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "False"

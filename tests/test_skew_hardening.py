@@ -509,7 +509,8 @@ def test_winnow_matches_bruteforce(spark, sf001):
 
     import duckdb
 
-    from clara_ocr_spark.queries import REGISTRY, WIN_K, WIN_W
+    from clara_ocr_spark.functions.textsig import WIN_K, WIN_W
+    from clara_ocr_spark.queries import REGISTRY
 
     con = duckdb.connect()
     rows = con.sql(
@@ -559,7 +560,7 @@ def test_winnow_guarantee_shared_substring(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from clara_ocr_spark.queries import winnow_select
+    from clara_ocr_spark.functions.textsig import winnow_select
 
     needle = "the winnowing guarantee holds for this"
     assert len(needle) == 38 >= 11
@@ -659,7 +660,8 @@ def test_winnow_near_dup_hot_fingerprint_cap(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from clara_ocr_spark.queries import FP_MAX_DF, REGISTRY
+    from clara_ocr_spark.functions.textsig import FP_MAX_DF
+    from clara_ocr_spark.queries import REGISTRY
 
     n_docs = FP_MAX_DF * 4  # template df = 64 >> cap
     template = " ".join(f"boiler{i:02d} plate{i:02d}" for i in range(40))
@@ -886,7 +888,7 @@ def test_hubness_planted_hub(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from clara_ocr_spark.queries import HUB_K, REGISTRY, winnow_select  # noqa: F401
+    from clara_ocr_spark.queries import HUB_K, REGISTRY
 
     rng = np.random.default_rng(7)
     hub = rng.normal(size=64)
