@@ -3,16 +3,22 @@
 ``continue_ocr``'s cooperative state machine (clara.c:3824-4187)
 becomes ONE lazy DataFrame plan built by :func:`extract`:
 segment → classify → (acts → structural acts → spell → consistency
-gate) → assemble → (hqbin residual pass) → (PDF layout leg union).
-The extraction job, the streaming driver, the curation job, the bench
-and the tests all call this one builder.
+gate) → assemble → (hqbin residual pass).  Mixed tables take the same
+path: the segment stage routes each ``%PDF-`` payload to the geometric
+layout and emits its lines as blocks, so HTML and PDF share one Python
+stage, one classify and one assembly.  The extraction job, the
+streaming driver, the curation job, the bench and the tests all call
+this one builder.
 """
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .config import DEFAULT, ExtractConfig
+from .extract_rules import LABEL_CONTENT
+from .sources.pdfparse import PDF_MAGIC
 from .stages.assemble import (
     assemble,
     assemble_encap,
@@ -20,6 +26,7 @@ from .stages.assemble import (
     assemble_markup,
 )
 from .stages.classify import classify, heuristic_label, heuristic_score
+from .stages.layout import PDF_TAG_PATH
 from .stages.segment import segment
 
 #: hqbin quality gate (reference preproc.c:672-721): first-pass
@@ -29,16 +36,11 @@ HQ_MIN_TOKENS = 5
 #: ``bin_method`` selector analogue, common.h:297-299)
 HQ_LOOSE = ExtractConfig(min_text_len=3, link_density_max=0.75)
 
-#: PDF magic (first five payload bytes) — JVM-side routing predicate.
-PDF_MAGIC = b"%PDF-"
-
 
 def _is_pdf_col():
-    """NULL-safe: a NULL html payload is NOT a PDF (it must route to
-    the DOM leg, whose parser yields the empty page — otherwise both
-    legs' filters drop the row and the url vanishes from the output)."""
-    import pyspark.sql.functions as F
-
+    """``pdfparse.is_pdf`` as a column, for the JVM-side slices (the
+    job's HTML harvests, ``--skew-report``).  NULL-safe: a NULL html
+    payload is NOT a PDF, as in ``is_pdf``."""
     return F.coalesce(
         F.substring(F.col("html"), 1, 5) == F.lit(PDF_MAGIC), F.lit(False)
     )
@@ -83,16 +85,21 @@ def extract(
       :data:`HQ_MIN_TOKENS` tokens are re-extracted over the failing
       slice only with :data:`HQ_LOOSE`, kept when strictly better;
       adds ``hq_reparsed``.
-    * ``mixed`` — ``%PDF-`` payloads go through the geometric layout
-      leg (``stages.layout``, column ``splitter`` river or tall), the
-      rest through the DOM leg, unioned into one plan.
+    * ``mixed`` — the segment stage routes ``%PDF-`` payloads to the
+      geometric layout (``stages.layout``, column ``splitter`` river
+      or tall): one block per line, labeled content right after
+      classification, so acts, spell, the gate and the assembly treat
+      PDF lines as content blocks. Does not compose with ``hqbin``.
     * ``gate`` — an Observation that receives the step_6 consistency
       sums, attached to the labeled blocks just before assembly;
       check it with ``consist.assert_observed`` after the action."""
-    dom = pages.filter(~_is_pdf_col()) if mixed else pages
+    if hqbin and mixed:
+        raise ValueError("hqbin re-extracts on the DOM path; not with mixed")
     # only the scored engines read the punct/stopword/word statistics
     scored = engine is not None and patterns is not None
-    blocks = segment(dom, full_features=scored, with_emph=fmt == "markup")
+    blocks = segment(
+        pages, scored, with_emph=fmt == "markup", mixed=mixed, splitter=splitter
+    )
     if scored:
         from .stages.engines import classify_scored
 
@@ -105,6 +112,13 @@ def extract(
     else:
         blocks = classify(
             blocks, patterns, cfg.min_text_len, cfg.link_density_max
+        )
+    if mixed:
+        # a PDF line's reading order is its geometry: no rule applies
+        blocks = blocks.withColumn(
+            "label",
+            F.when(F.col("tag_path") == PDF_TAG_PATH, F.lit(LABEL_CONTENT))
+            .otherwise(F.col("label")),
         )
     if acts is not None:
         from .stages.feedback import apply_feedback
@@ -129,13 +143,7 @@ def extract(
         "full_html": assemble_full_html,
     }[fmt](blocks)
     if hqbin:
-        out = _hqbin_residual(out, dom, patterns)
-    if mixed:
-        from .stages.layout import extract_pdf
-
-        out = out.unionByName(
-            extract_pdf(pages.filter(_is_pdf_col()), splitter)
-        )
+        out = _hqbin_residual(out, pages, patterns)
     return out
 
 
@@ -148,8 +156,6 @@ def _hqbin_residual(
     re-extracted with :data:`HQ_LOOSE` (left-semi residual — the
     second pass scans only that slice, so its cost is proportional to
     the residual, not the corpus). Output ``(url, text, hq_reparsed)``."""
-    import pyspark.sql.functions as F
-
     from .functions.textsig import _tokens
 
     first = extracted.select("url", "text").withColumn(

@@ -26,7 +26,8 @@ boundary so the single-node reference extractor and the Spark plan
 compare identical doubles (IEEE754 both sides).
 
 ``pdf_reference_extract`` is the single-node oracle whose output the
-distributed layout stage (``stages/layout.py``) must reproduce
+distributed extraction of PDF payloads (``pipeline.extract(mixed=True)``,
+lines from ``stages/layout.pdf_blocks``) must reproduce
 byte-identically — same contract as ``extract_rules.reference_extract``
 for the DOM path (SURVEY §7 hard-part 1).
 """
@@ -551,14 +552,13 @@ def join_words(line: List[Run]) -> str:
 
 def page_lines(
     page_runs: List[Run], splitter: str = "river"
-) -> List[Tuple[int, float, str]]:
-    """One page's non-empty lines as ``(zone, line_y, text)``: the
-    same column split, line grouping and word joining as
-    ``pdf_reference_extract``, with the cross-page ordering left to
-    the caller (``stages/layout.assemble_layout``).  ``line_y`` is the
-    line's highest run y; it strictly decreases down a zone (lines are
-    separated by more than LINE_TOL), so (zone, −line_y) reproduces
-    the oracle's line order."""
+) -> List[Tuple[int, str]]:
+    """One page's non-empty lines in reading order (zone asc, y desc)
+    as ``(n_runs, text)``: the same column split, line grouping and
+    word joining as :func:`reference_text`, with the cross-page order
+    left to the caller (``stages/layout.pdf_blocks``).  Lines of a
+    zone are separated by more than LINE_TOL, so ``group_lines`` order
+    is the oracle's line order."""
     if splitter == "tall":
         split = column_split_tall(page_runs)
         page_runs = [r for r in page_runs if not is_tall_separator(r)]
@@ -571,17 +571,23 @@ def page_lines(
             [r for r in page_runs if r.x < split],
             [r for r in page_runs if r.x >= split],
         ]
-    out: List[Tuple[int, float, str]] = []
-    for zone, zr in enumerate(zones):
+    out: List[Tuple[int, str]] = []
+    for zr in zones:
         for line in group_lines(zr):
             text = join_words(line)
             if text:
-                out.append((zone, line[0].y, text))
+                out.append((len(line), text))
     return out
 
 
 def pdf_reference_extract(raw: Optional[bytes], splitter: str = "river") -> str:
-    """PDF bytes → reading-order text (single-node oracle).
+    """PDF bytes → reading-order text (single-node oracle): the parse,
+    then :func:`reference_text`."""
+    return reference_text(parse_pdf_runs(raw), splitter)
+
+
+def reference_text(runs: List[Run], splitter: str = "river") -> str:
+    """Positioned runs → reading-order text (the single-node oracle).
 
     Order: page asc, zone asc (left column first), line y desc, run x
     asc; lines joined by ``\\n``; empty lines skipped (html.c:2255-2261
@@ -592,9 +598,6 @@ def pdf_reference_extract(raw: Optional[bytes], splitter: str = "river") -> str:
     ``"tall"`` = tall separator glyphs (cf_block analogue) — separator
     runs themselves are dropped from the text, matching the
     reference's discard of rule symbols."""
-    runs = parse_pdf_runs(raw)
-    if not runs:
-        return ""
     pages = sorted({r.page for r in runs})
     out: List[str] = []
     for p in pages:

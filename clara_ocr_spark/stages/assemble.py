@@ -12,7 +12,10 @@ emits a sentinel row (pos = -1) per document, so ONE aggregation
 blocks come out with ``text=''`` (the reference emits an empty page,
 not no page; html.c:2255-2261 skips empty *lines*, not the document).
 ``array_sort(collect_list(struct))`` gives a deterministic order
-inside the aggregate; ``array_join`` concatenates.
+inside the aggregate; ``array_join`` concatenates.  A mixed
+extraction's PDF lines are blocks too (zone 0, ``pos`` their reading
+order, ``stages/layout.pdf_blocks``), so the same aggregate assembles
+both payload kinds.
 """
 
 from __future__ import annotations

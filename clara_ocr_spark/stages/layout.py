@@ -1,11 +1,12 @@
-"""Stage B' — geometric layout assembly for PDF pages.
+"""Stage B' — geometric layout for PDF pages.
 
 The PDF leg of the north rule ("HTML boilerplate strip, PDF/layout
 parse, DOM heuristics").  Where the DOM path gets reading order from
 tree order, this stage RECONSTRUCTS it from glyph-run geometry — which
 is exactly the reference's own problem, so the mapping is direct
-rather than analogical.  The per-page geometry runs in the parse
-stage, in ``sources/pdfparse``:
+rather than analogical.  The per-page geometry runs inside the segment
+stage (``stages/segment``), which routes each ``%PDF-`` payload here,
+in ``sources/pdfparse``:
 
 * column split ≈ ``blockfind``/``vlines2`` white-river detection
   (pgmblock.c:801-942, 1108-1271) — ``column_split``, or the
@@ -16,14 +17,13 @@ stage, in ``sources/pdfparse``:
   no-space-before-punctuation output rule (symbol.c:956-1030,
   html.c:2069-2083) — ``join_words``;
 * reading order ≈ ``cmpln`` as a strict total order (build.c:389-509)
-  — ``array_sort`` on (page, zone, −y, text), in the JVM.
+  — page asc, then ``page_lines`` order (zone asc, y desc), carried
+  as the block ``pos``.
 
-Same shape as the HTML leg: ONE Python stage splits each document into
-lines (a page's runs never leave the worker), then ONE Exchange on url
-carries only line text + (page, zone, y) to the reading-order
-aggregate.  Byte-identity contract: output equals
-``sources/pdfparse.pdf_reference_extract`` per url; both sides compare
-the same IEEE754 doubles rounded once at the parse boundary.
+A PDF document becomes one block per line (:func:`pdf_blocks`), so its
+lines join the DOM blocks in the one classify and the one url-keyed
+assembly of ``pipeline.extract``.  Byte-identity contract: output
+equals ``sources/pdfparse.pdf_reference_extract`` per url.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from __future__ import annotations
 from typing import Iterator, List
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -41,7 +40,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..domparse import Block
 from ..sources.pdfparse import Run, page_lines, parse_pdf_runs
+
+#: ``tag_path`` of a PDF line block.  DOM tag names start with a
+#: letter, so no DOM path can produce it; ``extract`` labels every
+#: block carrying it content.
+PDF_TAG_PATH = "%PDF"
 
 RUNS_SCHEMA = StructType(
     [
@@ -55,27 +60,13 @@ RUNS_SCHEMA = StructType(
     ]
 )
 
-LINES_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("page", IntegerType(), False),
-        StructField("zone", IntegerType(), False),
-        StructField("line_y", DoubleType(), False),
-        StructField("line_text", StringType(), False),
-    ]
-)
-
-#: Sentinel row per document (page = -1, empty text): keeps line-less
-#: urls alive to the final aggregate without a rejoin (same design as
-#: segment.py).
-SENTINEL_PAGE = -1
-
 
 def _run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
         for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-            rows.append((url, SENTINEL_PAGE, 0.0, 0.0, 0.0, 0.0, ""))
+            # a page = -1 sentinel keeps run-less urls in the output
+            rows.append((url, -1, 0.0, 0.0, 0.0, 0.0, ""))
             for r in parse_pdf_runs(raw):
                 rows.append((url, r.page, r.x, r.x_end, r.y, r.size, r.text))
         yield pd.DataFrame(rows, columns=RUNS_SCHEMA.fieldNames())
@@ -90,63 +81,28 @@ def parse_runs(pages: DataFrame) -> DataFrame:
     )
 
 
-def doc_lines(url: str, runs: List[Run], splitter: str = "river") -> list:
-    """One document's runs → its ``LINES_SCHEMA`` rows: the sentinel,
-    then ``pdfparse.page_lines`` for every page."""
+def pdf_blocks(runs: List[Run], splitter: str = "river") -> List[Block]:
+    """One document's runs → one block per non-empty line, in reading
+    order: pages ascending, then ``pdfparse.page_lines`` order.  Every
+    line is zone 0 with ``pos`` its running index, so the assembly's
+    (zone, pos) sort keeps that order."""
     pages: dict = {}
     for r in runs:
         pages.setdefault(r.page, []).append(r)
-    rows = [(url, SENTINEL_PAGE, 0, 0.0, "")]
-    for page, prs in pages.items():
-        rows.extend(
-            (url, page, zone, y, text)
-            for zone, y, text in page_lines(prs, splitter)
-        )
-    return rows
-
-
-def parse_lines(pages: DataFrame, splitter: str = "river") -> DataFrame:
-    """pages(url, html, …) → lines(url, page, zone, line_y, line_text),
-    the only Python stage of the text path.  Column-prunes to (url,
-    html) before the Arrow boundary; the binary payload and the runs
-    never leave it."""
-
-    def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                rows.extend(doc_lines(url, parse_pdf_runs(raw), splitter))
-            yield pd.DataFrame(rows, columns=LINES_SCHEMA.fieldNames())
-
-    return pages.select("url", "html").mapInPandas(
-        _parse_batches, schema=LINES_SCHEMA
-    )
-
-
-def assemble_layout(lines: DataFrame) -> DataFrame:
-    """lines → extracted(url, text): strict total order (page, zone,
-    y desc), empty lines skipped, lines joined by ``\\n`` — ONE
-    shuffle on url; the sentinel guarantees every url a row."""
-    ordered = F.array_sort(
-        F.collect_list(
-            F.struct("page", "zone", (-F.col("line_y")).alias("ny"), "line_text")
-        )
-    )
-    return lines.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.filter(ordered, lambda s: s["line_text"] != ""),
-                lambda s: s["line_text"],
-            ),
-            "\n",
-        ).alias("text")
-    )
+    lines = [ln for p in sorted(pages) for ln in page_lines(pages[p], splitter)]
+    return [
+        Block(pos, 0, PDF_TAG_PATH, 0, text, 0, n_runs)
+        for pos, (n_runs, text) in enumerate(lines)
+    ]
 
 
 def extract_pdf(pages: DataFrame, splitter: str = "river") -> DataFrame:
-    """pages(url, …, html=PDF bytes) → extracted(url, text).
+    """pages(url, …, html=PDF bytes) → extracted(url, text): the mixed
+    extraction (``pipeline.extract(mixed=True)``) of a PDF slice.
 
     ``splitter``: ``"river"`` (default, vlines2 white-gap analogue) or
     ``"tall"`` (cf_block tall-separator analogue) — the same dispatch
     as ``pdf_reference_extract``."""
-    return assemble_layout(parse_lines(pages, splitter))
+    from ..pipeline import extract
+
+    return extract(pages, mixed=True, splitter=splitter)

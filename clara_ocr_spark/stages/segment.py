@@ -5,6 +5,8 @@
 per-document DOM parsing.  Embarrassingly parallel per document, so it
 rides in ``mapInPandas`` (Arrow batch iterator — zero per-row Python at
 the Spark API level; per-document parsing happens inside the batch).
+For mixed tables the same stage routes each ``%PDF-`` payload to the
+geometric layout (``stages/layout.pdf_blocks``): one block per line.
 
 Everything downstream of this stage is JVM-side column expressions.
 """
@@ -25,7 +27,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..domparse import block_features, parse_blocks
+from ..domparse import block_features
+from ..sources.pdfparse import is_pdf, parse_pdf_runs
+from .layout import pdf_blocks
 
 BLOCKS_SCHEMA = StructType(
     [
@@ -58,67 +62,49 @@ EMPH_FIELD = StructField("emph", ArrayType(StringType(), False), False)
 SENTINEL_POS = -1
 
 
-def _make_segment_fn(full_features: bool, with_emph: bool = False):
-    schema = StructType(
-        BLOCKS_SCHEMA.fields + ([EMPH_FIELD] if with_emph else [])
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _segment_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from ..fastparse import parse_blocks_fast
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                sentinel = (
-                    url, 0, SENTINEL_POS, "", 0, "", 0, 0, 0, 0.0, 0.0, 0.0, 0,
-                )
-                rows.append((sentinel + ([],)) if with_emph else sentinel)
-                for b in parse_blocks_fast(html):
-                    if full_features:
-                        ld, pr, sr, nw, _ = block_features(b)
-                    else:
-                        # extraction hot path: only link_density feeds
-                        # the rule chain; text stats are for quality/
-                        # calibration stages
-                        ld = min(b.link_text_len / max(b.text_len, 1), 1.0)
-                        pr = sr = 0.0
-                        nw = 0
-                    row = (
-                        url,
-                        b.zone,
-                        b.pos,
-                        b.tag_path,
-                        b.depth,
-                        b.text,
-                        b.text_len,
-                        b.link_text_len,
-                        b.n_runs,
-                        ld,
-                        pr,
-                        sr,
-                        nw,
-                    )
-                    if with_emph:
-                        row = row + (
-                            [f"{s}:{e}:{k}" for s, e, k in b.emph],
-                        )
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _segment_batches, schema
-
-
-_segment_full, _ = _make_segment_fn(True)
-_segment_min, _ = _make_segment_fn(False)
-_segment_full_emph, _EMPH_SCHEMA_FULL = _make_segment_fn(True, True)
-_segment_min_emph, _EMPH_SCHEMA_MIN = _make_segment_fn(False, True)
+def doc_rows(
+    url: str, blocks, full_features: bool, with_emph: bool = False
+) -> list:
+    """One document's block rows: its sentinel, then one row per block
+    (``BLOCKS_SCHEMA``, plus ``emph`` when ``with_emph``)."""
+    sentinel = (url, 0, SENTINEL_POS, "", 0, "", 0, 0, 0, 0.0, 0.0, 0.0, 0)
+    rows = [sentinel + ([],) if with_emph else sentinel]
+    for b in blocks:
+        if full_features:
+            ld, pr, sr, nw, _ = block_features(b)
+        else:
+            # extraction hot path: only link_density feeds the rule
+            # chain; text stats are for quality/calibration stages
+            ld = min(b.link_text_len / max(b.text_len, 1), 1.0)
+            pr = sr = 0.0
+            nw = 0
+        row = (
+            url,
+            b.zone,
+            b.pos,
+            b.tag_path,
+            b.depth,
+            b.text,
+            b.text_len,
+            b.link_text_len,
+            b.n_runs,
+            ld,
+            pr,
+            sr,
+            nw,
+        )
+        if with_emph:
+            row = row + ([f"{s}:{e}:{k}" for s, e, k in b.emph],)
+        rows.append(row)
+    return rows
 
 
 def segment(
-    pages: DataFrame, full_features: bool = True, with_emph: bool = False
+    pages: DataFrame,
+    full_features: bool = True,
+    with_emph: bool = False,
+    mixed: bool = False,
+    splitter: str = "river",
 ) -> DataFrame:
     """pages(url, html, …) → blocks, one row per segmented block.
 
@@ -130,14 +116,34 @@ def segment(
     extraction rule chain never reads (quality/calibration stages want
     them; the extract() hot path does not). ``with_emph=True`` adds
     the per-block emphasis spans (for the marked-up output variant).
+    ``mixed=True`` routes each ``%PDF-`` payload (``pdfparse.is_pdf``,
+    NULL is not a PDF) to ``layout.pdf_blocks`` with the column
+    ``splitter``: one block per line, ``tag_path`` =
+    ``layout.PDF_TAG_PATH``.
     """
-    if with_emph:
-        fn = _segment_full_emph if full_features else _segment_min_emph
-        schema = _EMPH_SCHEMA_FULL if full_features else _EMPH_SCHEMA_MIN
-    else:
-        fn = _segment_full if full_features else _segment_min
-        schema = BLOCKS_SCHEMA
-    return pages.select("url", "html").mapInPandas(fn, schema=schema)
+    schema = StructType(
+        BLOCKS_SCHEMA.fields + ([EMPH_FIELD] if with_emph else [])
+    )
+    cols = schema.fieldNames()
+
+    def _segment_batches(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        from ..fastparse import parse_blocks_fast
+
+        for pdf in batches:
+            rows = []
+            for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
+                if mixed and is_pdf(raw):
+                    blocks = pdf_blocks(parse_pdf_runs(raw), splitter)
+                else:
+                    blocks = parse_blocks_fast(raw)
+                rows.extend(doc_rows(url, blocks, full_features, with_emph))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return pages.select("url", "html").mapInPandas(
+        _segment_batches, schema=schema
+    )
 
 
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:

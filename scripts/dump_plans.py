@@ -94,10 +94,22 @@ def main() -> None:
     add(
         "PDF layout leg (extract_pdf)",
         extract_pdf(pdfs),
-        "ONE Exchange, on url, carrying lines: the MapInPandas parse runs\n"
-        "the per-page geometry (column split, line grouping, word joining)\n"
-        "and emits lines; no Window. The binary payload and the runs never\n"
-        "leave the Python stage.",
+        "extract(mixed=True) over a PDF slice. ONE Exchange, on url,\n"
+        "carrying line blocks: the MapInPandas segment stage routes each\n"
+        "%PDF- payload to the per-page geometry (column split, line\n"
+        "grouping, word joining) and emits one block per line; classify\n"
+        "labels them content; no Window. The binary payload and the runs\n"
+        "never leave the Python stage.",
+    )
+    from pyspark.sql import Observation
+
+    add(
+        "mixed extraction (extract(mixed=True, gate=…))",
+        extract(pdfs, mixed=True, gate=Observation()),
+        "The --mixed job's composition; the plan does not depend on the\n"
+        "payload mix. ONE MapInPandas routes HTML and PDF payloads by\n"
+        "magic bytes, ONE Exchange (the url-keyed assembly), the step_6\n"
+        "gate as CollectMetrics; no Union of legs.",
     )
     add(
         "ivf_topk (ANN scale path)",

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Stage-wise profile of the PDF layout leg's 8->32 scaling cell
+"""Stage-wise profile of the PDF extraction's 8->32 scaling cell
 (VERDICT r4 item 3).
 
 Runs each prefix of the extract_pdf plan at a given core count in a
@@ -33,13 +33,14 @@ STAGES = ["parse", "full"]
 
 
 def build(stage: str, pages):
-    """``parse``: the Python stage alone (parse + per-page geometry,
-    lines out); ``full``: that plus the url-keyed reading-order
-    assembly."""
-    from clara_ocr_spark.stages.layout import extract_pdf, parse_lines
+    """``parse``: the routed segment stage alone (parse + per-page
+    geometry, line blocks out); ``full``: that plus classify and the
+    url-keyed reading-order assembly."""
+    from clara_ocr_spark.stages.layout import extract_pdf
+    from clara_ocr_spark.stages.segment import segment
 
     if stage == "parse":
-        return parse_lines(pages)
+        return segment(pages, full_features=False, mixed=True)
     if stage != "full":
         # fail fast: a typoed stage name must not silently time the
         # full pipeline under a wrong label and skew the marginal

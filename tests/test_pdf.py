@@ -27,6 +27,7 @@ from clara_ocr_spark.sources.pdfparse import (
     join_words,
     parse_pdf_runs,
     pdf_reference_extract,
+    reference_text,
 )
 
 
@@ -350,35 +351,19 @@ def _random_runs(rng: random.Random) -> list:
     return runs
 
 
-def _oracle_from_runs(runs: list) -> str:
-    pages = sorted({r.page for r in runs})
-    out = []
-    for p in pages:
-        prs = [r for r in runs if r.page == p]
-        split = column_split(prs)
-        zones = [
-            [r for r in prs if split is None or r.x < split],
-            [] if split is None else [r for r in prs if r.x >= split],
-        ]
-        for zr in zones:
-            for line in group_lines(zr):
-                t = join_words(line)
-                if t:
-                    out.append(t)
-    return "\n".join(out)
-
-
 def test_layout_random_geometry_identity(spark):
     """200 documents of arbitrary random geometry through the
-    production line function and the Spark reading-order assembly vs
-    the single-node oracle — covers shapes the PDF generator never
-    emits (overlaps, tolerance-boundary ties, huge gaps that
-    trigger/just-miss column splits, lines split across zones)."""
-    from clara_ocr_spark.stages.layout import (
-        LINES_SCHEMA,
-        assemble_layout,
-        doc_lines,
-    )
+    production per-document block rows and the Spark reading-order
+    assembly vs the single-node oracle — covers shapes the PDF
+    generator never emits (overlaps, tolerance-boundary ties, huge
+    gaps that trigger/just-miss column splits, lines split across
+    zones)."""
+    import pyspark.sql.functions as F
+
+    from clara_ocr_spark.extract_rules import LABEL_CONTENT
+    from clara_ocr_spark.stages.assemble import assemble
+    from clara_ocr_spark.stages.layout import pdf_blocks
+    from clara_ocr_spark.stages.segment import BLOCKS_SCHEMA, doc_rows
 
     docs = {}
     rows = []
@@ -386,10 +371,12 @@ def test_layout_random_geometry_identity(spark):
         rng = random.Random(1000 + d)
         runs = _random_runs(rng)
         url = f"doc{d}"
-        docs[url] = _oracle_from_runs(runs)
-        rows.extend(doc_lines(url, runs))
-    df = spark.createDataFrame(rows, LINES_SCHEMA)
-    got = {r["url"]: r["text"] for r in assemble_layout(df).collect()}
+        docs[url] = reference_text(runs)
+        rows.extend(doc_rows(url, pdf_blocks(runs), full_features=False))
+    df = spark.createDataFrame(rows, BLOCKS_SCHEMA).withColumn(
+        "label", F.lit(LABEL_CONTENT)
+    )
+    got = {r["url"]: r["text"] for r in assemble(df).collect()}
     assert got == docs
 
 
@@ -579,27 +566,75 @@ def test_committed_pdf_goldens(spark):
     assert got == want
 
 
-def test_layout_plan_one_exchange(spark, pdf_rows):
-    """Scale pin: the whole geometric assembly costs exactly ONE
-    shuffle (url, carrying lines) behind ONE Python boundary that
-    emits lines, no window pass, and the binary payload is pruned
-    before the boundary."""
-    from clara_ocr_spark.stages.layout import extract_pdf
+def test_mixed_plan_one_python_stage(spark, pdf_rows):
+    """Scale pin for the job's composition: HTML and PDF payloads
+    share ONE Python stage (routed by magic bytes) and ONE url
+    shuffle, with the step_6 gate attached and no union of legs;
+    only (url, html) cross into Python and html does not come back."""
+    from pyspark.sql import Observation
 
+    from clara_ocr_spark.pipeline import extract
+
+    rows = [gen_page(i) for i in range(5)] + pdf_rows[:5]
     plan = (
-        extract_pdf(_pages_df(spark, pdf_rows[:5]))
+        extract(_pages_df(spark, rows), mixed=True, gate=Observation())
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert plan.count("Exchange") == 1
-    assert plan.count("MapInPandas") == 1
-    assert "MapInPandas _parse_batches(" in plan
-    assert "Window" not in plan
+    keys = ("MapInPandas", "Exchange", "CollectMetrics", "Union", "Window")
+    assert {k: plan.count(k) for k in keys} == {
+        "MapInPandas": 1,
+        "Exchange": 1,
+        "CollectMetrics": 1,
+        "Union": 0,
+        "Window": 0,
+    }
+    assert "MapInPandas _segment_batches(" in plan
     above, below = plan.split("MapInPandas", 1)
-    # only (url, html) cross into Python, and html does not come back
     assert "warc_ts" not in below and "lang" not in below
     assert "html" not in above
+
+
+def test_mixed_blocks_consistent(spark, pdf_rows):
+    """PDF line blocks pass every step_6 invariant beside the DOM
+    blocks, one block per line of the oracle text, and the gate on
+    the job's composition records no violation."""
+    from pyspark.sql import Observation
+
+    from clara_ocr_spark.pipeline import extract
+    from clara_ocr_spark.stages.classify import classify
+    from clara_ocr_spark.stages.consist import (
+        BLOCK_INVARIANTS,
+        assert_observed,
+        check_blocks,
+    )
+    from clara_ocr_spark.stages.layout import PDF_TAG_PATH
+    from clara_ocr_spark.stages.segment import segment
+
+    rows = [gen_page(i) for i in range(20)] + pdf_rows
+    pages = _pages_df(spark, rows)
+    blocks = classify(segment(pages, full_features=False, mixed=True))
+    assert {
+        r.invariant: r.violations for r in check_blocks(blocks).collect()
+    } == dict.fromkeys(BLOCK_INVARIANTS, 0)
+    n_lines = sum(
+        len(r["text"].split("\n")) for r in pdf_rows if r["text"]
+    )
+    assert n_lines > 0
+    assert blocks.filter(blocks.tag_path == PDF_TAG_PATH).count() == n_lines
+    gate = Observation()
+    extract(pages, mixed=True, gate=gate).collect()
+    assert_observed(gate)
+
+
+def test_hqbin_rejects_mixed(spark, pdf_rows):
+    """No DOM-only frame exists for the hqbin residual pass in a mixed
+    extraction: the pair is refused, not silently re-extracted."""
+    from clara_ocr_spark.pipeline import extract
+
+    with pytest.raises(ValueError, match="hqbin"):
+        extract(_pages_df(spark, pdf_rows[:2]), hqbin=True, mixed=True)
 
 
 class TestPageSkewAngles:

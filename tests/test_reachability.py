@@ -31,6 +31,7 @@ ALLOWED = frozenset({
     "extract_rules.markup_text",
     "extract_rules.reference_extract_markup",
     "sources.pdfparse.pdf_reference_extract",
+    "sources.pdfparse.reference_text",
     "functions.intervals.py_intersize",
     "functions.phash.media_dhash",
     "functions.phash.media_audio_fp",
