@@ -2,7 +2,7 @@
 
 The capstone composition the 100 TB deployment runs after extraction:
 
-    extract(…, mixed=…) → text features → quality gate → near-dup
+    extract(…) → text features → quality gate → near-dup
     canonicalization → curated + rejected(reason) tables
 
 This is the corpus-pipeline analogue of Clara's doubt triage

@@ -3,12 +3,11 @@
 ``continue_ocr``'s cooperative state machine (clara.c:3824-4187)
 becomes ONE lazy DataFrame plan built by :func:`extract`:
 segment → classify → (acts → structural acts → spell → consistency
-gate) → assemble → (hqbin residual pass).  Mixed tables take the same
-path: the segment stage routes each ``%PDF-`` payload to the geometric
-layout and emits its lines as blocks, so HTML and PDF share one Python
-stage, one classify and one assembly.  The extraction job, the
-streaming driver, the curation job, the bench and the tests all call
-this one builder.
+gate) → assemble → (hqbin residual pass).  The segment stage routes
+each ``%PDF-`` payload to the geometric layout and emits its lines as
+blocks, so HTML and PDF share one Python stage, one classify and one
+assembly.  The extraction job, the streaming driver, the curation
+job, the bench and the tests all call this one builder.
 """
 
 from __future__ import annotations
@@ -57,7 +56,6 @@ def extract(
     struct_acts: DataFrame | None = None,
     spell_min_count: int | None = None,
     hqbin: bool = False,
-    mixed: bool = False,
     splitter: str = "river",
     gate: Observation | None = None,
 ) -> DataFrame:
@@ -85,20 +83,16 @@ def extract(
       :data:`HQ_MIN_TOKENS` tokens are re-extracted over the failing
       slice only with :data:`HQ_LOOSE`, kept when strictly better;
       adds ``hq_reparsed``.
-    * ``mixed`` — the segment stage routes ``%PDF-`` payloads to the
-      geometric layout (``stages.layout``, column ``splitter`` river
-      or tall): one block per line, labeled content right after
-      classification, so acts, spell, the gate and the assembly treat
-      PDF lines as content blocks. Does not compose with ``hqbin``.
+    * ``splitter`` — the column strategy (river or tall) for ``%PDF-``
+      payloads, which the segment stage routes to ``stages.layout``:
+      one block per line, labeled content right after classification.
     * ``gate`` — an Observation that receives the step_6 consistency
       sums, attached to the labeled blocks just before assembly;
       check it with ``consist.assert_observed`` after the action."""
-    if hqbin and mixed:
-        raise ValueError("hqbin re-extracts on the DOM path; not with mixed")
     # only the scored engines read the punct/stopword/word statistics
     scored = engine is not None and patterns is not None
     blocks = segment(
-        pages, scored, with_emph=fmt == "markup", mixed=mixed, splitter=splitter
+        pages, scored, with_emph=fmt == "markup", splitter=splitter
     )
     if scored:
         from .stages.engines import classify_scored
@@ -113,13 +107,12 @@ def extract(
         blocks = classify(
             blocks, patterns, cfg.min_text_len, cfg.link_density_max
         )
-    if mixed:
-        # a PDF line's reading order is its geometry: no rule applies
-        blocks = blocks.withColumn(
-            "label",
-            F.when(F.col("tag_path") == PDF_TAG_PATH, F.lit(LABEL_CONTENT))
-            .otherwise(F.col("label")),
-        )
+    # a PDF line's reading order is its geometry: no rule applies
+    blocks = blocks.withColumn(
+        "label",
+        F.when(F.col("tag_path") == PDF_TAG_PATH, F.lit(LABEL_CONTENT))
+        .otherwise(F.col("label")),
+    )
     if acts is not None:
         from .stages.feedback import apply_feedback
 
@@ -143,19 +136,21 @@ def extract(
         "full_html": assemble_full_html,
     }[fmt](blocks)
     if hqbin:
-        out = _hqbin_residual(out, pages, patterns)
+        out = _hqbin_residual(out, pages, patterns, splitter)
     return out
 
 
 def _hqbin_residual(
-    extracted: DataFrame, pages: DataFrame, patterns: DataFrame | None
+    extracted: DataFrame, pages: DataFrame, patterns: DataFrame | None,
+    splitter: str,
 ) -> DataFrame:
     """The hqbin residual pass over a first-pass extraction (reference
     preproc.c:672-721): gate-passing documents are untouched, so their
     text stays byte-identical to the first pass; the failing slice is
     re-extracted with :data:`HQ_LOOSE` (left-semi residual — the
     second pass scans only that slice, so its cost is proportional to
-    the residual, not the corpus). Output ``(url, text, hq_reparsed)``."""
+    the residual, not the corpus); a PDF's retry yields its first-pass
+    lines. Output ``(url, text, hq_reparsed)``."""
     from .functions.textsig import _tokens
 
     first = extracted.select("url", "text").withColumn(
@@ -166,9 +161,8 @@ def _hqbin_residual(
     )
     failing = first.filter(F.col("_n1") < HQ_MIN_TOKENS)
     retry_pages = pages.join(failing.select("url"), "url", "left_semi")
-    second = extract(retry_pages, patterns, cfg=HQ_LOOSE).select(
-        "url", F.col("text").alias("_t2")
-    )
+    second = extract(retry_pages, patterns, cfg=HQ_LOOSE, splitter=splitter)
+    second = second.select("url", F.col("text").alias("_t2"))
     second = second.withColumn("_n2", F.size(_tokens(F.col("_t2"))))
     better = F.coalesce(F.col("_n2") > F.col("_n1"), F.lit(False))
     resolved = failing.join(second, "url", "left").select(

@@ -1,5 +1,5 @@
 """Minimal deterministic PDF text-layout parser (the "PDF/layout
-parse" leg of the north rule).
+parse" of the north rule).
 
 This is the geometric cousin of ``domparse``: where HTML gives us tree
 order for free, a PDF page is exactly Clara's problem — positioned
@@ -26,8 +26,8 @@ boundary so the single-node reference extractor and the Spark plan
 compare identical doubles (IEEE754 both sides).
 
 ``pdf_reference_extract`` is the single-node oracle whose output the
-distributed extraction of PDF payloads (``pipeline.extract(mixed=True)``,
-lines from ``stages/layout.pdf_blocks``) must reproduce
+distributed extraction of PDF payloads (``pipeline.extract``, lines
+from ``stages/layout.pdf_blocks``) must reproduce
 byte-identically — same contract as ``extract_rules.reference_extract``
 for the DOM path (SURVEY §7 hard-part 1).
 """

@@ -1,12 +1,12 @@
 """Stage B' — geometric layout for PDF pages.
 
-The PDF leg of the north rule ("HTML boilerplate strip, PDF/layout
-parse, DOM heuristics").  Where the DOM path gets reading order from
-tree order, this stage RECONSTRUCTS it from glyph-run geometry — which
-is exactly the reference's own problem, so the mapping is direct
-rather than analogical.  The per-page geometry runs inside the segment
-stage (``stages/segment``), which routes each ``%PDF-`` payload here,
-in ``sources/pdfparse``:
+The "PDF/layout parse" of the north rule ("HTML boilerplate strip,
+PDF/layout parse, DOM heuristics").  Where the DOM path gets reading
+order from tree order, this stage RECONSTRUCTS it from glyph-run
+geometry — which is exactly the reference's own problem, so the
+mapping is direct rather than analogical.  The per-page geometry runs
+inside the segment stage (``stages/segment``), which routes every
+``%PDF-`` payload here; its primitives live in ``sources/pdfparse``:
 
 * column split ≈ ``blockfind``/``vlines2`` white-river detection
   (pgmblock.c:801-942, 1108-1271) — ``column_split``, or the
@@ -97,12 +97,13 @@ def pdf_blocks(runs: List[Run], splitter: str = "river") -> List[Block]:
 
 
 def extract_pdf(pages: DataFrame, splitter: str = "river") -> DataFrame:
-    """pages(url, …, html=PDF bytes) → extracted(url, text): the mixed
-    extraction (``pipeline.extract(mixed=True)``) of a PDF slice.
+    """pages(url, …, html=PDF bytes) → extracted(url, text): plain
+    ``pipeline.extract`` of a PDF slice, kept under this name because
+    the perfbench layer attribution imports it.
 
     ``splitter``: ``"river"`` (default, vlines2 white-gap analogue) or
     ``"tall"`` (cf_block tall-separator analogue) — the same dispatch
     as ``pdf_reference_extract``."""
     from ..pipeline import extract
 
-    return extract(pages, mixed=True, splitter=splitter)
+    return extract(pages, splitter=splitter)

@@ -5,8 +5,8 @@
 per-document DOM parsing.  Embarrassingly parallel per document, so it
 rides in ``mapInPandas`` (Arrow batch iterator — zero per-row Python at
 the Spark API level; per-document parsing happens inside the batch).
-For mixed tables the same stage routes each ``%PDF-`` payload to the
-geometric layout (``stages/layout.pdf_blocks``): one block per line.
+The same stage routes each ``%PDF-`` payload to the geometric layout
+(``stages/layout.pdf_blocks``): one block per line.
 
 Everything downstream of this stage is JVM-side column expressions.
 """
@@ -103,7 +103,6 @@ def segment(
     pages: DataFrame,
     full_features: bool = True,
     with_emph: bool = False,
-    mixed: bool = False,
     splitter: str = "river",
 ) -> DataFrame:
     """pages(url, html, …) → blocks, one row per segmented block.
@@ -116,10 +115,9 @@ def segment(
     extraction rule chain never reads (quality/calibration stages want
     them; the extract() hot path does not). ``with_emph=True`` adds
     the per-block emphasis spans (for the marked-up output variant).
-    ``mixed=True`` routes each ``%PDF-`` payload (``pdfparse.is_pdf``,
-    NULL is not a PDF) to ``layout.pdf_blocks`` with the column
-    ``splitter``: one block per line, ``tag_path`` =
-    ``layout.PDF_TAG_PATH``.
+    Each ``%PDF-`` payload (``pdfparse.is_pdf``, NULL is not a PDF)
+    goes to ``layout.pdf_blocks`` with the column ``splitter``: one
+    block per line, ``tag_path`` = ``layout.PDF_TAG_PATH``.
     """
     schema = StructType(
         BLOCKS_SCHEMA.fields + ([EMPH_FIELD] if with_emph else [])
@@ -134,7 +132,7 @@ def segment(
         for pdf in batches:
             rows = []
             for url, raw in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                if mixed and is_pdf(raw):
+                if is_pdf(raw):
                     blocks = pdf_blocks(parse_pdf_runs(raw), splitter)
                 else:
                     blocks = parse_blocks_fast(raw)

@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """spark-submit entry point for the full training-data curation run:
 
-    pages → extract[_mixed] → quality gate → near-dup canonicalize
+    pages → extract → quality gate → near-dup canonicalize
           → curated/ + rejected/ + lineage metrics
 
     spark-submit --py-files dist/clara_ocr_spark.zip jobs/curate_job.py \\
         --input  s3://bucket/pages/    \\
         --curated s3://bucket/curated/ \\
         --rejects s3://bucket/rejects/ \\
-        [--metrics s3://bucket/metrics/] [--run-id r1] [--mixed] \\
+        [--metrics s3://bucket/metrics/] [--run-id r1] \\
         [--decontaminate s3://bucket/eval_texts/] \\
         [--set min_tokens=5 --set jaccard_tau=0.9]
 
@@ -33,7 +33,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--rejects", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--run-id", default="adhoc")
-    ap.add_argument("--mixed", action="store_true")
     ap.add_argument(
         "--decontaminate",
         default=None,
@@ -139,8 +138,6 @@ def main(argv: list[str] | None = None) -> None:
     )
     ap.add_argument("--set", dest="overrides", action="append", default=[])
     args = ap.parse_args(argv)
-    if args.input_format == "wet" and args.mixed:
-        ap.error("--mixed extracts from raw payloads; WET is pre-extracted")
     if bool(args.dsir_weights) != bool(args.dsir_target):
         ap.error("--dsir-weights and --dsir-target go together")
     if args.psl_rules and not args.mix_weights:
@@ -174,7 +171,7 @@ def main(argv: list[str] | None = None) -> None:
             "url", F.coalesce("text", F.lit("")).alias("text")
         )
     else:
-        extracted = extract(pages, mixed=args.mixed)
+        extracted = extract(pages)
     if args.encoding_audit:
         from clara_ocr_spark.curate import encoding_damage_audit
 

@@ -73,8 +73,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument(
         "--mixed",
         action="store_true",
-        help="route %%PDF- payloads through the geometric layout leg "
-        "(mixed-content capture tables)",
+        help="accepted and ignored: every run routes %%PDF- payloads "
+        "to the geometric layout by magic bytes (kept for existing "
+        "command lines)",
     )
     ap.add_argument(
         "--pdf-splitter",
@@ -88,7 +89,7 @@ def main(argv: list[str] | None = None) -> None:
         action="store_true",
         help="second-pass re-parse: docs failing the quality gate are "
         "re-extracted with the loose strategy and kept when better "
-        "(preproc.c hqbin analogue; default DOM path only)",
+        "(preproc.c hqbin analogue; not with --engine)",
     )
     ap.add_argument(
         "--format",
@@ -143,10 +144,9 @@ def main(argv: list[str] | None = None) -> None:
         metavar="PATH",
         help="append a per-(url, page) text-flow skew estimate table "
         "(skew_deg, n_votes — the ro/deskew geometry, "
-        "functions/geometry.page_skew_angles) computed from the PDF "
-        "leg's parsed runs to PATH; the report parses the PDF slice "
-        "a second time, the extraction never builds runs "
-        "(requires --mixed)",
+        "functions/geometry.page_skew_angles) computed from the parsed "
+        "runs of the PDF payloads to PATH; the report parses the PDF "
+        "slice a second time, the extraction never builds runs",
     )
     ap.add_argument(
         "--links",
@@ -154,7 +154,7 @@ def main(argv: list[str] | None = None) -> None:
         metavar="PATH",
         help="also write the out-link table (url, dst_url, dst_host, "
         "anchor, nofollow — stages/links.extract_links) of the HTML "
-        "leg to PATH; a separate map-only pass over the same pages "
+        "pages to PATH; a separate map-only pass over the same pages "
         "(the link parse is ~10x cheaper than block segmentation, so "
         "it is not worth entangling with the golden-pinned extractor)",
     )
@@ -164,7 +164,7 @@ def main(argv: list[str] | None = None) -> None:
         metavar="PATH",
         help="also write the WAT-style JSONL metadata sidecar (url, "
         "warc_ts, wat json: head metadata + sorted out-links — "
-        "sources/formats.wat_sidecar) of the HTML leg to PATH; "
+        "sources/formats.wat_sidecar) of the HTML pages to PATH; "
         "composes the --links and --head-meta harvests (computed "
         "internally, those flags need not be set)",
     )
@@ -174,7 +174,7 @@ def main(argv: list[str] | None = None) -> None:
         metavar="PATH",
         help="also write the head-metadata table (url, title, "
         "description, canonical, og_title, n_meta, n_og — "
-        "stages/metadata.harvest_metadata) of the HTML leg to PATH; "
+        "stages/metadata.harvest_metadata) of the HTML pages to PATH; "
         "a separate map-only pass bounded per document by head size "
         "(the parser aborts at the first body tag), kept out of the "
         "golden-pinned extractor for the same reason as --links",
@@ -238,7 +238,7 @@ def main(argv: list[str] | None = None) -> None:
         help="also write the publish-date harvest (url, pub_date, "
         "date_tier — stages/metadata.harvest_publish_dates, the "
         "oracled publish_date_extract ladder: article:published_time "
-        "meta > <time datetime> > prose byline) of the HTML leg to "
+        "meta > <time datetime> > prose byline) of the HTML pages to "
         "PATH; decode is the extraction's own charset tiers, the "
         "ladder is map-only JVM regexp",
     )
@@ -376,19 +376,16 @@ def main(argv: list[str] | None = None) -> None:
     if args.frontier_out and not args.links:
         ap.error("--frontier-out schedules the --links harvest; "
                  "pass both")
-    if args.skew_report and not args.mixed:
-        ap.error("--skew-report reads the PDF leg's runs; requires --mixed")
     if args.spell and args.format == "markup":
         ap.error(
             "--spell rebuilds block text and drops emphasis spans; "
             "use --format text"
         )
-    if args.hqbin and (args.engine or args.mixed):
-        ap.error("--hqbin composes with the default DOM path only")
+    if args.hqbin and args.engine:
+        ap.error("--hqbin re-extracts with the default matcher; "
+                 "not with --engine")
     if args.format != "text" and args.hqbin:
         ap.error("--hqbin re-extracts plain text; use --format text")
-    if args.format in ("encap", "full_html") and args.mixed:
-        ap.error(f"--format {args.format} output schema has no PDF-leg analogue")
     if args.format == "markup" and args.struct_acts:
         ap.error(
             "--struct-acts rebuilds block text and drops emphasis "
@@ -463,8 +460,8 @@ def main(argv: list[str] | None = None) -> None:
         patterns = apply_pattern_acts(
             patterns, spark.read.parquet(args.patt_acts)
         )
-    # the HTML harvests below (--links, --head-meta, …) read the DOM leg
-    dom_pages = pages.filter(~_is_pdf_col()) if args.mixed else pages
+    # the HTML harvests below (--links, --head-meta, …) skip PDF payloads
+    dom_pages = pages.filter(~_is_pdf_col())
 
     # step_6 gate as a CollectMetrics observation: the violation sums
     # ride the output-write job itself, so the mapInPandas parse (the
@@ -482,7 +479,6 @@ def main(argv: list[str] | None = None) -> None:
         ),
         spell_min_count=args.spell_min_count if args.spell else None,
         hqbin=args.hqbin,
-        mixed=args.mixed,
         splitter=args.pdf_splitter,
         gate=consist_obs,
     )

@@ -85,31 +85,23 @@ def main() -> None:
         "label-propagation loop (materialized via localCheckpoint, shown\n"
         "here as its final-join shape).",
     )
+    from pyspark.sql import Observation
+
     from clara_ocr_spark.sources.pdfgen import ensure_pdf_corpus
-    from clara_ocr_spark.stages.layout import extract_pdf
 
     pdfs = spark.read.parquet(
         ensure_pdf_corpus(os.path.join(ROOT, ".data", "pdfs_300.parquet"), n=300)
     )
     add(
-        "PDF layout leg (extract_pdf)",
-        extract_pdf(pdfs),
-        "extract(mixed=True) over a PDF slice. ONE Exchange, on url,\n"
-        "carrying line blocks: the MapInPandas segment stage routes each\n"
-        "%PDF- payload to the per-page geometry (column split, line\n"
-        "grouping, word joining) and emits one block per line; classify\n"
-        "labels them content; no Window. The binary payload and the runs\n"
-        "never leave the Python stage.",
-    )
-    from pyspark.sql import Observation
-
-    add(
-        "mixed extraction (extract(mixed=True, gate=…))",
-        extract(pdfs, mixed=True, gate=Observation()),
-        "The --mixed job's composition; the plan does not depend on the\n"
-        "payload mix. ONE MapInPandas routes HTML and PDF payloads by\n"
-        "magic bytes, ONE Exchange (the url-keyed assembly), the step_6\n"
-        "gate as CollectMetrics; no Union of legs.",
+        "PDF extraction (extract(gate=…) over PDF payloads)",
+        extract(pdfs, gate=Observation()),
+        "The extraction job's composition; the plan does not depend on\n"
+        "the payload mix. ONE MapInPandas routes HTML and PDF payloads by\n"
+        "magic bytes, sending each %PDF- payload to the per-page geometry\n"
+        "(column split, line grouping, word joining) that emits one block\n"
+        "per line; ONE Exchange (the url-keyed assembly), the step_6 gate\n"
+        "as CollectMetrics; no Union, no Window. The binary payload and\n"
+        "the runs never leave the Python stage.",
     )
     add(
         "ivf_topk (ANN scale path)",

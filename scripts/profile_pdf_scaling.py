@@ -40,7 +40,7 @@ def build(stage: str, pages):
     from clara_ocr_spark.stages.segment import segment
 
     if stage == "parse":
-        return segment(pages, full_features=False, mixed=True)
+        return segment(pages, full_features=False)
     if stage != "full":
         # fail fast: a typoed stage name must not silently time the
         # full pipeline under a wrong label and skew the marginal

@@ -61,6 +61,28 @@ def test_outputs_partition_input(curated_rejected):
     assert len(curated) + len(rejected) == len(rows)
 
 
+def test_curate_mixed_payloads(spark):
+    """Curation over HTML and PDF payloads in one table: the outputs
+    partition the urls, and a PDF reaches the gate as its line text,
+    never as raw PDF syntax."""
+    from clara_ocr_spark.sources.pdfgen import gen_pdf_page
+
+    html = [gen_page(i, seed=52) for i in range(20)]
+    pdfs = [gen_pdf_page(i, seed=52) for i in range(20)]
+    rows = html + pdfs
+    curated, rejected = curate(extract(_mk_pages(spark, rows)))
+    curated, rejected = curated.collect(), rejected.collect()
+    cur_urls = [r["url"] for r in curated]
+    rej_urls = [r["url"] for r in rejected]
+    assert sorted(cur_urls + rej_urls) == sorted(r["url"] for r in rows)
+    assert not any(r["text"].startswith("%PDF-") for r in curated)
+    want = {r["url"]: r["text"] for r in pdfs}
+    kept_pdfs = [r for r in curated if r["url"] in want]
+    assert kept_pdfs
+    for r in kept_pdfs:
+        assert r["text"] == want[r["url"]], r["url"]
+
+
 def test_duplicates_collapse_to_one_canonical(curated_rejected):
     rows, curated, rejected = curated_rejected
     reasons = {r["url"]: r["reason"] for r in rejected}

@@ -63,7 +63,6 @@ def test_extract_job_mixed(spark, tmp_path):
             "--input", str(inp),
             "--output", str(out),
             "--metrics", str(tmp_path / "metrics"),
-            "--mixed",
             "--skew-report", str(tmp_path / "skew"),
             "--head-meta", str(tmp_path / "head_meta"),
             "--links", str(tmp_path / "links"),
@@ -112,7 +111,7 @@ def test_extract_job_mixed(spark, tmp_path):
     assert n_files < 200
 
     # --skew-report rode the same run: per-(url, page) rows for the
-    # PDF leg only, level corpus reads ~0
+    # PDF payloads only, level corpus reads ~0
     skew = duckdb.sql(
         f"select url, page, skew_deg, n_votes from '{tmp_path}/skew/*.parquet'"
     ).fetchall()
@@ -120,8 +119,8 @@ def test_extract_job_mixed(spark, tmp_path):
     pdf_urls = {r["url"] for r in rows[30:]}
     assert {r[0] for r in skew} <= pdf_urls
 
-    # --head-meta rode the same run: one row per HTML-leg page (the
-    # PDF leg has no <head>), every corpus template titled "t"
+    # --head-meta rode the same run: one row per HTML page (a PDF
+    # has no <head>), every corpus template titled "t"
     meta = duckdb.sql(
         f"select url, title, n_meta from '{tmp_path}/head_meta/*.parquet'"
     ).fetchall()
@@ -142,7 +141,7 @@ def test_extract_job_mixed(spark, tmp_path):
         with open(f) as fh:
             wat_lines += [ln for ln in fh.read().splitlines() if ln]
     recs = [_json.loads(ln) for ln in wat_lines]
-    assert {r["url"] for r in recs} == html_urls  # HTML leg only
+    assert {r["url"] for r in recs} == html_urls  # HTML pages only
     assert all(isinstance(r.get("outlinks"), list) for r in recs)
     assert all("ts" in r for r in recs)
 
@@ -218,7 +217,7 @@ def test_extract_job_mixed(spark, tmp_path):
     assert soft == (60, 0)
 
     # --wet-out rode the same run: one conversion record per input
-    # url (both legs), framed well enough for the repo's own reader
+    # url (HTML and PDF), framed well enough for the repo's own reader
     from clara_ocr_spark.sources.formats import _parse_warc_bytes
 
     wet_payload = b"".join(
@@ -228,8 +227,6 @@ def test_extract_job_mixed(spark, tmp_path):
     wet_urls = {u for u, _ts, _b, _t in _parse_warc_bytes(wet_payload)}
     assert wet_urls == {r["url"] for r in rows}
 
-    # --incremental + --mixed together: replay must be a no-op (the
-    # high-water-mark anti-join sees every url already extracted)
     # --hqbin on a corpus with a known strict-pass failure: the tiny
     # paragraph is recovered by the loose second pass, everything else
     # stays byte-identical
@@ -449,6 +446,9 @@ def test_extract_job_mixed(spark, tmp_path):
     for r in rows_fm[:15]:
         assert got_jl[r["url"]] == r["text"]
 
+    # --incremental replay must be a no-op (the high-water-mark
+    # anti-join sees every url already extracted); --mixed is still
+    # accepted and changes nothing
     proc2 = subprocess.run(
         [
             sys.executable,
@@ -1123,10 +1123,12 @@ def test_extract_job_set_and_engine(spark, tmp_path):
 def test_curate_job_bad_set_is_usage_error(tmp_path):
     """A ``--set`` the curation config rejects (unknown name, or the
     per-host switch without its min_df) is an argparse usage error:
-    exit 2 with the reason on stderr, no traceback, no output."""
-    for pair, msg in (
-        ("nope=1", "unknown config var: nope"),
-        ("line_dedup_per_host=1", "needs line_dedup_min_df > 0"),
+    exit 2 with the reason on stderr, no traceback, no output.  So is
+    ``--mixed``: extraction routes PDF payloads with no switch."""
+    for extra, msg in (
+        (["--set", "nope=1"], "unknown config var: nope"),
+        (["--set", "line_dedup_per_host=1"], "needs line_dedup_min_df > 0"),
+        (["--mixed"], "unrecognized arguments: --mixed"),
     ):
         proc = subprocess.run(
             [
@@ -1135,7 +1137,7 @@ def test_curate_job_bad_set_is_usage_error(tmp_path):
                 "--input", str(tmp_path / "absent.parquet"),
                 "--curated", str(tmp_path / "curated"),
                 "--rejects", str(tmp_path / "rejects"),
-                "--set", pair,
+                *extra,
             ],
             capture_output=True, text=True, timeout=300,
         )

@@ -11,6 +11,7 @@ the same string)."""
 from __future__ import annotations
 
 import random
+import re
 import zlib
 
 import pyarrow as pa
@@ -511,13 +512,9 @@ def test_spark_layout_byte_identity(spark, pdf_rows):
         assert got[row["url"]] == row["text"], row["url"]
 
 
-def test_mixed_routing_byte_identity(spark, pdf_rows):
-    """HTML and PDF payloads in ONE pages table, routed by magic;
-    NULL payloads must survive to the output as empty pages (a NULL
-    predicate would silently drop them from BOTH legs)."""
-    from clara_ocr_spark.pipeline import extract
-
-    html_rows = [gen_page(i) for i in range(40)]
+def _mixed_rows(pdf_rows, n=40):
+    """HTML and PDF payloads in one table, plus one NULL payload."""
+    html_rows = [gen_page(i) for i in range(n)]
     null_row = {
         "url": "https://bad.example/null-html",
         "warc_ts": html_rows[0]["warc_ts"],
@@ -525,11 +522,37 @@ def test_mixed_routing_byte_identity(spark, pdf_rows):
         "text": "",
         "lang": "en",
     }
-    rows = html_rows + pdf_rows[:40] + [null_row]
-    got = {r["url"]: r["text"] for r in extract(_pages_df(spark, rows), mixed=True).collect()}
+    return html_rows + pdf_rows[:n] + [null_row]
+
+
+@pytest.mark.parametrize("fmt", ["text", "encap"])
+def test_mixed_routing_byte_identity(spark, pdf_rows, fmt):
+    """HTML and PDF payloads in ONE pages table, routed by magic with
+    no option set; NULL payloads must survive to the output as empty
+    pages (a NULL predicate would silently drop them).  The encap
+    variant's ``text`` is the same string."""
+    from clara_ocr_spark.pipeline import extract
+
+    rows = _mixed_rows(pdf_rows)
+    got = {
+        r["url"]: r["text"]
+        for r in extract(_pages_df(spark, rows), fmt=fmt).collect()
+    }
     assert set(got) == {r["url"] for r in rows}
     for row in rows:
         assert got[row["url"]] == row["text"], row["url"]
+
+
+def test_mixed_full_html_one_row_per_url(spark, pdf_rows):
+    """The full-document variant over a mixed table: one document per
+    url, PDF and NULL payloads included, and no raw PDF syntax in any
+    document body."""
+    from clara_ocr_spark.pipeline import extract
+
+    rows = _mixed_rows(pdf_rows, n=10)
+    got = extract(_pages_df(spark, rows), fmt="full_html").collect()
+    assert sorted(r["url"] for r in got) == sorted(r["url"] for r in rows)
+    assert not any("%PDF-" in r["html"] for r in got)
 
 
 def test_layout_partitioning_invariance(spark, pdf_rows):
@@ -577,7 +600,7 @@ def test_mixed_plan_one_python_stage(spark, pdf_rows):
 
     rows = [gen_page(i) for i in range(5)] + pdf_rows[:5]
     plan = (
-        extract(_pages_df(spark, rows), mixed=True, gate=Observation())
+        extract(_pages_df(spark, rows), gate=Observation())
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -591,6 +614,8 @@ def test_mixed_plan_one_python_stage(spark, pdf_rows):
         "Window": 0,
     }
     assert "MapInPandas _segment_batches(" in plan
+    # PDF lines are labeled content by default, in the classify projection
+    assert re.search(r"CASE WHEN \(tag_path#\d+ = %PDF\) THEN content", plan)
     above, below = plan.split("MapInPandas", 1)
     assert "warc_ts" not in below and "lang" not in below
     assert "html" not in above
@@ -614,7 +639,7 @@ def test_mixed_blocks_consistent(spark, pdf_rows):
 
     rows = [gen_page(i) for i in range(20)] + pdf_rows
     pages = _pages_df(spark, rows)
-    blocks = classify(segment(pages, full_features=False, mixed=True))
+    blocks = classify(segment(pages, full_features=False))
     assert {
         r.invariant: r.violations for r in check_blocks(blocks).collect()
     } == dict.fromkeys(BLOCK_INVARIANTS, 0)
@@ -624,17 +649,33 @@ def test_mixed_blocks_consistent(spark, pdf_rows):
     assert n_lines > 0
     assert blocks.filter(blocks.tag_path == PDF_TAG_PATH).count() == n_lines
     gate = Observation()
-    extract(pages, mixed=True, gate=gate).collect()
+    extract(pages, gate=gate).collect()
     assert_observed(gate)
 
 
-def test_hqbin_rejects_mixed(spark, pdf_rows):
-    """No DOM-only frame exists for the hqbin residual pass in a mixed
-    extraction: the pair is refused, not silently re-extracted."""
-    from clara_ocr_spark.pipeline import extract
+def test_hqbin_keeps_pdf_text(spark, pdf_rows):
+    """The hqbin residual pass over a mixed table: a PDF's lines are
+    content under the loose config too, so a short PDF re-extracts to
+    the same text and keeps its first pass (``hq_reparsed`` false);
+    every PDF returns its generator text."""
+    from clara_ocr_spark.pipeline import HQ_MIN_TOKENS, extract
 
-    with pytest.raises(ValueError, match="hqbin"):
-        extract(_pages_df(spark, pdf_rows[:2]), hqbin=True, mixed=True)
+    raw = _mk_pdf(b"BT /F1 12 Tf 72 700 Td (two words) Tj ET")
+    two_words = dict(pdf_rows[0], url="https://short.example/p.pdf", html=raw)
+    two_words["text"] = pdf_reference_extract(raw)
+    assert two_words["text"] == "two words"
+    # empty, truncated and two-word PDFs: all below the token gate
+    short = pdf_rows[-2:] + [two_words]
+    assert all(len(r["text"].split()) < HQ_MIN_TOKENS for r in short)
+    pdfs = pdf_rows[:4] + short
+    rows = [gen_page(i) for i in range(4)] + pdfs
+    got = {
+        r.url: (r.text, r.hq_reparsed)
+        for r in extract(_pages_df(spark, rows), hqbin=True).collect()
+    }
+    assert set(got) == {r["url"] for r in rows}
+    for row in pdfs:
+        assert got[row["url"]] == (row["text"], False), row["url"]
 
 
 class TestPageSkewAngles:
