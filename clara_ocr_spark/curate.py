@@ -700,14 +700,145 @@ def domain_mixture(
     )
 
 
+def zipf_head_fit(words: DataFrame) -> DataFrame:
+    """Zipf rank-frequency fit over the top-512 head of ``words(w)``:
+    one row ``(n_terms, slope, intercept, r2)``, least squares of
+    ln(count) on ln(rank), rounded to 3 decimals.  The head is
+    TakeOrderedAndProject (per-partition partial top-k, never a
+    global sort), so the one unpartitioned rank window sees <=512
+    rows at any corpus size."""
+    head = (
+        words.groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), F.asc("w"))
+        .limit(512)
+    )
+    ranked = head.withColumn(
+        "rank",
+        F.row_number().over(Window.orderBy(F.desc("n"), F.asc("w"))),
+    )
+    ln_n, ln_r = F.log("n"), F.log("rank")
+    return ranked.agg(
+        F.count(F.lit(1)).alias("n_terms"),
+        F.round(F.regr_slope(ln_n, ln_r), 3).alias("slope"),
+        F.round(F.regr_intercept(ln_n, ln_r), 3).alias("intercept"),
+        F.round(F.regr_r2(ln_n, ln_r), 3).alias("r2"),
+    )
+
+
+def heaps_fit(grams: DataFrame, per_batch: DataFrame) -> DataFrame:
+    """Heaps'-law growth fit V(N) = K*N^beta from ``grams(b, h30)``
+    (hashed gram types by batch) and ``per_batch(b, ng)`` (grams per
+    batch): each type counts in its first batch, cumulative windows
+    over the batch relation give (N, V), and one row
+    ``(n_batches, beta, lnk, r2)`` is least squares of ln V on ln N,
+    rounded to 3 decimals.  The grams feed only the first-batch
+    groupBy; the windows see one row per batch, never the corpus."""
+    ft = grams.groupBy("h30").agg(F.min("b").alias("fb"))
+    vb = ft.groupBy(F.col("fb").alias("b")).agg(
+        F.count(F.lit(1)).alias("nv")
+    )
+    cum = Window.orderBy("b").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    growth = (
+        per_batch.join(vb, "b", "left")
+        .select("b", "ng", F.coalesce("nv", F.lit(0)).alias("nv"))
+        .withColumn("cum_n", F.sum("ng").over(cum))
+        .withColumn("cum_v", F.sum("nv").over(cum))
+    )
+    ln_v, ln_n = F.log("cum_v"), F.log("cum_n")
+    return growth.agg(
+        F.count(F.lit(1)).alias("n_batches"),
+        F.round(F.regr_slope(ln_v, ln_n), 3).alias("beta"),
+        F.round(F.regr_intercept(ln_v, ln_n), 3).alias("lnk"),
+        F.round(F.regr_r2(ln_v, ln_n), 3).alias("r2"),
+    )
+
+
+def good_turing(grams: DataFrame, keys: list) -> DataFrame:
+    """Good–Turing count-of-counts of ``grams(*keys, w)`` per key:
+    ``v`` types, ``n_tokens``, ``n1``/``n2`` types seen once/twice,
+    ``p0_pm`` = (1000 * n1) div n_tokens (the unseen mass) and
+    ``chao1`` = v + n1^2 div (2 * n2) (the bias-corrected
+    v + n1 * (n1 - 1) div 2 when n2 = 0).  Two count-only shuffles:
+    the type count and the per-key rollup, both partial map-side."""
+    c = grams.groupBy(*keys, "w").agg(F.count(F.lit(1)).alias("n"))
+    # the estimators are result expressions of the one rollup
+    # aggregate (repeated aggregates are computed once)
+    n1 = "sum(case when n = 1 then 1 else 0 end)"
+    n2 = "sum(case when n = 2 then 1 else 0 end)"
+    return c.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("v"),
+        F.sum("n").alias("n_tokens"),
+        F.expr(n1).alias("n1"),
+        F.expr(n2).alias("n2"),
+        F.expr(f"(1000 * {n1}) div sum(n)").alias("p0_pm"),
+        F.expr(
+            f"count(1) + case when {n2} > 0 then ({n1} * {n1}) div (2 * {n2})"
+            f" else ({n1} * ({n1} - 1)) div 2 end"
+        ).alias("chao1"),
+    )
+
+
+def length_ecdf(
+    df: DataFrame, value: F.Column, side: F.Column, *sums: F.Column
+) -> DataFrame:
+    """Counting-sort ECDF of ``value`` over two ``side``s (0 and 1):
+    the histogram of the bounded value domain ``(v, c, ca, cb, *sums)``
+    (count, per-side counts, plus any extra aggregates), then ONE
+    ordered window adds the running sums ``cum``/``cum_a``/``cum_b``
+    and, as whole-frame sums, the totals ``n``/``na``/``nb``.  The
+    corpus scans once; the window sees |distinct values|, never
+    |rows|; every sum is an integer."""
+    h = df.groupBy(value.alias("v")).agg(
+        F.count(F.lit(1)).alias("c"),
+        F.count(F.when(side == 0, 1)).alias("ca"),
+        F.count(F.when(side == 1, 1)).alias("cb"),
+        *sums,
+    )
+    run = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    whole = run.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return h.select(
+        "*",
+        F.sum("c").over(run).alias("cum"),
+        F.sum("ca").over(run).alias("cum_a"),
+        F.sum("cb").over(run).alias("cum_b"),
+        F.sum("c").over(whole).alias("n"),
+        F.sum("ca").over(whole).alias("na"),
+        F.sum("cb").over(whole).alias("nb"),
+    )
+
+
+def ecdf_quantile(pm: int) -> F.Column:
+    """Aggregate over a ``length_ecdf``: the exact per-mille quantile,
+    the smallest value whose running count reaches ceil(pm * n / 1000)."""
+    reached = F.col("cum") >= F.expr(f"({pm} * n + 999) div 1000")
+    return F.min(F.when(reached, F.col("v")))
+
+
+# Two-sample KS over a length_ecdf, in integers: the per-value gap
+# |ECDF_a - ECDF_b| scaled by na * nb, and the per-mille distance
+# from its maximum ``md`` (0 when a side is empty, never a division
+# by zero).
+KS_GAP = "abs(cum_a * nb - cum_b * na)"
+KS_D_PM = (
+    "case when na > 0 and nb > 0 then (1000 * md) div (na * nb) else 0 end"
+)
+
+
 def corpus_health(extracted: DataFrame) -> DataFrame:
     """One-call corpus-health report over an extracted/curated table
     (needs ``url`` + ``text``): the audits a 100 TB pipeline runs
-    before a snapshot joins a training mix, composed from the same
-    column algebra their oracle-checked catalog twins use
+    before a snapshot joins a training mix, composed from the
+    statistic helpers above, which their oracle-checked catalog twins
     (``zipf_slope``, ``heaps_law_fit``, ``good_turing_mass``,
-    ``exact_quantiles``, ``ks_drift``).  Returns a LONG (metric,
-    value) table:
+    ``exact_quantiles``, ``ks_drift``) call too.  Returns a LONG
+    (metric, value) table:
 
     - ``n_docs`` / ``n_tokens`` — corpus size counters
     - ``zipf_slope`` / ``zipf_r2`` — rank-frequency head fit (clean
@@ -735,23 +866,11 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
     --encoding-audit precedent)."""
     toks = _tokens(F.lower(F.col("text")))
 
-    head = (
+    zipf = zipf_head_fit(
         extracted.select(F.explode(toks).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("w"))
-        .limit(512)
-    )
-    ranked = head.withColumn(
-        "rank",
-        F.row_number().over(Window.orderBy(F.desc("n"), F.asc("w"))),
-    )
-    zipf = ranked.agg(
-        F.round(F.regr_slope(F.log("n"), F.log("rank")), 3).alias("s"),
-        F.round(F.regr_r2(F.log("n"), F.log("rank")), 3).alias("r"),
     ).select(
         F.expr(
-            "stack(2, 'zipf_slope', s, 'zipf_r2', r) as (metric, value)"
+            "stack(2, 'zipf_slope', slope, 'zipf_r2', r2) as (metric, value)"
         )
     )
 
@@ -787,7 +906,6 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
             ).alias("h30"),
         )
     )
-    ft = kg.groupBy("h30").agg(F.min("b").alias("fb"))
     # grams per batch = Σ per-doc block counts, map-only from the
     # normalized lengths (the heaps_law_fit discipline): the k-gram
     # explode then has a single consumer and needs no checkpoint
@@ -796,26 +914,9 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
             F.expr(f"(length(norm) - {WIN_K}) div {WIN_K}") + 1
         ).alias("ng")
     )
-    vb = ft.groupBy(F.col("fb").alias("b")).agg(
-        F.count(F.lit(1)).alias("nv")
-    )
-    cum = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    growth = (
-        nb.join(vb, "b", "left")
-        .select("b", "ng", F.coalesce("nv", F.lit(0)).alias("nv"))
-        .withColumn("cum_n", F.sum("ng").over(cum))
-        .withColumn("cum_v", F.sum("nv").over(cum))
-    )
-    heaps = growth.agg(
-        F.round(
-            F.regr_slope(F.log("cum_v"), F.log("cum_n")), 3
-        ).alias("s"),
-        F.round(F.regr_r2(F.log("cum_v"), F.log("cum_n")), 3).alias("r"),
-    ).select(
+    heaps = heaps_fit(kg, nb).select(
         F.expr(
-            "stack(2, 'heaps_beta', s, 'heaps_r2', r) as (metric, value)"
+            "stack(2, 'heaps_beta', beta, 'heaps_r2', r2) as (metric, value)"
         )
     )
 
@@ -825,68 +926,29 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
         F.slice(toks, 2, n1c),
         lambda x, y: F.concat_ws(" ", x, y),
     )
-    gt = (
-        extracted.select(F.explode(pairs).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum("n").alias("nt"),
-            F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("n") == 2, 1).otherwise(0)).alias("n2"),
-        )
-        .select(
-            F.expr(
-                "stack(2,"
-                " 'gt_p0_pm', cast((1000 * n1) div nt as double),"
-                " 'gt_chao1', cast(case when n2 > 0"
-                "   then v + (n1 * n1) div (2 * n2)"
-                "   else v + (n1 * (n1 - 1)) div 2 end as double)"
-                ") as (metric, value)"
-            )
+    gt = good_turing(extracted.select(F.explode(pairs).alias("w")), []).select(
+        F.expr(
+            "stack(2, 'gt_p0_pm', cast(p0_pm as double),"
+            " 'gt_chao1', cast(chao1 as double)) as (metric, value)"
         )
     )
 
     # ONE bounded length histogram serves the counters, the quantiles
     # and the KS probe: one ordered window gives the running sums, its
     # whole-frame sums the totals, and one aggregate reads them all
-    parity = F.expr("pmod(xxhash64(url), 2)")
-    h = extracted.groupBy(F.length("text").alias("v")).agg(
-        F.count(F.lit(1)).alias("c"),
+    st = length_ecdf(
+        extracted,
+        F.length("text"),
+        F.expr("pmod(xxhash64(url), 2)"),
         F.sum(F.size(toks)).alias("nt"),
-        F.count(F.when(parity == 0, 1)).alias("ca"),
-        F.count(F.when(parity == 1, 1)).alias("cb"),
     )
-    run = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    whole = run.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    st = h.select(
-        "v", "c", "nt",
-        F.sum("c").over(run).alias("cum"),
-        F.sum("ca").over(run).alias("cum_a"),
-        F.sum("cb").over(run).alias("cum_b"),
-        F.sum("c").over(whole).alias("n"),
-        F.sum("ca").over(whole).alias("na"),
-        F.sum("cb").over(whole).alias("nb"),
-    )
-
-    def quantile(pm: int) -> F.Column:
-        # min length whose cumulative count reaches ceil(pm * n / 1000)
-        reached = F.col("cum") >= F.expr(f"({pm} * n + 999) div 1000")
-        return F.min(F.when(reached, F.col("v"))).cast("double")
-
     sized = st.agg(
         F.sum("c").alias("nd"),
         F.sum("nt").alias("nt"),
-        quantile(500).alias("p50"),
-        quantile(900).alias("p90"),
-        quantile(990).alias("p99"),
-        F.max(
-            F.abs(F.col("cum_a") * F.col("nb") - F.col("cum_b") * F.col("na"))
-        ).alias("md"),
+        ecdf_quantile(500).cast("double").alias("p50"),
+        ecdf_quantile(900).cast("double").alias("p90"),
+        ecdf_quantile(990).cast("double").alias("p99"),
+        F.max(F.expr(KS_GAP)).alias("md"),
         F.max("na").alias("na"),
         F.max("nb").alias("nb"),
     ).select(
@@ -895,8 +957,7 @@ def corpus_health(extracted: DataFrame) -> DataFrame:
             "stack(6, 'n_docs', cast(coalesce(nd, 0) as double),"
             " 'n_tokens', cast(nt as double),"
             " 'len_p50', p50, 'len_p90', p90, 'len_p99', p99,"
-            " 'ks_parity_d_pm', cast(case when na > 0 and nb > 0"
-            "   then (1000 * md) div (na * nb) else 0 end as double)"
+            f" 'ks_parity_d_pm', cast({KS_D_PM} as double)"
             ") as (metric, value)"
         ),
     )

@@ -19,7 +19,11 @@ from typing import Callable, Dict, Optional, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .curate import encoding_damage_audit, near_dup_canonical, normalize_text
+from .curate import (
+    KS_D_PM, KS_GAP, ecdf_quantile, encoding_damage_audit, good_turing,
+    heaps_fit, length_ecdf, near_dup_canonical, normalize_text,
+    zipf_head_fit,
+)
 from .functions.textsig import (
     FP_MAX_DF, WIN_K, WIN_W, _WIN_R, _dup_2gram_frac, _fanout, _gram5_hashes,
     _grams, _let, _min_label_components, _minhash_sig, _positional_lines_arr,
@@ -8881,34 +8885,18 @@ def zipf_slope(spark, sf_dir):
     Reference analogue: the per-pattern frequency tallies that drive
     classifier confidence (pattern.c usage counters).
 
-    Scale shape: the term count is a map-side-partial groupBy; the
-    head selection is ``orderBy().limit(512)`` — TakeOrderedAndProject
-    (per-partition partial top-k, the ``topk_doubts`` pattern),
-    NEVER a global sort; ranking + regression then run over a
-    BOUNDED <=512-row relation, so the one unpartitioned window is
-    constant-size at any corpus scale.  regr_* over ln() doubles is
-    rounded to 3 decimals in both engines (the baseline_slope
-    convention)."""
+    Computes through ``curate.zipf_head_fit``, the fit
+    ``corpus_health`` reports.  Scale shape: the term count is a
+    map-side-partial groupBy; the head selection is
+    ``orderBy().limit(512)`` — TakeOrderedAndProject (per-partition
+    partial top-k, the ``topk_doubts`` pattern), NEVER a global sort;
+    ranking + regression then run over a BOUNDED <=512-row relation,
+    so the one unpartitioned window is constant-size at any corpus
+    scale.  regr_* over ln() doubles is rounded to 3 decimals in both
+    engines (the baseline_slope convention)."""
     d = _t(spark, sf_dir, "documents")
-    f = (
+    return zipf_head_fit(
         d.select(F.explode(_tokens(F.lower(F.col("text")))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("w"))
-        .limit(512)
-    )
-    # bounded (<=512 rows) by the limit above — the unpartitioned
-    # window is constant-size, not corpus-size
-    r = f.withColumn(
-        "rank",
-        F.row_number().over(Window.orderBy(F.desc("n"), F.asc("w"))),
-    )
-    ln_n, ln_r = F.log(F.col("n")), F.log(F.col("rank"))
-    return r.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-        F.round(F.regr_slope(ln_n, ln_r), 3).alias("slope"),
-        F.round(F.regr_intercept(ln_n, ln_r), 3).alias("intercept"),
-        F.round(F.regr_r2(ln_n, ln_r), 3).alias("r2"),
     )
 
 
@@ -8937,38 +8925,23 @@ def exact_quantiles(spark, sf_dir):
     Reference analogue: the global threshold histogram h_thr_stat
     (preproc.c:186-214) — same exact-histogram-then-scan shape.
 
-    Scale shape: one map-side-partial groupBy on the value domain;
-    the cumulative window runs over the BOUNDED histogram relation
-    (|distinct lengths|, never |docs|); the total rides a broadcast
-    1-row cross join (the domain_mix_weights pattern); the 3-row
-    quantile-target side of the >= join is broadcast.  Integer
-    arithmetic end to end — no float quantile semantics to disagree
-    across engines."""
+    Computes through ``curate.length_ecdf`` and
+    ``curate.ecdf_quantile``, the quantiles ``corpus_health``
+    reports.  Scale shape: the corpus scans ONCE into one
+    map-side-partial groupBy on the value domain; ONE ordered window
+    over that BOUNDED histogram relation (|distinct lengths|, never
+    |docs|) gives the running count and, as a whole-frame sum, the
+    total; one aggregate then reads all three quantiles.  It is
+    grouped by the (constant) total, so an empty table gives no rows.
+    Integer arithmetic end to end — no float quantile semantics to
+    disagree across engines."""
     d = _t(spark, sf_dir, "documents")
-    h = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        # two consumers (cumulative + total) — materialize the tiny
-        # histogram so the 100 TB documents scan runs ONCE
-        .localCheckpoint(eager=False)
-    )
-    # bounded by |distinct n_chars| (the value DOMAIN), not by |docs|
-    s = h.withColumn(
-        "cum", F.sum("c").over(Window.orderBy("v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow))
-    )
-    tot = h.agg(F.sum("c").alias("total"))
-    p = spark.range(1).select(
-        F.explode(F.array(F.lit(500), F.lit(900), F.lit(990))).alias("pm")
-    )
-    return (
-        s.crossJoin(F.broadcast(tot))
-        .join(
-            F.broadcast(p),
-            F.col("cum") >= F.expr("(pm * total + 999) div 1000"),
-        )
-        .groupBy("pm")
-        .agg(F.min("v").alias("value"))
+    # one side: the ECDF's per-side counts go unused and are pruned
+    st = length_ecdf(d, F.col("n_chars"), F.lit(0))
+    return st.groupBy("n").agg(
+        *[ecdf_quantile(pm).alias(f"p{pm}") for pm in (500, 900, 990)]
+    ).select(
+        F.expr("stack(3, 500, p500, 900, p900, 990, p990) as (pm, value)")
     )
 
 
@@ -9177,66 +9150,33 @@ def ks_drift(spark, sf_dir):
     (preproc.c:186-214) — two histograms compared to decide if a page
     deviates from the book.
 
-    Scale shape: the counting-sort ECDF plan (exact_quantiles) — one
-    map-side-partial groupBy on the bounded length domain (the corpus
-    scans ONCE; the histogram is checkpointed), cumulative windows
-    over the |distinct lengths| relation (never |docs|), totals as a
-    broadcast 1-row cross join, and the argmax row via a broadcast
-    1-row max joined back (never a global sort).  Integer arithmetic
-    end to end: the cross-multiplied |cum_a*nb - cum_b*na| avoids
-    float ECDFs entirely (exact below ~3*10^9 docs per slice; past
-    that, quantize the ECDFs per-mille first — same plan shape)."""
+    Computes through ``curate.length_ecdf`` and the KS expressions
+    of the ``corpus_health`` parity probe.  Scale shape: the
+    counting-sort ECDF plan (exact_quantiles) — the corpus scans ONCE
+    into one map-side-partial groupBy on the bounded length domain;
+    ONE ordered window over the |distinct lengths| relation (never
+    |docs|) gives the running per-side counts and, as whole-frame
+    sums, the totals; one aggregate keyed by those (constant) totals
+    takes the max of (gap, -length), so the argmax needs no join and
+    an empty table gives no rows.  Integer arithmetic end to end: the
+    cross-multiplied |cum_a*nb - cum_b*na| avoids float ECDFs
+    entirely (exact below ~3*10^9 docs per slice; past that, quantize
+    the ECDFs per-mille first — same plan shape).  An empty slice
+    reports d_pm = 0 (DuckDB's integer division gives NULL there)."""
     d = _t(spark, sf_dir, "documents")
-    h = (
-        d.groupBy(F.col("n_chars").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("doc_id") % 2 == 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("ca"),
-            F.sum(F.when(F.col("doc_id") % 2 == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("cb"),
-        )
-        # bounded by |distinct n_chars|; consumers: cumulative
-        # windows + totals — materialize so the corpus scans once
-        .localCheckpoint(eager=False)
+    st = length_ecdf(d, F.col("n_chars"), F.col("doc_id") % 2)
+    # max over (gap, -length): the largest gap at its smallest length
+    top = F.max(
+        F.struct(F.expr(KS_GAP).alias("md"), (-F.col("v")).alias("v"))
     )
-    cum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    s = h.withColumn("cum_a", F.sum("ca").over(cum)).withColumn(
-        "cum_b", F.sum("cb").over(cum)
-    )
-    tot = h.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-    )
-    dd = (
-        s.crossJoin(F.broadcast(tot))
-        .select(
-            "v",
-            "na",
-            "nb",
-            F.abs(
-                F.col("cum_a") * F.col("nb") - F.col("cum_b") * F.col("na")
-            ).alias("diff"),
-        )
-        # bounded; TWO consumers (max + argmax filter) — materialize
-        # so the cumulative windows run once
-        .localCheckpoint(eager=False)
-    )
-    maxd = dd.agg(F.max("diff").alias("maxdiff"))
     return (
-        dd.crossJoin(F.broadcast(maxd))
-        .filter(F.col("diff") == F.col("maxdiff"))
-        .groupBy("na", "nb", "maxdiff")
-        .agg(F.min("v").cast("bigint").alias("v_at_max"))
+        st.groupBy("na", "nb")
+        .agg(top.alias("top"))
+        .select("na", "nb", "top.md", (-F.col("top.v")).alias("v_at_max"))
         .select(
             F.col("na").alias("n_a"),
             F.col("nb").alias("n_b"),
-            F.expr("(1000 * maxdiff) div (na * nb)")
-            .cast("bigint")
-            .alias("d_pm"),
+            F.expr(KS_D_PM).alias("d_pm"),
             "v_at_max",
         )
     )
@@ -9341,7 +9281,9 @@ def good_turing_mass(spark, sf_dir):
     the count-of-counts rollup then aggregates the TYPE relation
     (vocab^~1.4-bounded, tiny next to the corpus), also map-side
     partial.  Two shuffles total, both count-only.  Integer
-    arithmetic end to end — p0 in per-mille, Chao1 floored."""
+    arithmetic end to end — p0 in per-mille, Chao1 floored.  The
+    count-of-counts is ``curate.good_turing``, the estimate
+    ``corpus_health`` reports over the whole corpus."""
     # fanned out of the single-row-group documents scan (one task
     # otherwise does all the tokenize/hash map work)
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
@@ -9352,32 +9294,8 @@ def good_turing_mass(spark, sf_dir):
         F.slice(ws, 2, n1),
         lambda x, y: F.concat_ws(" ", x, y),
     )
-    t = d.select("lang", F.explode(pairs).alias("w"))
-    c = t.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("n"))
-    gt = c.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("v"),
-        F.sum("n").cast("bigint").alias("n_tokens"),
-        F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(F.when(F.col("n") == 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n2"),
-    )
-    return gt.select(
-        "lang",
-        "v",
-        "n_tokens",
-        "n1",
-        "n2",
-        F.expr("(1000 * n1) div n_tokens").cast("bigint").alias("p0_pm"),
-        F.when(
-            F.col("n2") > 0,
-            F.col("v") + F.expr("(n1 * n1) div (2 * n2)"),
-        )
-        .otherwise(F.col("v") + F.expr("(n1 * (n1 - 1)) div 2"))
-        .cast("bigint")
-        .alias("chao1"),
+    return good_turing(
+        d.select("lang", F.explode(pairs).alias("w")), ["lang"]
     )
 
 
@@ -9991,7 +9909,10 @@ def heaps_law_fit(spark, sf_dir):
     ~{HEAPS_BATCHES}-row batch relation (bounded at any corpus
     size), and the regression aggregates partially map-side.  The
     one unpartitioned window frame sees n_batches rows, never the
-    corpus."""
+    corpus.  The fit is ``curate.heaps_fit``, the one ``corpus_health``
+    reports; only the grams differ: here every overlapping k-gram is
+    hashed with the portable MD5 hash so DuckDB can replay it, where
+    ``corpus_health`` hashes non-overlapping blocks with xxhash64."""
     d = _t(spark, sf_dir, "documents")
     mx = d.agg(
         F.greatest(
@@ -10025,31 +9946,11 @@ def heaps_law_fit(spark, sf_dir):
     )
     # the type relation is the only consumer of the explode; grams
     # per batch is just Σ(n_positions) per doc, computable map-only
-    # from the normalized lengths — the old shape checkpointed the
-    # exploded relation and scanned it twice for exactly this count
-    ft = g.groupBy("h30").agg(F.min("b").alias("fb"))
+    # from the normalized lengths, so the explode needs no checkpoint
     nb = nm.groupBy(F.expr("doc_id div width").alias("b")).agg(
         F.sum(F.length("norm") - WIN_K + 1).alias("ng")
     )
-    vb = ft.groupBy(F.col("fb").alias("b")).agg(
-        F.count(F.lit(1)).alias("nv")
-    )
-    cum = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    c = (
-        nb.join(vb, "b", "left")
-        .select("b", "ng", F.coalesce("nv", F.lit(0)).alias("nv"))
-        .withColumn("cum_n", F.sum("ng").over(cum))
-        .withColumn("cum_v", F.sum("nv").over(cum))
-    )
-    ln_v, ln_n = F.log(F.col("cum_v")), F.log(F.col("cum_n"))
-    return c.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_batches"),
-        F.round(F.regr_slope(ln_v, ln_n), 3).alias("beta"),
-        F.round(F.regr_intercept(ln_v, ln_n), 3).alias("lnk"),
-        F.round(F.regr_r2(ln_v, ln_n), 3).alias("r2"),
-    )
+    return heaps_fit(g, nb)
 
 
 @q(

@@ -408,11 +408,11 @@ def main() -> None:
     add(
         "exact_quantiles (counting-sort exact per-mille quantiles, cont. r5)",
         REGISTRY["exact_quantiles"][0](spark, SF),
-        "Histogram the bounded VALUE DOMAIN once (checkpointed — both\n"
-        "the cumulative window and the total read the same materialized\n"
-        "RDD, zero re-scans); the cumulative window runs over |distinct\n"
-        "lengths| rows, never |docs|; the 3-row quantile-target side of\n"
-        "the >= join broadcasts.  Integer arithmetic end to end.",
+        "curate.length_ecdf: histogram the bounded VALUE DOMAIN in one\n"
+        "scan, then ONE ordered window over |distinct lengths| rows\n"
+        "(never |docs|) gives the running count and, as a whole-frame\n"
+        "sum, the total; one aggregate reads all three quantiles.  No\n"
+        "checkpoint, no join.  Integer arithmetic end to end.",
     )
 
     add(
@@ -439,12 +439,12 @@ def main() -> None:
     add(
         "ks_drift (exact two-sample KS length drift, cont. r5)",
         REGISTRY["ks_drift"][0](spark, SF),
-        "The counting-sort ECDF plan: one map-side-partial groupBy on\n"
-        "the bounded length domain (corpus scans once; histogram\n"
-        "checkpointed), cumulative windows over |distinct lengths|\n"
-        "rows, totals and the 1-row max as broadcast cross joins —\n"
-        "the argmax row is found by a broadcast join back, never a\n"
-        "global sort.  Integer cross-multiplied ECDFs end to end.",
+        "The shared counting-sort ECDF (curate.length_ecdf): one\n"
+        "map-side-partial groupBy on the bounded length domain (corpus\n"
+        "scans once), ONE ordered window over |distinct lengths| rows\n"
+        "for the running per-side counts and the totals, then one\n"
+        "aggregate whose max over (gap, -length) is the argmax — no\n"
+        "checkpoint, no join.  Integer cross-multiplied ECDFs end to end.",
     )
 
     add(
@@ -521,8 +521,8 @@ def main() -> None:
     add(
         "heaps_law_fit (vocabulary-growth exponent, cont. r5)",
         REGISTRY["heaps_law_fit"][0](spark, SF),
-        "One k-gram explode (checkpointed) into two partial groupBys\n"
-        "(type first-batch, grams per batch); the cumulative windows\n"
+        "One k-gram explode into the type first-batch groupBy (grams\n"
+        "per batch come map-only from the lengths); the cumulative windows\n"
         "and the regression run over the ~32-row batch relation —\n"
         "the unpartitioned frame is constant-size at any corpus\n"
         "scale.",

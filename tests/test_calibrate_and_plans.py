@@ -357,22 +357,32 @@ def test_zipf_slope_plan_top_k_and_bounded_window(spark, sf001):
     assert not any("Sort " in ln for ln in lines[t:]), lines[t:]
 
 
+def _assert_one_scan_window_over_histogram(plan: str) -> None:
+    """The counting-sort ECDF shape: ONE parquet scan and no
+    checkpointed RDD, and the one ordered window sits above the
+    length-histogram aggregate, so it sees |distinct lengths|, never
+    |docs| (its whole-frame sums are the totals, so nothing reads the
+    histogram twice)."""
+    assert plan.count("FileScan") == 1, plan
+    assert "Scan ExistingRDD" not in plan, plan
+    lines = plan.splitlines()
+    windows = [i for i, ln in enumerate(lines) if "Window [" in ln]
+    hist = [
+        i for i, ln in enumerate(lines) if "HashAggregate(keys=[n_chars" in ln
+    ]
+    assert len(windows) == 1, plan
+    assert "windowspecdefinition(v" in lines[windows[0]], plan
+    assert hist and windows[0] < min(hist), plan
+
+
 def test_exact_quantiles_plan_single_scan(spark, sf001):
-    """exact_quantiles histograms the bounded value domain once — ONE
-    parquet scan (the checkpointed histogram feeds both the cumulative
-    window and the total), the cumulative window runs over the
-    histogram relation (never |docs|), the 3-row quantile-target side
-    broadcasts, and the domain aggregate partially aggregates
-    map-side."""
-    df = REGISTRY["exact_quantiles"][0](spark, sf001)
-    plan = _plan(df)
-    # the parquet scan lives inside the checkpointed histogram subtree
-    # and runs once; BOTH consumers (cumulative + total) read the same
-    # materialized RDD — zero re-scans in the final plan
-    assert "FileScan" not in plan, plan
-    assert plan.count("Scan ExistingRDD") == 2, plan
-    assert plan.count("BroadcastExchange") == 2  # total row + 3 targets
-    assert "partial_sum" in plan  # the total aggregate combines map-side
+    """exact_quantiles histograms the bounded value domain once: one
+    scan, one ordered window over the histogram (running count and
+    total), one aggregate for all three quantiles, and the domain
+    aggregate partially aggregates map-side."""
+    plan = _plan(REGISTRY["exact_quantiles"][0](spark, sf001))
+    _assert_one_scan_window_over_histogram(plan)
+    assert "partial_count" in plan
 
 
 def test_pmi_collocations_plan_shape(spark, sf001):
@@ -407,18 +417,13 @@ def test_winnow_fingerprints_plan_single_exchange(spark, sf001):
 
 
 def test_ks_drift_plan_single_scan(spark, sf001):
-    """ks_drift histograms the bounded length domain once: the final
-    plan reads the checkpointed diff relation twice (max + argmax
-    filter) and never re-touches parquet; the 1-row max broadcasts;
-    the single-partition exchange is fed by a partial aggregate."""
+    """ks_drift histograms the bounded length domain once: one scan,
+    one ordered window over the histogram (running per-side counts
+    and totals), and the argmax is an aggregate over it, not a
+    join back."""
     plan = _plan(REGISTRY["ks_drift"][0](spark, sf001))
-    assert "FileScan" not in plan, plan
-    assert plan.count("Scan ExistingRDD") == 2, plan
-    assert "BroadcastExchange" in plan
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "Exchange SinglePartition" in ln:
-            assert "partial_" in lines[i + 1], lines[i : i + 2]
+    _assert_one_scan_window_over_histogram(plan)
+    assert "Join" not in plan, plan
 
 
 def test_winnow_near_dup_plan_shape(spark, sf001):

@@ -221,3 +221,55 @@ def test_catalog_imports_one_way():
         cwd=ROOT, capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip() == "False"
+
+
+# Catalog entries that compute through production code: entry ->
+# (production module, the functions of it the entry calls).
+TWINS = {
+    "url_trap_audit": ("stages.crawl_audit", ("url_trap_audit_urls",)),
+    "deskew_search": ("stages.calibrate", ("deskew_profile",)),
+    "dedup_canonicalize": ("curate", ("near_dup_canonical",)),
+    "winnow_near_dup": ("functions.textsig", ("winnow_pairs",)),
+    "spell_correct": ("stages.spell", ("build_vocab", "elect_corrections")),
+    "zipf_slope": ("curate", ("zipf_head_fit",)),
+    "heaps_law_fit": ("curate", ("heaps_fit",)),
+    "good_turing_mass": ("curate", ("good_turing",)),
+    "exact_quantiles": ("curate", ("length_ecdf", "ecdf_quantile")),
+    "ks_drift": ("curate", ("length_ecdf",)),
+}
+
+
+def _calls(tree) -> set[str]:
+    return {
+        n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, (ast.Name, ast.Attribute))
+    }
+
+
+def _top_defs(path: Path) -> dict:
+    return {
+        d.name: d
+        for d in ast.parse(path.read_text()).body
+        if isinstance(d, _DEFS)
+    }
+
+
+def test_catalog_twins_call_production():
+    """Each catalog entry that computes through production code calls
+    the production function itself, so its DuckDB oracle checks what a
+    job runs: the function is defined in its production module and not
+    in the catalog, the entry's body calls it, and shipped code outside
+    the catalog (a package module, a job or the bench) calls it too."""
+    catalog = _top_defs(ROOT / PKG / "queries.py")
+    shipped = [ROOT / "bench.py", *(ROOT / "jobs").rglob("*.py")]
+    shipped += [p for p in (ROOT / PKG).rglob("*.py") if p.name != "queries.py"]
+    outside = set().union(*(_calls(ast.parse(p.read_text())) for p in shipped))
+    for entry, (module, fns) in TWINS.items():
+        assert _is_catalog_entry(catalog[entry]), entry
+        defined = _top_defs(ROOT / PKG / (module.replace(".", "/") + ".py"))
+        for fn in fns:
+            assert fn in defined and fn not in catalog, (entry, module, fn)
+            assert fn in _calls(catalog[entry]), (entry, fn)
+            assert fn in outside, (entry, fn)

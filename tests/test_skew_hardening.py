@@ -826,6 +826,23 @@ def test_ks_drift_identical_slices_zero(spark, tmp_path):
     assert (r["n_a"], r["n_b"], r["d_pm"]) == (50, 50, 0)
 
 
+def test_ks_drift_empty_slice_zero(spark, tmp_path):
+    """A snapshot slice with no documents (every doc_id even) gives
+    D = 0 and a zero slice size, not a division by zero: the guard
+    of the corpus-health parity probe, whose KS expression ks_drift
+    shares.  All gaps are 0, so the argmax is the shortest length."""
+    d = tmp_path / "ks_sf"
+    d.mkdir()
+    docs = [
+        {"doc_id": 2 * i, "text": "x" * (20 + i), "lang": "en",
+         "source": "src0", "n_chars": 20 + i}
+        for i in range(10)
+    ]
+    pq.write_table(pa.Table.from_pylist(docs), str(d / "documents.parquet"))
+    rows = REGISTRY["ks_drift"][0](spark, str(d)).collect()
+    assert [tuple(r) for r in rows] == [(10, 0, 0, 20)]
+
+
 def test_burst_detect_planted_spike(spark, tmp_path):
     """A planted 10x single-day spike on one event type must be
     flagged with the exact integer burst score, and the steady type
