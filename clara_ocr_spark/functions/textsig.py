@@ -158,9 +158,9 @@ def _recall_bands(toks: F.Column) -> F.Column:
     its own bucket key.  The RECALL-oriented banding the
     decontamination probes use (catches a pair of shingle similarity
     s with 1-(1-s)⁴ ≈ 94% at s ≈ 0.5, vs ≈ 34% for `_minhash_bands`'
-    precision-oriented 2×2); single source of truth for
-    `fuzzy_decontaminate` and `curate.fuzzy_contaminated_urls` — a
-    banding change in one caller cannot silently diverge the other."""
+    precision-oriented 2×2); called by `curate.fuzzy_contaminated_urls`,
+    which the oracle-checked `fuzzy_decontaminate` entry computes
+    through."""
     return _minhash_sig(_grams(toks), 4)
 
 
@@ -339,8 +339,9 @@ def _gram5_hashes() -> F.Column:
 def _positional_lines_arr(col: str = "ws", line_tokens: int = 8) -> F.Column:
     """Token array column ``col`` → array of positional ``line_tokens``-
     token lines (space-joined). The line unit of the CCNet/RefinedWeb
-    corpus-level line dedup — shared by the `line_dedup_corpus`
-    catalog query and the `curate.drop_frequent_lines` stage."""
+    corpus-level line dedup of the `curate.drop_frequent_lines` stage
+    (which the `line_dedup_corpus` catalog query computes through) and
+    of the `boiler_scope_audit` entry."""
     ws = F.col(col)
     n_lines = F.ceil(F.size(ws) / F.lit(float(line_tokens))).cast("bigint")
     return F.when(

@@ -20,15 +20,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .curate import (
-    KS_D_PM, KS_GAP, ecdf_quantile, encoding_damage_audit, good_turing,
-    heaps_fit, length_ecdf, near_dup_canonical, normalize_text,
+    KS_D_PM, KS_GAP, contaminated_urls, drop_frequent_lines, ecdf_quantile,
+    encoding_damage_audit, fuzzy_contaminated_urls, good_turing, heaps_fit,
+    length_ecdf, near_dup_canonical, normalize_text, text_features,
     zipf_head_fit,
 )
 from .functions.textsig import (
-    FP_MAX_DF, WIN_K, WIN_W, _WIN_R, _dup_2gram_frac, _fanout, _gram5_hashes,
-    _grams, _let, _min_label_components, _minhash_sig, _positional_lines_arr,
-    _recall_bands, _set_jaccard, _tokens, _top_word_frac, bigram_nll,
-    dsir_logweights, spark_hash60, winnow_pairs, winnow_select,
+    FP_MAX_DF, WIN_K, WIN_W, _WIN_R, _fanout, _gram5_hashes, _grams, _let,
+    _min_label_components, _minhash_sig, _positional_lines_arr, _tokens,
+    _top_word_frac, bigram_nll, dsir_logweights, spark_hash60, winnow_pairs,
+    winnow_select,
 )
 
 Entry = Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]
@@ -3214,16 +3215,17 @@ def url_canonical_groups(spark, sf_dir):
 def repetition_filter(spark, sf_dir):
     """Repetition-based quality filtering (the Gopher-rule family):
     most-frequent-token fraction + duplicate-2-gram fraction per doc,
-    flagged above thresholds. All higher-order array expressions —
-    per-doc work, zero shuffle; token/gram arrays are let-bound so
-    Catalyst evaluates them once (see _let)."""
+    flagged above thresholds.  Computes through
+    ``curate.text_features``, the feature stage of the curation gate;
+    this entry only rounds its two fractions and applies the catalog's
+    thresholds.  All higher-order array expressions — per-doc work,
+    zero shuffle."""
     # fanned out of the single-row-group documents scan (one task
     # otherwise does all the tokenize/hash map work)
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
-    toks = _tokens(F.lower(F.col("text")))
-    top_frac = _top_word_frac(toks)
-    dup_frac = _dup_2gram_frac(toks)
-    return d.select(
+    f = text_features(d.select("doc_id", "lang", "text"))
+    top_frac, dup_frac = F.col("top_word_frac"), F.col("dup_2gram_frac")
+    return f.select(
         "doc_id",
         "lang",
         F.round(top_frac, 4).alias("top_word_frac"),
@@ -3666,14 +3668,12 @@ def inverted_index(spark, sf_dir):
       select distinct unnest(grams) as g from t where doc_id % 97 = 0),
     tr as (select * from t where doc_id % 97 <> 0),
     hits as (
-      select x.doc_id, count(*) as n_hit
+      select distinct x.doc_id
       from (select doc_id, unnest(grams) as g from tr) x
-      join ev on x.g = ev.g
-      group by x.doc_id)
+      join ev on x.g = ev.g)
     select tr.doc_id,
            cast(len(tr.grams) as bigint) as n_shingles,
-           cast(coalesce(h.n_hit, 0) as bigint) as n_hit,
-           coalesce(h.n_hit, 0) > 0 as contaminated
+           h.doc_id is not null as contaminated
     from tr left join hits h on tr.doc_id = h.doc_id
     """.replace(
         "{h60_gram}",
@@ -3687,46 +3687,34 @@ def decontaminate(spark, sf_dir):
     reference analogue — the eval set here is the deterministic
     doc_id % 97 slice, so the check is self-contained).
 
-    Scale shape: the eval side is benchmark-sized (thousands of docs
-    even at web scale), so its distinct shingle set BROADCASTS and the
-    train side's exploded shingles probe it map-side — the only
-    shuffle is the per-doc hit-count groupBy, on pre-filtered hits
-    (partial aggregation applies).  Shingles travel as the portable
-    60-bit hash, never the string — the broadcast set and the probe
-    rows carry 8 bytes per shingle instead of ~30 (and the same md5
-    derivation on both engines keeps the oracle exact).  The 5-gram
-    array is built from a let-bound token array (one tokenize per
-    doc, not per gram)."""
-    d = _t(spark, sf_dir, "documents")
-    # fanned by doc_id (single-row-group scan → 1 task for the 5-gram
-    # hashing) and materialized: ev, the probe explode and the final
-    # doc join all read ``t``, which would otherwise re-hash the
-    # corpus per consumer; the checkpointed rows are (doc_id, 8-byte
-    # hashes), a corpus-bounded relation
-    t = (
-        _fanout(spark, d, "doc_id")
-        .select("doc_id", _gram5_hashes().alias("grams"))
-        .localCheckpoint(eager=False)
-    )
-    ev = (
-        t.filter(F.col("doc_id") % 97 == 0)
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-    )
-    tr = t.filter(F.col("doc_id") % 97 != 0)
-    hits = (
-        tr.select("doc_id", F.explode("grams").alias("g"))
-        .join(F.broadcast(ev), "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
+    Computes through ``curate.contaminated_urls``, the probe
+    ``curate_job --decontaminate`` runs: the train side (doc_id as the
+    url) and the eval texts go in, the contaminated ids come out.
+    ``n_shingles`` is the size of the same ``_gram5_hashes`` set.
+    Scale shape (production's): the eval side's distinct shingle
+    hashes BROADCAST and the train side's exploded shingles probe
+    them map-side; only matching (doc, shingle) rows reach the
+    distinct.  Shingles travel as the portable 60-bit hash, never the
+    string (the same md5 derivation on both engines keeps the oracle
+    exact)."""
+    # fanned by doc_id: the single-row-group scan is one task for the
+    # 5-gram hashing otherwise
+    d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
+    tr = d.filter(F.col("doc_id") % 97 != 0)
+    hits = contaminated_urls(
+        tr.select(F.col("doc_id").alias("url"), "text"),
+        d.filter(F.col("doc_id") % 97 == 0).select("text"),
+    ).select(F.col("url").alias("doc_id"), F.lit(True).alias("hit"))
     return (
-        tr.join(hits, "doc_id", "left")
+        tr.select(
+            "doc_id",
+            F.size(_gram5_hashes()).cast("bigint").alias("n_shingles"),
+        )
+        .join(hits, "doc_id", "left")
         .select(
             "doc_id",
-            F.size("grams").cast("bigint").alias("n_shingles"),
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            (F.coalesce("n_hit", F.lit(0)) > 0).alias("contaminated"),
+            "n_shingles",
+            F.coalesce("hit", F.lit(False)).alias("contaminated"),
         )
     )
 
@@ -4375,7 +4363,7 @@ def stream_recrawl_delta(spark, sf_dir):
 @q(
     "line_dedup_corpus",
     f"""
-    with t as (select doc_id, {_TOK_DUCK.format(x='lower(text)')} as ws
+    with t as (select doc_id, {_TOK_DUCK.format(x='text')} as ws
                from documents),
     l as (select t.doc_id, g.i as pos,
                  array_to_string(
@@ -4383,12 +4371,12 @@ def stream_recrawl_delta(spark, sf_dir):
           from t,
                unnest(generate_series(
                  1, cast(ceil(len(t.ws) / 8.0) as bigint))) as g(i)),
-    freq as (select line from l group by line
+    freq as (select lower(line) as key from l group by key
              having count(distinct doc_id) >= 3),
     k as (select l.doc_id, l.pos, l.line from l
-          anti join freq using (line)),
+          anti join freq on lower(l.line) = freq.key),
     agg as (select doc_id, count(*) as n_kept,
-                   md5(string_agg(line, chr(10) order by pos)) as kept_md5
+                   md5(string_agg(line, ' ' order by pos)) as kept_md5
             from k group by doc_id),
     base as (select doc_id,
                     cast(ceil(len(ws) / 8.0) as bigint) as n_lines
@@ -4402,64 +4390,35 @@ def stream_recrawl_delta(spark, sf_dir):
 def line_dedup_corpus(spark, sf_dir):
     """Corpus-level line dedup (CCNet / RefinedWeb boilerplate pass):
     chunk each doc into positional 8-token lines, count per-line
-    DOCUMENT frequency across the whole corpus, drop every copy of
-    any line appearing in >= 3 docs, and reassemble the survivors in
-    reading order (md5 of the rebuilt text is the per-doc identity).
-    Scale shape: the df shuffle and the anti-join both key on a
-    60-bit line hash, never the line text, so the wide exchange
-    carries 8 bytes per line; reassembly is one per-doc aggregate
-    (array_sort over (pos, line) structs — no window).  Reference
-    analogue: the reference drops recurring inter-page furniture the
-    same way its per-book pattern library suppresses repeated
-    headers (pattern.c's shared-pattern machinery)."""
+    DOCUMENT frequency across the whole corpus (on the lowercased
+    line), drop every copy of any line appearing in >= 3 docs, and
+    reassemble the survivors in reading order, original case, joined
+    with single spaces (md5 of the rebuilt text is the per-doc
+    identity).  Computes through ``curate.drop_frequent_lines``, the
+    stage ``curate_job --set line_dedup_min_df=3`` runs, with doc_id
+    as the url; ``n_kept`` is read back from the rebuilt text (every
+    kept line but the doc's last holds exactly 8 tokens, so
+    ceil(tokens / 8) counts the kept lines).  Scale shape
+    (production's): the df shuffle and the anti-join both key on a
+    60-bit line hash, never the line text; reassembly is one per-doc
+    aggregate (array_sort over (pos, line) structs — no window).
+    Reference analogue: the reference drops recurring inter-page
+    furniture the same way its per-book pattern library suppresses
+    repeated headers (pattern.c's shared-pattern machinery)."""
     d = _t(spark, sf_dir, "documents")
+    n_lines = F.ceil(F.size(_tokens(F.col("text"))) / F.lit(8.0)).cast(
+        "bigint"
+    )
     # fanned by doc_id before the tokenize/line-build/explode (the
-    # single-row-group scan is one task); the per-doc reassembly
-    # aggregate and the final doc join then reuse this exchange, so
-    # the exploded line rows (and their text) never shuffle
-    t = _fanout(spark, d, "doc_id").select(
-        "doc_id", _tokens(F.lower(F.col("text"))).alias("ws")
+    # single-row-group scan is one task)
+    docs = _fanout(spark, d, "doc_id").select(
+        F.col("doc_id").alias("url"), "text", n_lines.alias("n_lines")
     )
-    n_lines = F.ceil(F.size("ws") / F.lit(8.0)).cast("bigint")
-    base = t.select("doc_id", n_lines.alias("n_lines"),
-                    _positional_lines_arr().alias("lines"))
-    lines = base.select(
-        "doc_id",
-        F.posexplode("lines").alias("pos0", "line"),
-    ).select(
-        "doc_id",
-        (F.col("pos0") + 1).alias("pos"),
-        "line",
-        spark_hash60(F.col("line")).alias("h"),
-    )
-    boiler = (
-        lines.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= 3)
-        .select("h")
-    )
-    kept = lines.join(boiler, "h", "left_anti")
-    agg = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            )
-        ).alias("kept_md5"),
-    )
-    return (
-        base.select("doc_id", "n_lines")
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_lines",
-            F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
-            F.coalesce("kept_md5", F.md5(F.lit(""))).alias("kept_md5"),
-        )
+    return drop_frequent_lines(docs, 3).select(
+        F.col("url").alias("doc_id"),
+        "n_lines",
+        n_lines.alias("n_kept"),
+        F.md5("text").alias("kept_md5"),
     )
 
 
@@ -6327,24 +6286,24 @@ _ROBOTS_VALUES = ", ".join(
     """,
 )
 def robots_filter(spark, sf_dir):
-    """Robots-exclusion gate (RFC 9309) as a DECLARATIVE plan — the
-    politeness filter every crawl-derived corpus applies before
-    extraction: per-host rule tables, longest-matching prefix wins,
-    allow beats deny on ties, hosts without rules default to allow.
-    The whole precedence logic collapses to ONE integer aggregate:
-    score = 2·len(prefix) + allow, so max(score) picks the longest
-    match with allow as the tie-break and score % 2 IS the verdict —
-    no struct argmax, no UDF, engine-exact.  Scale shape: the rule
-    table is host-keyed and tiny (a full CommonCrawl robots set is
-    ~10⁷ rows ≪ corpus) → BROADCAST prefix theta-join, bounded at
-    ~10 rules per url; one agg to elect, one to report.  Urls are
-    synthesized deterministically from doc_id (the
-    `url_canonical_groups` convention) so the oracle sees identical
-    inputs."""
+    """Robots-exclusion gate (RFC 9309) — the politeness filter every
+    crawl-derived corpus applies before extraction: per-host rule
+    tables, longest-matching prefix wins, allow beats deny on ties,
+    hosts without rules default to allow.  Computes through
+    ``stages/robots.robots_gate``: ``_ROBOTS_RULES`` become a
+    ``parse_robots``-shaped ledger of ``*`` groups (``_robots_ledger``)
+    and each synthesized (host, path) becomes the url
+    ``http://`` || host || path (``_robots_urls``); this entry only
+    counts the verdicts per host.  The precedence logic is ONE
+    integer aggregate: score = 2·len(prefix) + allow, so max(score)
+    picks the longest match with allow as the tie-break and
+    score % 2 IS the verdict.  The DuckDB
+    oracle matches with ``starts_with``; production compiles every
+    pattern to an anchored regex, which for these wildcard-free rules
+    is the same prefix test.  Urls are synthesized deterministically
+    from doc_id (the `url_canonical_groups` convention) so the oracle
+    sees identical inputs."""
     d = _t(spark, sf_dir, "documents")
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "host string, prefix string, allow int"
-    )
     path_kind = (F.col("doc_id") % 4).cast("int")
     u = d.select(
         F.concat(F.lit("h"), (F.col("doc_id") % 5).cast("string")).alias(
@@ -6358,27 +6317,36 @@ def robots_filter(spark, sf_dir):
             F.col("doc_id").cast("string"),
         ).alias("path"),
     )
-    r = F.broadcast(
-        rules.select(
-            F.col("host").alias("r_host"), "prefix", "allow"
-        )
+    from .stages.robots import robots_gate
+
+    return (
+        robots_gate(_robots_urls(u), _robots_ledger(spark, _ROBOTS_RULES))
+        .groupBy("host", "verdict")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_urls"))
     )
-    j = u.join(
-        r,
-        (F.col("host") == F.col("r_host"))
-        & F.col("path").startswith(F.col("prefix")),
-        "left",
+
+
+def _robots_ledger(spark, rules) -> DataFrame:
+    """(host, pattern, allow) literals → the rules ledger
+    ``stages/robots.parse_robots`` emits for a robots.txt per host
+    holding one ``User-agent: *`` group."""
+    from .stages.robots import ROBOTS_SCHEMA
+
+    return spark.createDataFrame(
+        [
+            (f"http://{h}/robots.txt", "*",
+             "allow" if a else "disallow", p, o)
+            for o, (h, p, a) in enumerate(rules)
+        ],
+        ROBOTS_SCHEMA,
     )
-    best = j.groupBy("host", "path").agg(
-        F.max(F.length("prefix") * 2 + F.col("allow")).alias("score")
-    )
-    verdict = (
-        F.when(F.col("score").isNull(), "default_allow")
-        .when(F.col("score") % 2 == 1, "allowed")
-        .otherwise("blocked")
-    )
-    return best.groupBy("host", verdict.alias("verdict")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_urls")
+
+
+def _robots_urls(u: DataFrame) -> DataFrame:
+    """(host, path) → (host, url = ``http://`` || host || path), the
+    frontier shape ``robots_gate`` reads."""
+    return u.select(
+        "host", F.concat(F.lit("http://"), "host", "path").alias("url")
     )
 
 
@@ -7424,12 +7392,13 @@ def url_trap_audit(spark, sf_dir):
 
 
 def _robots_rx(pattern: str) -> str:
-    """RFC 9309 rule pattern → anchored regex, shared by the Spark
-    rule table and the DuckDB oracle VALUES (compiled ONCE per rule at
-    broadcast-build time — never per url).  '*' matches any sequence;
-    '$' is an end anchor only in final position (mid-string '$' is
-    literal, per the RFC); everything else is literal.  The escaped
-    output uses only syntax Java regex and RE2 agree on."""
+    """RFC 9309 rule pattern → anchored regex for the DuckDB oracle
+    VALUES of `robots_wildcards` — the oracle's own compile, beside
+    production's column-algebra ``stages/robots._pattern_rx``.  '*'
+    matches any sequence; '$' is an end anchor only in final position
+    (mid-string '$' is literal, per the RFC); everything else is
+    literal.  The escaped output uses only syntax Java regex and RE2
+    agree on."""
     import re as _re
 
     s = _re.escape(pattern)
@@ -7441,7 +7410,7 @@ def _robots_rx(pattern: str) -> str:
 
 #: (host, pattern, allow) — wildcard politeness rules; w3/w4 have no
 #: rules (default-allow path).  Kept tiny and literal so the VALUES
-#: oracle and the broadcast table are byte-for-byte the same rules.
+#: oracle and the rules ledger are byte-for-byte the same rules.
 _ROBOTS_W_RULES = [
     ("w0", "/private/*", 0),
     ("w0", "/private/*.html$", 1),
@@ -7501,13 +7470,13 @@ def robots_wildcards(spark, sf_dir):
     `/private/*.html$` (score 33) — the specific allow wins, exactly
     the RFC's most-specific-match rule.
 
-    Scale shape: rule patterns compile to regexes ONCE per rule at
-    broadcast-build time (`_robots_rx`, shared verbatim with the
-    DuckDB oracle) — never per url; the probe is a host-keyed
-    broadcast join where each url meets only ITS host's O(10) rules,
-    and the regex predicate runs JVM-side (`rlike` inside the join
-    condition).  Same shuffle budget as the prefix gate: one
-    (host, path) aggregate."""
+    Computes through ``stages/robots.robots_gate``, as
+    `robots_filter` does, over the ``_ROBOTS_W_RULES`` ledger; the
+    query part of a url (``?sid=9``) reaches the match because the
+    gate matches path?query.  Two compilers meet in the oracle
+    check: production's column algebra ``stages/robots._pattern_rx``
+    and the DuckDB VALUES' ``_robots_rx`` (their agreement is pinned
+    in tests/test_robots.py)."""
     # fanned out of the single-row-group documents scan (the
     # regex/synthesis map work otherwise runs on one task)
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
@@ -7530,34 +7499,12 @@ def robots_wildcards(spark, sf_dir):
         .otherwise(F.concat(F.lit("/p/"), did, F.lit(".html")))
         .alias("path"),
     )
-    rules = spark.createDataFrame(
-        [(h, p, _robots_rx(p), a) for h, p, a in _ROBOTS_W_RULES],
-        "host string, pattern string, rx string, allow int",
-    )
-    best = (
-        u.join(
-            F.broadcast(rules),
-            (u["host"] == rules["host"])
-            & F.expr("path rlike rx"),
-            "left",
-        )
-        .select(
-            u["host"].alias("host"),
-            "path",
-            (2 * F.length("pattern") + F.col("allow")).alias("s"),
-        )
-        .groupBy("host", "path")
-        .agg(F.max("s").alias("score"))
-    )
-    v = best.select(
-        "host",
-        F.when(F.col("score").isNull(), "default_allow")
-        .when(F.col("score") % 2 == 1, "allowed")
-        .otherwise("blocked")
-        .alias("verdict"),
-    )
-    return v.groupBy("host", "verdict").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_urls")
+    from .stages.robots import robots_gate
+
+    return (
+        robots_gate(_robots_urls(u), _robots_ledger(spark, _ROBOTS_W_RULES))
+        .groupBy("host", "verdict")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_urls"))
     )
 
 
@@ -8515,8 +8462,9 @@ def _mh_chunk_duck(i: int) -> str:
                using (doc_id)
              join (select eval_id, list_distinct(ws) as wsd from ev0) b
                using (eval_id))
-    select doc_id, eval_id, round(jac, 3) as jaccard
+    select doc_id, round(max(jac), 3) as jaccard
     from veri where jac >= 0.5
+    group by doc_id
     """,
 )
 def fuzzy_decontaminate(spark, sf_dir):
@@ -8532,58 +8480,28 @@ def fuzzy_decontaminate(spark, sf_dir):
     survives byte-identical), so the guaranteed signal is the
     trimmed twin and the banding also surfaces any natural near-dups.
 
-    Banding is 4 bands × 1 row — each of `_minhash_sig`'s four chunks
-    is its own bucket key — NOT `lsh_band_buckets`' 2×2: dedup wants
-    precision at τ ≈ 0.8+ (fewer candidates), decontamination wants
-    RECALL at τ ≈ 0.5, where 4×1 catches a pair with
-    1-(1-s)⁴ ≈ 94% vs ≈ 34% for 2×2 (s = shingle similarity ≈ τ);
-    the extra false candidates die in the exact verify, whose cost is
-    bounded by the broadcast eval side.
-
-    Scale shape: the eval side is benchmark-sized, so its banded
-    signatures BROADCAST — candidate generation is a map-side hash
-    probe (zero shuffle), the Jaccard verify runs on the candidate
-    rows in the same stage (cheap-filter → expensive-verify, the
-    reference's classify two-tier: bmpcmp_map prefilter before
-    bmpcmp_shape, stages/engines.py), and the only Exchange is the
-    final distinct over (doc_id, eval_id, jaccard) id-pairs.  Token
-    arrays never shuffle.  Band keys reuse `_minhash_sig`'s
-    single-fold 4-permutation signature (one md5 per gram)."""
+    Computes through ``curate.fuzzy_contaminated_urls``, the probe
+    ``curate_job --decontaminate … --fuzzy-tau`` runs, at τ = 0.5
+    with doc_id as the url: one row per train doc with its best
+    match's Jaccard (rounded here).  Banding is production's 4 bands
+    × 1 row (recall at τ ≈ 0.5, see ``_recall_bands``); the eval side
+    broadcasts, candidate generation and the exact verify run
+    map-side, and the only Exchange is the per-doc max.  Token arrays
+    never shuffle."""
     # fanned by doc_id: the per-gram md5 banding of the train side is
     # the dominant map work and ran on the one-task scan
     d = _fanout(spark, _t(spark, sf_dir, "documents"), "doc_id")
-    t = d.select("doc_id", _tokens(F.lower(F.col("text"))).alias("ws"))
-    ev = t.filter(F.col("doc_id") % 37 == 0).select(
-        F.col("doc_id").alias("eval_id"),
-        F.slice(
-            "ws", F.lit(1), F.greatest(F.size("ws") - 1, F.lit(1))
-        ).alias("ws"),
+    ws = _tokens(F.col("text"))
+    ev = d.filter(F.col("doc_id") % 37 == 0).select(
+        F.array_join(
+            F.slice(ws, F.lit(1), F.greatest(F.size(ws) - 1, F.lit(1))),
+            " ",
+        ).alias("text")
     )
-
-    def banded(df: DataFrame, id_col: str) -> DataFrame:
-        # 4×1 recall banding (_recall_bands is the single source of
-        # truth, shared with curate.fuzzy_contaminated_urls, the
-        # production twin)
-        return df.select(
-            id_col,
-            F.array_distinct("ws").alias("wsd"),
-            F.posexplode(_recall_bands(F.col("ws"))).alias(
-                "band", "bucket"
-            ),
-        )
-
-    cand = banded(t, "doc_id").join(
-        F.broadcast(banded(ev, "eval_id").withColumnRenamed("wsd", "ev_wsd")),
-        ["band", "bucket"],
-    )
-    jac = _set_jaccard(F.col("wsd"), F.col("ev_wsd"))
-    return (
-        cand.select("doc_id", "eval_id", jac.alias("_j"))
-        .filter(F.col("_j") >= 0.5)
-        .select(
-            "doc_id", "eval_id", F.round("_j", 3).alias("jaccard")
-        )
-        .dropDuplicates(["doc_id", "eval_id", "jaccard"])
+    return fuzzy_contaminated_urls(
+        d.select(F.col("doc_id").alias("url"), "text"), ev, 0.5
+    ).select(
+        F.col("url").alias("doc_id"), F.round("jaccard", 3).alias("jaccard")
     )
 
 
@@ -9130,7 +9048,9 @@ def winnow_fingerprints(spark, sf_dir):
           from s cross join tot),
     m as (select max(diff) as maxdiff from d)
     select na as n_a, nb as n_b,
-           cast((1000 * maxdiff) // (na * nb) as bigint) as d_pm,
+           cast(case when na > 0 and nb > 0
+                     then (1000 * maxdiff) // (na * nb) else 0 end
+                as bigint) as d_pm,
            cast(min(v) as bigint) as v_at_max
     from d cross join m
     where diff = maxdiff
@@ -9162,7 +9082,7 @@ def ks_drift(spark, sf_dir):
     cross-multiplied |cum_a*nb - cum_b*na| avoids float ECDFs
     entirely (exact below ~3*10^9 docs per slice; past that, quantize
     the ECDFs per-mille first — same plan shape).  An empty slice
-    reports d_pm = 0 (DuckDB's integer division gives NULL there)."""
+    reports d_pm = 0 in both engines."""
     d = _t(spark, sf_dir, "documents")
     st = length_ecdf(d, F.col("n_chars"), F.col("doc_id") % 2)
     # max over (gap, -length): the largest gap at its smallest length

@@ -177,11 +177,11 @@ def crawl_delays(
 
 def _pattern_rx(pattern):
     """RFC 9309 rule pattern → anchored Java regex, as COLUMN algebra
-    (the catalog's ``_robots_rx`` compiles per rule at broadcast-build
-    time, which assumes the rule set fits the driver; a web-scale
-    rules ledger is |hosts|·O(10) rows, so the compile must ship with
-    the rows).  Same grammar: escape regex metachars, ``*`` → ``.*``,
-    trailing ``$`` stays an anchor, anchor the head."""
+    (a web-scale rules ledger is |hosts|·O(10) rows, so the compile
+    must ship with the rows, not run on the driver as the catalog
+    oracle's ``_robots_rx`` does).  Same grammar: escape regex
+    metachars, ``*`` → ``.*``, trailing ``$`` stays an anchor, anchor
+    the head."""
     esc = F.regexp_replace(
         pattern, r"([\\^$.|?*+()\[\]{}])", r"\\$1"
     )
@@ -197,11 +197,12 @@ def robots_gate(
 ) -> DataFrame:
     """urls(url, host, …) × parsed rules ledger → + ``verdict`` ∈
     {allowed, blocked, default_allow}: the RFC 9309 gate over REAL
-    parsed rules — the production twin of the oracle-verified
-    `robots_filter`/`robots_wildcards` queries, same one-integer
-    election (score = 2·len(pattern) + allow; max elects: longest
-    pattern is most specific, tie goes to allow; no match = default
-    allow).
+    parsed rules, one-integer election (score = 2·len(pattern) +
+    allow; max elects: longest pattern is most specific, tie goes to
+    allow; no match = default allow).  The oracle-verified catalog
+    entries `robots_filter` and `robots_wildcards` compute through
+    this function over a synthesized ledger, so their DuckDB check
+    covers it.
 
     Group election per RFC: a host with any exact-agent GROUP uses
     that group — elected over ALL the group's rows (including

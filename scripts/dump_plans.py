@@ -114,9 +114,12 @@ def main() -> None:
     add(
         "decontaminate (eval-overlap probe)",
         REGISTRY["decontaminate"][0](spark, SF),
-        "The eval shingle set (hashed, distinct) broadcasts; the corpus\n"
-        "probe is a BroadcastHashJoin map-side; the only shuffles are the\n"
-        "two small-side preparations (eval distinct, per-doc hit count) —\n"
+        "Computes through curate.contaminated_urls.  The eval shingle set\n"
+        "(hashed, distinct) broadcasts; the corpus probe is a\n"
+        "BroadcastHashJoin map-side and the per-doc distinct reuses the\n"
+        "doc_id fan-out partitioning (no Exchange of its own); the hit ids\n"
+        "broadcast back onto the train side's n_shingles projection.  The\n"
+        "train side is read and 5-gram-hashed twice (n_shingles, probe);\n"
         "the corpus-sized exploded side never shuffles.",
     )
     add(
@@ -162,10 +165,14 @@ def main() -> None:
     add(
         "robots_filter (RFC 9309 politeness gate)",
         REGISTRY["robots_filter"][0](spark, SF),
-        "The host-keyed rule table BROADCASTS (prefix theta-join bounded\n"
-        "at ~10 rules/url); precedence is one integer max() aggregate —\n"
-        "longest prefix wins, allow breaks ties via score parity — no\n"
-        "struct argmax, no UDF.",
+        "Computes through stages/robots.robots_gate over a literal rules\n"
+        "ledger.  The static plan sort-merges twice (the RFC group\n"
+        "election, then the host-keyed url x rule join with the anchored\n"
+        "rlike inside the condition): a createDataFrame ledger carries no\n"
+        "size estimate, and AQE broadcasts it once its shuffle stats are\n"
+        "known.  Precedence is one integer max() per url — longest\n"
+        "pattern wins, allow breaks ties via score parity — then the\n"
+        "(host, verdict) count.",
     )
     add(
         "frontier_waves (per-host politeness schedule)",
@@ -337,11 +344,12 @@ def main() -> None:
     add(
         "fuzzy_decontaminate (MinHash-LSH benchmark probe, final r5)",
         REGISTRY["fuzzy_decontaminate"][0](spark, SF),
-        "The banded eval side BROADCASTS (benchmark-sized); candidate\n"
-        "generation is a map-side BroadcastHashJoin probe and the\n"
-        "token-set Jaccard verify runs in the same stage — the ONLY\n"
-        "Exchange is the final id-pair distinct.  Token arrays never\n"
-        "shuffle.",
+        "Computes through curate.fuzzy_contaminated_urls.  The banded\n"
+        "eval side BROADCASTS (benchmark-sized); candidate generation is\n"
+        "a map-side BroadcastHashJoin probe and the token-set Jaccard\n"
+        "verify runs in the same stage; the per-doc best-match max reuses\n"
+        "the doc_id fan-out partitioning, so the only Exchanges are the\n"
+        "two fan-outs.  Token arrays never shuffle.",
     )
 
     add(

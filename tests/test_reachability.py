@@ -236,6 +236,28 @@ TWINS = {
     "good_turing_mass": ("curate", ("good_turing",)),
     "exact_quantiles": ("curate", ("length_ecdf", "ecdf_quantile")),
     "ks_drift": ("curate", ("length_ecdf",)),
+    "repetition_filter": ("curate", ("text_features",)),
+    "decontaminate": ("curate", ("contaminated_urls",)),
+    "fuzzy_decontaminate": ("curate", ("fuzzy_contaminated_urls",)),
+    "line_dedup_corpus": ("curate", ("drop_frequent_lines",)),
+    "robots_filter": ("stages.robots", ("robots_gate",)),
+    "robots_wildcards": ("stages.robots", ("robots_gate",)),
+    "structural_acts": ("stages.feedback", ("apply_structural_acts",)),
+    "pattern_acts": ("stages.patterns", ("apply_pattern_acts",)),
+    "anchor_election": ("stages.links", ("top_anchor_text",)),
+    "extraction_eval": ("stages.consist", ("token_prf",)),
+    "publish_date_extract": ("stages.metadata", ("publish_dates",)),
+    "title_suffix_audit": ("stages.metadata", ("title_suffix_ledger",)),
+    "soft404_ledger": ("stages.crawl_audit", ("soft404_audit",)),
+    "registered_domain": (
+        "stages.domains", ("registered_domain_map", "rules_df")
+    ),
+    "mojibake_audit": ("curate", ("encoding_damage_audit",)),
+    "recrawl_staleness": ("stages.crawl_audit", ("sitemap_staleness_urls",)),
+    "paced_frontier": ("stages.robots", ("crawl_delays", "paced_schedule")),
+    "nfc_normalize_audit": ("curate", ("normalize_text",)),
+    "reciprocal_link_audit": ("stages.links", ("reciprocity_ledger",)),
+    "warc_revisit_dedup": ("sources.formats", ("warc_dedup_classify",)),
 }
 
 

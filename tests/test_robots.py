@@ -191,6 +191,69 @@ def test_robots_gate_matches_query_string(spark):
     assert got["https://q.example/a"] == "default_allow"
 
 
+#: (pattern, path, matches): the RFC 9309 grammar — ``*``, a trailing
+#: ``$`` anchor, a literal mid-string ``$`` — and every regex
+#: metacharacter, each of which must match only itself
+RX_CASES = [
+    ("/a*b", "/axxb/c", True),
+    ("/a*b", "/ab", True),
+    ("/a*b", "/xab", False),
+    ("/*.php$", "/dir/x.php", True),
+    ("/*.php$", "/dir/x.php5", False),
+    ("/a.html$", "/a.html", True),
+    ("/a.html$", "/aXhtml", False),
+    ("/a$b", "/a$bc", True),
+    ("/a$b", "/a", False),
+    ("/x+y", "/x+y", True),
+    ("/x+y", "/xxy", False),
+    ("/(a)", "/(a)", True),
+    ("/(a)", "/a", False),
+    ("/[ab]", "/[ab]", True),
+    ("/[ab]", "/a", False),
+    ("/q?id=", "/q?id=1", True),
+    ("/q?id=", "/qid=", False),
+    ("/a|b", "/a|b", True),
+    ("/a|b", "/b", False),
+    ("/{2}", "/{2}", True),
+    ("/{2}", "//", False),
+    ("/^x", "/^x", True),
+    ("/^x", "/x", False),
+    ("/back\\slash", "/back\\slash", True),
+    ("/back\\slash", "/backslash", False),
+    ("/a\\*", "/a\\zz", True),
+    ("/a\\$", "/a\\", True),
+    ("/a\\$", "/a\\x", False),
+]
+
+
+def test_rule_compilers_agree(spark):
+    """The catalog's `robots_wildcards` oracle compiles its rules with
+    ``queries._robots_rx`` (Python, into DuckDB VALUES) while the
+    entry computes through production's column compile
+    ``_pattern_rx``: both must match exactly the same paths under
+    Spark's ``rlike``, and the expected ones."""
+    from clara_ocr_spark.queries import _robots_rx
+    from clara_ocr_spark.stages.robots import _pattern_rx
+
+    df = spark.createDataFrame(
+        [(p, _robots_rx(p), path) for p, path, _ in RX_CASES],
+        "pattern string, oracle_rx string, path string",
+    ).select(
+        "pattern",
+        "path",
+        "oracle_rx",
+        _pattern_rx(F.col("pattern")).alias("prod_rx"),
+    ).select(
+        "pattern",
+        "path",
+        F.expr("path rlike oracle_rx").alias("oracle"),
+        F.expr("path rlike prod_rx").alias("prod"),
+    )
+    got = {(r["pattern"], r["path"]): (r["oracle"], r["prod"])
+           for r in df.collect()}
+    assert got == {(p, path): (m, m) for p, path, m in RX_CASES}
+
+
 def test_parse_never_crashes_fuzz():
     """Adversarial payload fuzz: the parser is total — any byte soup
     yields a (possibly empty) rule list with the contract shape."""

@@ -826,21 +826,31 @@ def test_ks_drift_identical_slices_zero(spark, tmp_path):
     assert (r["n_a"], r["n_b"], r["d_pm"]) == (50, 50, 0)
 
 
-def test_ks_drift_empty_slice_zero(spark, tmp_path):
+def test_ks_drift_empty_slice_zero(spark, sf001, tmp_path):
     """A snapshot slice with no documents (every doc_id even) gives
-    D = 0 and a zero slice size, not a division by zero: the guard
-    of the corpus-health parity probe, whose KS expression ks_drift
-    shares.  All gaps are 0, so the argmax is the shortest length."""
+    D = 0 and a zero slice size, not a division by zero, in BOTH
+    engines: the guard of the corpus-health parity probe, whose KS
+    expression ks_drift shares, and the oracle SQL's own guard.  All
+    gaps are 0, so the argmax is the shortest length."""
     d = tmp_path / "ks_sf"
     d.mkdir()
+    for t in TABLES:
+        if t != "documents":
+            (d / f"{t}.parquet").symlink_to(f"{sf001}/{t}.parquet")
     docs = [
         {"doc_id": 2 * i, "text": "x" * (20 + i), "lang": "en",
          "source": "src0", "n_chars": 20 + i}
         for i in range(10)
     ]
     pq.write_table(pa.Table.from_pylist(docs), str(d / "documents.parquet"))
-    rows = REGISTRY["ks_drift"][0](spark, str(d)).collect()
+    fn, sql = REGISTRY["ks_drift"]
+    rows = fn(spark, str(d)).collect()
     assert [tuple(r) for r in rows] == [(10, 0, 0, 20)]
+    con = duck_connect(str(d))
+    try:
+        assert con.sql(sql).fetchall() == [(10, 0, 0, 20)]
+    finally:
+        con.close()
 
 
 def test_burst_detect_planted_spike(spark, tmp_path):
