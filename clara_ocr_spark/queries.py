@@ -6329,17 +6329,22 @@ def robots_filter(spark, sf_dir):
 def _robots_ledger(spark, rules) -> DataFrame:
     """(host, pattern, allow) literals → the rules ledger
     ``stages/robots.parse_robots`` emits for a robots.txt per host
-    holding one ``User-agent: *`` group."""
-    from .stages.robots import ROBOTS_SCHEMA
-
-    return spark.createDataFrame(
-        [
-            (f"http://{h}/robots.txt", "*",
-             "allow" if a else "disallow", p, o)
-            for o, (h, p, a) in enumerate(rules)
-        ],
-        ROBOTS_SCHEMA,
-    )
+    holding one ``User-agent: *`` group (``ROBOTS_SCHEMA``'s columns).
+    Inlined literals, not ``createDataFrame``: the planner then knows
+    the ledger is tiny and broadcasts it, as it would a small parquet
+    ledger (a ``createDataFrame`` relation has no size estimate, so
+    the url side was shuffled on its handful of host keys and
+    sort-merged)."""
+    return spark.range(1).select(F.inline(F.array(*[
+        F.struct(
+            F.lit(f"http://{h}/robots.txt").alias("robots_url"),
+            F.lit("*").alias("agent"),
+            F.lit("allow" if a else "disallow").alias("kind"),
+            F.lit(p).alias("value"),
+            F.lit(o).alias("ord"),
+        )
+        for o, (h, p, a) in enumerate(rules)
+    ])))
 
 
 def _robots_urls(u: DataFrame) -> DataFrame:

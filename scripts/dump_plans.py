@@ -165,12 +165,12 @@ def main() -> None:
     add(
         "robots_filter (RFC 9309 politeness gate)",
         REGISTRY["robots_filter"][0](spark, SF),
-        "Computes through stages/robots.robots_gate over a literal rules\n"
-        "ledger.  The static plan sort-merges twice (the RFC group\n"
-        "election, then the host-keyed url x rule join with the anchored\n"
-        "rlike inside the condition): a createDataFrame ledger carries no\n"
-        "size estimate, and AQE broadcasts it once its shuffle stats are\n"
-        "known.  Precedence is one integer max() per url — longest\n"
+        "Computes through stages/robots.robots_gate over a rules ledger\n"
+        "inlined from literals, so the planner sizes it as tiny: both\n"
+        "joins (the RFC group election, then the host-keyed url x rule\n"
+        "join with the anchored rlike inside the condition) BROADCAST the\n"
+        "ledger side, and the url side first shuffles for the per-url\n"
+        "max.  Precedence is one integer max() per url — longest\n"
         "pattern wins, allow breaks ties via score parity — then the\n"
         "(host, verdict) count.",
     )
